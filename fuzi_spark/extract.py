@@ -250,12 +250,6 @@ def sniff_doc_type(markup: str) -> str:
     return "xml"
 
 
-# fused event-driven HTML path (fastextract.py): same tokenizer, no DOM —
-# bit-identical output enforced by the randomized differential in
-# tests/test_fastextract.py; flip False to force the DOM reference path
-_USE_FAST_HTML = True
-
-
 def extract_spans(markup: str, doc_type: Optional[str] = None) -> tuple[list[dict], int]:
     """Parse + strip + segment one document. Returns (spans, parse_error).
 
@@ -263,7 +257,10 @@ def extract_spans(markup: str, doc_type: Optional[str] = None) -> tuple[list[dic
     flag, never an exception (the 10^12-row job must not die on one doc)."""
     if doc_type not in ("html", "xml"):
         doc_type = sniff_doc_type(markup)
-    if doc_type == "html" and _USE_FAST_HTML:
+    if doc_type == "html":
+        # fused event-driven path (fastextract.py): same tokenizer, no
+        # DOM — bit-identical output enforced by the randomized
+        # differential in tests/test_fastextract.py
         from .fastextract import extract_spans_html_fast
 
         try:

@@ -25,9 +25,7 @@ from __future__ import annotations
 import io
 import tarfile
 import zipfile
-from typing import Iterator, List, Optional, Tuple
-
-import pandas as pd
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,6 +36,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..udfs import row_mapper
 
 ARCHIVE_SCHEMA = StructType(
     [
@@ -139,34 +139,14 @@ def parse_archive_df(
     spread across tasks. Unparseable blobs emit a single archive_ok=0
     stub row."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in ARCHIVE_SCHEMA.fields}
-
-            def emit(did, fmt, ok, seq, name, size, is_text, text):
-                rows["doc_id"].append(did)
-                rows["archive_format"].append(fmt)
-                rows["archive_ok"].append(ok)
-                rows["seq"].append(seq)
-                rows["member_name"].append(name)
-                rows["member_size"].append(size)
-                rows["is_text"].append(is_text)
-                rows["text"].append(text)
-
-            for i in range(len(pdf)):
-                did = pdf[id_col].iloc[i]
-                fmt, members = parse_archive(
-                    pdf[blob_col].iloc[i], text_cap
-                )
-                if members is None:
-                    emit(did, None, 0, None, None, None, None, None)
-                    continue
-                for seq, name, size, is_text, text in members:
-                    emit(did, fmt, 1, seq, name, size, is_text, text)
-            yield pd.DataFrame(rows)
+    def rows(did, blob):
+        fmt, members = parse_archive(blob, text_cap)
+        if members is None:
+            return [(did, None, 0, None, None, None, None, None)]
+        return [(did, fmt, 1, *m) for m in members]
 
     return docs.select(
         F.col(id_col).alias("doc_id"), F.col(blob_col)
     ).repartition(
         docs.sparkSession.sparkContext.defaultParallelism, "doc_id"
-    ).mapInPandas(gen, schema=ARCHIVE_SCHEMA)
+    ).mapInPandas(row_mapper(rows, ARCHIVE_SCHEMA), schema=ARCHIVE_SCHEMA)

@@ -48,10 +48,9 @@ surface — pipeline-brief scope (multimodal curation at 100 TB).
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -63,6 +62,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..udfs import row_mapper
 from .cache import scoped_persist
 from .multimodal import parse_audio
 
@@ -126,31 +126,16 @@ def audio_fingerprint_df(
     parallel; non-WAV/FLAC bytes yield decode_ok=0 with NULL analysis
     columns — never a fake fingerprint."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in FINGERPRINT_SCHEMA.fields}
-            for i in range(len(pdf)):
-                rows["media_ref"].append(pdf["media_ref"].iloc[i])
-                fp = audio_landmarks(
-                    pdf["content"].iloc[i], n_fft=n_fft, fanout=fanout
-                )
-                if fp is None:
-                    for k in ("sample_rate", "n_windows", "n_hashes",
-                              "hashes"):
-                        rows[k].append(None)
-                    rows["decode_ok"].append(0)
-                else:
-                    rate, nw, hashes = fp
-                    rows["sample_rate"].append(rate)
-                    rows["n_windows"].append(nw)
-                    rows["n_hashes"].append(len(hashes))
-                    rows["hashes"].append(hashes)
-                    rows["decode_ok"].append(1)
-            yield pd.DataFrame(rows)
+    def rows(ref, content):
+        fp = audio_landmarks(content, n_fft=n_fft, fanout=fanout)
+        if fp is None:
+            return [(ref, None, None, None, None, 0)]
+        rate, nw, hashes = fp
+        return [(ref, rate, nw, len(hashes), hashes, 1)]
 
     return media.select("media_ref", "content").repartition(
         media.sparkSession.sparkContext.defaultParallelism, "media_ref"
-    ).mapInPandas(gen, schema=FINGERPRINT_SCHEMA)
+    ).mapInPandas(row_mapper(rows, FINGERPRINT_SCHEMA), schema=FINGERPRINT_SCHEMA)
 
 
 def audio_dedup_groups(fp: DataFrame) -> DataFrame:

@@ -44,12 +44,13 @@ ops/tables.extract_tables_df). Narrow map, no shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 
-from ..extract import _media_ref, sniff_doc_type
+from ..extract import _media_ref
 from ..htmlparser import parse_html
+from ..udfs import row_mapper
 
 
 def _norm(s: Optional[str]) -> str:
@@ -76,8 +77,6 @@ def extract_captions(
     """All (img_idx, media_ref, caption, caption_source) rows of one
     document, in document order. Never raises; unparseable markup
     yields []."""
-    if doc_type not in ("html", "xml"):
-        doc_type = sniff_doc_type(markup)
     try:
         doc = parse_html(markup, assign_order=False)
     except Exception:
@@ -122,8 +121,6 @@ def extract_outline(
     """All (seq, level, heading, path) rows of one document, in
     document order. path = ' > '-joined ancestor-heading texts (may be
     ''). Never raises; unparseable markup yields []."""
-    if doc_type not in ("html", "xml"):
-        doc_type = sniff_doc_type(markup)
     try:
         doc = parse_html(markup, assign_order=False)
     except Exception:
@@ -168,33 +165,17 @@ def extract_captions_df(
 ) -> DataFrame:
     """Explode documents into image-caption rows: (doc_id, img_idx,
     media_ref, caption, caption_source)."""
-    import pandas as pd
+    def rows(did, m):
+        if m is None:
+            return []
+        return [
+            (int(did), r["img_idx"], r["media_ref"], r["caption"], r["caption_source"])
+            for r in extract_captions(m)
+        ]
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_captions(m):
-                    rows.append(
-                        (
-                            int(did),
-                            r["img_idx"],
-                            r["media_ref"],
-                            r["caption"],
-                            r["caption_source"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "img_idx", "media_ref",
-                    "caption", "caption_source",
-                ],
-            )
-
-    return docs.mapInPandas(gen, schema=CAPTION_SCHEMA)
+    return docs.select(id_col, markup_col).mapInPandas(
+        row_mapper(rows, CAPTION_SCHEMA), schema=CAPTION_SCHEMA
+    )
 
 
 def extract_outline_df(
@@ -202,27 +183,14 @@ def extract_outline_df(
 ) -> DataFrame:
     """Explode documents into heading-outline rows: (doc_id, seq,
     level, heading, path)."""
-    import pandas as pd
+    def rows(did, m):
+        if m is None:
+            return []
+        return [
+            (int(did), r["seq"], r["level"], r["heading"], r["path"])
+            for r in extract_outline(m)
+        ]
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_outline(m):
-                    rows.append(
-                        (
-                            int(did),
-                            r["seq"],
-                            r["level"],
-                            r["heading"],
-                            r["path"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "seq", "level", "heading", "path"],
-            )
-
-    return docs.mapInPandas(gen, schema=OUTLINE_SCHEMA)
+    return docs.select(id_col, markup_col).mapInPandas(
+        row_mapper(rows, OUTLINE_SCHEMA), schema=OUTLINE_SCHEMA
+    )

@@ -29,11 +29,12 @@ at sub-document granularity.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
 
 from pyspark.sql import DataFrame
+
+from ..udfs import row_mapper
 
 _W = 16  # rolling window (bytes)
 
@@ -135,24 +136,14 @@ def cdc_chunks_df(
     max_size: int = 1024,
 ) -> DataFrame:
     """Explode blobs into CDC chunk rows (Arrow-batched)."""
-    import pandas as pd
+    def rows(did, blob):
+        if blob is None:
+            return []
+        return [
+            (int(did), *chunk)
+            for chunk in cdc_chunk_blob(bytes(blob), avg_size, min_size, max_size)
+        ]
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf[id_col], pdf[bin_col]):
-                if blob is None:
-                    continue
-                for idx, off, ln, h in cdc_chunk_blob(
-                    bytes(blob), avg_size, min_size, max_size
-                ):
-                    rows.append((int(did), idx, off, ln, h))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "chunk_idx", "offset", "length",
-                    "chunk_hash",
-                ],
-            )
-
-    return docs.mapInPandas(gen, schema=CDC_SCHEMA)
+    return docs.select(id_col, bin_col).mapInPandas(
+        row_mapper(rows, CDC_SCHEMA), schema=CDC_SCHEMA
+    )

@@ -28,11 +28,12 @@ engine.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 
 from ..errors import XMLError
+from ..udfs import row_mapper
 from ..xmlparser import parse_xml
 
 
@@ -105,30 +106,20 @@ def parse_sitemap_df(
     """Explode sitemap blobs into entry rows: (site_id, kind, seq, loc,
     lastmod, changefreq, priority) — seq is the 0-based document-order
     index, the crawl-frontier tiebreaker."""
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, xml in zip(pdf[id_col], pdf[xml_col]):
-                if xml is None:
-                    continue
-                for seq, e in enumerate(parse_sitemap(xml)):
-                    rows.append(
-                        (
-                            int(sid), e["kind"], seq, e["loc"],
-                            e["lastmod"], e["changefreq"], e["priority"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "site_id", "kind", "seq", "loc",
-                    "lastmod", "changefreq", "priority",
-                ],
+    def rows(sid, xml):
+        if xml is None:
+            return []
+        return [
+            (
+                int(sid), e["kind"], seq, e["loc"],
+                e["lastmod"], e["changefreq"], e["priority"],
             )
+            for seq, e in enumerate(parse_sitemap(xml))
+        ]
 
-    return df.mapInPandas(gen, schema=SITEMAP_SCHEMA)
+    return df.select(id_col, xml_col).mapInPandas(
+        row_mapper(rows, SITEMAP_SCHEMA), schema=SITEMAP_SCHEMA
+    )
 
 
 def _first_alternate_link(entry) -> Optional[str]:
@@ -211,27 +202,17 @@ def parse_feed_df(
 ) -> DataFrame:
     """Explode feed blobs into entry rows: (feed_id, feed_type,
     feed_title, entry_idx, title, link, updated, author)."""
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fid, xml in zip(pdf[id_col], pdf[xml_col]):
-                if xml is None:
-                    continue
-                for idx, e in enumerate(parse_feed(xml)):
-                    rows.append(
-                        (
-                            int(fid), e["feed_type"], e["feed_title"], idx,
-                            e["title"], e["link"], e["updated"], e["author"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "feed_id", "feed_type", "feed_title", "entry_idx",
-                    "title", "link", "updated", "author",
-                ],
+    def rows(fid, xml):
+        if xml is None:
+            return []
+        return [
+            (
+                int(fid), e["feed_type"], e["feed_title"], idx,
+                e["title"], e["link"], e["updated"], e["author"],
             )
+            for idx, e in enumerate(parse_feed(xml))
+        ]
 
-    return df.mapInPandas(gen, schema=FEED_SCHEMA)
+    return df.select(id_col, xml_col).mapInPandas(
+        row_mapper(rows, FEED_SCHEMA), schema=FEED_SCHEMA
+    )

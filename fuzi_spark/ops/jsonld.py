@@ -35,13 +35,14 @@ same shape as tables.extract_tables_df). Narrow map, no shuffle.
 from __future__ import annotations
 
 import json
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 
 from ..extract import sniff_doc_type
 from ..htmlparser import parse_html
 from ..query import css
+from ..udfs import row_mapper
 
 
 def _first(v):
@@ -124,28 +125,17 @@ def extract_json_ld_df(
     docs: DataFrame, markup_col: str = "markup", id_col: str = "doc_id"
 ) -> DataFrame:
     """Explode documents into JSON-LD item rows."""
-    import pandas as pd
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_json_ld(m):
-                    rows.append(
-                        (
-                            int(did), r["script_idx"], r["item_idx"],
-                            r["ld_type"], r["name"], r["date_published"],
-                            r["author"], r["url"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "script_idx", "item_idx", "ld_type",
-                    "name", "date_published", "author", "url",
-                ],
+    def rows(did, m):
+        if m is None:
+            return []
+        return [
+            (
+                int(did), r["script_idx"], r["item_idx"], r["ld_type"],
+                r["name"], r["date_published"], r["author"], r["url"],
             )
+            for r in extract_json_ld(m)
+        ]
 
-    return docs.mapInPandas(gen, schema=JSONLD_SCHEMA)
+    return docs.select(id_col, markup_col).mapInPandas(
+        row_mapper(rows, JSONLD_SCHEMA), schema=JSONLD_SCHEMA
+    )

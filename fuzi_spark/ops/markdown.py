@@ -41,11 +41,8 @@ from __future__ import annotations
 import re
 from typing import Optional
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..dom import ELEMENT_NODE, TEXT_NODE, Document, Element
 from ..errors import XMLError
@@ -58,6 +55,7 @@ from ..extract import (
     strip_boilerplate,
 )
 from ..htmlparser import parse_html
+from ..udfs import doc_column
 
 _EMPH = {"strong": "**", "b": "**", "em": "*", "i": "*"}
 # hard-skipped by the RENDERER regardless of `strip`: their text is
@@ -356,17 +354,12 @@ def markdown_udf(
     """Column function: markup -> struct(markdown, parse_error).
     One Arrow-batched pass; the per-doc Python IS the renderer."""
 
-    @pandas_udf(_MD_SCHEMA)
-    def _udf(markup: pd.Series) -> pd.DataFrame:
-        out = []
-        for m in markup:
-            if m is None:
-                out.append(("", 1))
-            else:
-                out.append(to_markdown(m, doc_type=doc_type, strip=strip))
-        return pd.DataFrame(out, columns=["markdown", "parse_error"])
+    def _md(markup):
+        if markup is None:
+            return ("", 1)
+        return to_markdown(markup, doc_type=doc_type, strip=strip)
 
-    return _udf
+    return doc_column(_MD_SCHEMA, _md)
 
 
 def to_markdown_df(

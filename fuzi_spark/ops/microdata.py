@@ -22,12 +22,11 @@ Malformed markup yields fewer/zero rows, never a task failure.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 
 from ..htmlparser import parse_html
 from ..query import css
+from ..udfs import row_mapper
 
 # microdata value extraction per WHATWG §5.2.4: which attribute carries
 # the property value, by tag
@@ -118,30 +117,20 @@ def extract_microdata_df(
     docs: DataFrame, markup_col: str = "markup", id_col: str = "doc_id"
 ) -> DataFrame:
     """Explode documents into microdata property rows."""
-    import pandas as pd
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_microdata(m):
-                    rows.append(
-                        (
-                            int(did), r["scope_idx"], r["item_type"],
-                            r["prop"], r["value"], r["prop_idx"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "scope_idx", "item_type", "prop",
-                    "value", "prop_idx",
-                ],
+    def rows(did, m):
+        if m is None:
+            return []
+        return [
+            (
+                int(did), r["scope_idx"], r["item_type"],
+                r["prop"], r["value"], r["prop_idx"],
             )
+            for r in extract_microdata(m)
+        ]
 
-    return docs.mapInPandas(gen, schema=MICRODATA_SCHEMA)
+    return docs.select(id_col, markup_col).mapInPandas(
+        row_mapper(rows, MICRODATA_SCHEMA), schema=MICRODATA_SCHEMA
+    )
 
 
 # --------------------------------------------------------- code blocks
@@ -217,27 +206,17 @@ def extract_code_blocks_df(
     docs: DataFrame, markup_col: str = "markup", id_col: str = "doc_id"
 ) -> DataFrame:
     """Explode documents into code-block rows."""
-    import pandas as pd
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_code_blocks(m):
-                    rows.append(
-                        (
-                            int(did), r["block_idx"], r["language"],
-                            r["code"], r["n_lines"], r["n_chars"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "block_idx", "language", "code",
-                    "n_lines", "n_chars",
-                ],
+    def rows(did, m):
+        if m is None:
+            return []
+        return [
+            (
+                int(did), r["block_idx"], r["language"],
+                r["code"], r["n_lines"], r["n_chars"],
             )
+            for r in extract_code_blocks(m)
+        ]
 
-    return docs.mapInPandas(gen, schema=CODEBLOCK_SCHEMA)
+    return docs.select(id_col, markup_col).mapInPandas(
+        row_mapper(rows, CODEBLOCK_SCHEMA), schema=CODEBLOCK_SCHEMA
+    )

@@ -35,9 +35,8 @@ Reference parity note: the reference (kylehughes/Fuzi,
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -48,6 +47,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..udfs import row_mapper
 
 # ------------------------------------------------------------- MP4
 
@@ -215,7 +216,7 @@ def _parse_trak(b: bytes, ts: int, te: int) -> Optional[dict]:
                 offsets[si] = off
                 off += sizes[si]
                 si += 1
-    kf = [(i, offsets[i], sizes[i]) for i in sync if i < len(sizes)]
+    kf = [(i, offsets[i], sizes[i]) for i in sync if 0 <= i < len(sizes)]
     dur_ms = (duration * 1000) // timescale if timescale else None
     return {
         "container": "mp4", "codec": codec, "width": info["width"],
@@ -542,6 +543,16 @@ VIDEO_KF_SCHEMA = StructType([
 ])
 
 
+_KF_META = ("container", "codec", "width", "height", "duration_ms",
+            "n_samples", "total_bytes")
+
+
+def _fits(bits: int, *values) -> bool:
+    """Every non-None value fits a signed `bits`-bit column."""
+    lim = 1 << (bits - 1)
+    return all(v is None or -lim <= v < lim for v in values)
+
+
 def parse_video_container(content) -> Optional[dict]:
     """MP4 / MKV dispatch by magic. AVI stays on
     ops/multimodal.parse_avi (its MJPEG frames actually DECODE, so it
@@ -562,29 +573,19 @@ def video_keyframes_df(media: DataFrame) -> DataFrame:
     Repartitions by media_ref (giant-binary skew spread, same
     contract as decode_features_df)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in VIDEO_KF_SCHEMA.fields}
-            for i in range(len(pdf)):
-                rows["media_ref"].append(pdf["media_ref"].iloc[i])
-                rows["decode_ok"].append(0)
-                meta = parse_video_container(pdf["content"].iloc[i])
-                if meta is None:
-                    for k in ("container", "codec", "width", "height",
-                              "duration_ms", "n_samples",
-                              "total_bytes", "keyframes"):
-                        rows[k].append(None)
-                    rows["parse_ok"].append(0)
-                else:
-                    for k in ("container", "codec", "width", "height",
-                              "duration_ms", "n_samples",
-                              "total_bytes"):
-                        rows[k].append(meta[k])
-                    rows["keyframes"].append(
-                        [(int(a), int(o), int(s))
-                         for a, o, s in meta["keyframes"]])
-                    rows["parse_ok"].append(1)
-            yield pd.DataFrame(rows)
+    def rows(ref, content):
+        meta = parse_video_container(content)
+        if meta is not None:
+            kf = [(int(a), int(o), int(s)) for a, o, s in meta["keyframes"]]
+            # a corrupt stts count or stsz size can overflow the int
+            # columns: that is a failed walk, not an Arrow error that
+            # aborts the job
+            if _fits(32, meta["width"], meta["height"], meta["n_samples"],
+                     *(k[0] for k in kf), *(k[2] for k in kf)) and \
+                    _fits(64, meta["duration_ms"], meta["total_bytes"],
+                          *(k[1] for k in kf)):
+                return [(ref, *(meta[k] for k in _KF_META), kf, 1, 0)]
+        return [(ref, *(None,) * len(_KF_META), None, 0, 0)]
 
     return (
         media.filter(F.col("media_type") == "video")
@@ -593,7 +594,7 @@ def video_keyframes_df(media: DataFrame) -> DataFrame:
             "media_ref",
         )
         .select("media_ref", "content")
-        .mapInPandas(gen, schema=VIDEO_KF_SCHEMA)
+        .mapInPandas(row_mapper(rows, VIDEO_KF_SCHEMA), schema=VIDEO_KF_SCHEMA)
     )
 
 
@@ -612,10 +613,12 @@ _CODEC_CANON = {
 def video_container_dedup(media: DataFrame) -> DataFrame:
     """Dedup videos WITHOUT decoding a single coded frame: the
     container fingerprint is xxhash64 over (canonical codec family,
-    sample count, the exact keyframe-size vector) — a remux of the
-    same coded stream into the other container (mp4 <-> mkv) carries
-    identical sample geometry, so it collides; any re-ENCODE changes
-    every coded size, so it does not. This is the honest dedup
+    sample count, total coded bytes, the exact keyframe-size vector) —
+    a remux of the same coded stream into the other container
+    (mp4 <-> mkv) carries identical sample geometry, so it collides;
+    any re-ENCODE changes every coded size, so it does not. The MKV
+    walk assumes unlaced SimpleBlocks (one frame per block): a laced
+    remux counts blocks, not frames, and does not collide. This is the honest dedup
     operating point available at parse_ok-level (ops/mp4.py module
     docstring): no pixels, no codec libraries, pure Catalyst after
     the one container-walk MapInPandas.
@@ -811,25 +814,22 @@ M4A_SCHEMA = StructType([
 ])
 
 
+_M4A_META = M4A_SCHEMA.fieldNames()[1:-1]
+
+
 def m4a_meta_df(media: DataFrame) -> DataFrame:
     """media(MEDIA_SCHEMA audio rows) -> M4A_SCHEMA; one narrow
     mapInPandas header walk, decode_ok pinned 0 (AAC/ALAC PCM decode
     honestly absent)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in M4A_SCHEMA.fields}
-            for i in range(len(pdf)):
-                rows["media_ref"].append(pdf["media_ref"].iloc[i])
-                meta = parse_m4a(pdf["content"].iloc[i])
-                if meta is None:
-                    for k in M4A_SCHEMA.fieldNames()[1:-1]:
-                        rows[k].append(None)
-                else:
-                    for k, v in meta.items():
-                        rows[k].append(v)
-                rows["decode_ok"].append(0)
-            yield pd.DataFrame(rows)
+    def rows(ref, content):
+        meta = parse_m4a(content)
+        # the same int32 overflow guard as video_keyframes_df
+        if meta is None or not _fits(
+            32, meta["channels"], meta["sample_rate"], meta["n_samples"]
+        ):
+            return [(ref, *(None,) * len(_M4A_META), 0)]
+        return [(ref, *(meta[k] for k in _M4A_META), 0)]
 
     return (
         media.filter(F.col("media_type") == "audio")
@@ -838,5 +838,5 @@ def m4a_meta_df(media: DataFrame) -> DataFrame:
             "media_ref",
         )
         .select("media_ref", "content")
-        .mapInPandas(gen, schema=M4A_SCHEMA)
+        .mapInPandas(row_mapper(rows, M4A_SCHEMA), schema=M4A_SCHEMA)
     )

@@ -50,6 +50,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..udfs import row_mapper
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_ref", StringType()),
@@ -745,35 +747,16 @@ def audio_spectrogram_df(media: DataFrame, n_fft: int = 256) -> DataFrame:
     clip's windows in one vectorized call, so per-row Python work is a
     header parse plus numpy kernels."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in SPECTROGRAM_SCHEMA.fields}
-            for i in range(len(pdf)):
-                rows["media_ref"].append(pdf["media_ref"].iloc[i])
-                spec = decode_wav_spectrogram(
-                    pdf["content"].iloc[i], n_fft=n_fft
-                )
-                if spec is None:
-                    for k in (
-                        "sample_rate", "n_windows", "dominant_bin",
-                        "dominant_hz", "peak_mag", "spectrum",
-                    ):
-                        rows[k].append(None)
-                    rows["decode_ok"].append(0)
-                else:
-                    rate, nw, db, dhz, pm, bands = spec
-                    rows["sample_rate"].append(rate)
-                    rows["n_windows"].append(nw)
-                    rows["dominant_bin"].append(db)
-                    rows["dominant_hz"].append(dhz)
-                    rows["peak_mag"].append(pm)
-                    rows["spectrum"].append(bands)
-                    rows["decode_ok"].append(1)
-            yield pd.DataFrame(rows)
+    def rows(ref, content):
+        spec = decode_wav_spectrogram(content, n_fft=n_fft)
+        if spec is None:
+            return [(ref, None, None, None, None, None, 0, None)]
+        rate, nw, db, dhz, pm, bands = spec
+        return [(ref, rate, nw, db, dhz, pm, 1, bands)]
 
     return media.select("media_ref", "content").repartition(
         media.sparkSession.sparkContext.defaultParallelism, "media_ref"
-    ).mapInPandas(gen, schema=SPECTROGRAM_SCHEMA)
+    ).mapInPandas(row_mapper(rows, SPECTROGRAM_SCHEMA), schema=SPECTROGRAM_SCHEMA)
 
 
 # ----------------------------------------------- real MP3/ID3 decode
@@ -969,26 +952,19 @@ def build_mp3(
     return tag + frame * n_frames
 
 
+_MP3_META = MP3_SCHEMA.fieldNames()[1:-1]
+
+
 def mp3_meta_df(media: DataFrame) -> DataFrame:
     """media(MEDIA_SCHEMA audio rows) → MP3_SCHEMA, one narrow
     mapInPandas pass (header walk only — scan-speed; the frame walk
     skips payload bytes by computed length, it never reads them)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in MP3_SCHEMA.fields}
-            for i in range(len(pdf)):
-                rows["media_ref"].append(pdf["media_ref"].iloc[i])
-                meta = parse_mp3(pdf["content"].iloc[i])
-                if meta is None:
-                    for k in MP3_SCHEMA.fieldNames()[1:-1]:
-                        rows[k].append(None)
-                    rows["decode_ok"].append(0)
-                else:
-                    for k, v in meta.items():
-                        rows[k].append(v)
-                    rows["decode_ok"].append(1)
-            yield pd.DataFrame(rows)
+    def rows(ref, content):
+        meta = parse_mp3(content)
+        if meta is None:
+            return [(ref, *(None,) * len(_MP3_META), 0)]
+        return [(ref, *(meta[k] for k in _MP3_META), 1)]
 
     return (
         media.filter(F.col("media_type") == "audio")
@@ -996,7 +972,7 @@ def mp3_meta_df(media: DataFrame) -> DataFrame:
             media.sparkSession.sparkContext.defaultParallelism, "media_ref"
         )
         .select("media_ref", "content")
-        .mapInPandas(gen, schema=MP3_SCHEMA)
+        .mapInPandas(row_mapper(rows, MP3_SCHEMA), schema=MP3_SCHEMA)
     )
 
 
@@ -1103,26 +1079,20 @@ def build_adts(
     return bytes(out)
 
 
+_ADTS_META = ADTS_SCHEMA.fieldNames()[1:-1]
+
+
 def adts_meta_df(media: DataFrame) -> DataFrame:
     """media(MEDIA_SCHEMA audio rows) → ADTS_SCHEMA, one narrow
     mapInPandas header walk (scan-speed; payloads skipped by frame
     length). decode_ok = 0 ALWAYS — the walk measures, it never
     claims PCM (parse_adts docstring)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in ADTS_SCHEMA.fields}
-            for i in range(len(pdf)):
-                rows["media_ref"].append(pdf["media_ref"].iloc[i])
-                meta = parse_adts(pdf["content"].iloc[i])
-                if meta is None:
-                    for k in ADTS_SCHEMA.fieldNames()[1:-1]:
-                        rows[k].append(None)
-                else:
-                    for k, v in meta.items():
-                        rows[k].append(v)
-                rows["decode_ok"].append(0)
-            yield pd.DataFrame(rows)
+    def rows(ref, content):
+        meta = parse_adts(content)
+        if meta is None:
+            return [(ref, *(None,) * len(_ADTS_META), 0)]
+        return [(ref, *(meta[k] for k in _ADTS_META), 0)]
 
     return (
         media.filter(F.col("media_type") == "audio")
@@ -1131,7 +1101,7 @@ def adts_meta_df(media: DataFrame) -> DataFrame:
             "media_ref",
         )
         .select("media_ref", "content")
-        .mapInPandas(gen, schema=ADTS_SCHEMA)
+        .mapInPandas(row_mapper(rows, ADTS_SCHEMA), schema=ADTS_SCHEMA)
     )
 
 
@@ -1324,24 +1294,11 @@ def exif_df(media: DataFrame) -> DataFrame:
     media surfaces). Images without an EXIF segment are exif_ok=0 with
     NULL fields — absence is knowledge, not failure."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in EXIF_SCHEMA.fields}
-            for i in range(len(pdf)):
-                rows["media_ref"].append(pdf["media_ref"].iloc[i])
-                meta = parse_exif(pdf["content"].iloc[i])
-                if meta is None:
-                    for k in ("byte_order", "orientation", "make",
-                              "model", "datetime"):
-                        rows[k].append(None)
-                    rows["has_gps"].append(0)
-                    rows["exif_ok"].append(0)
-                else:
-                    for k in ("byte_order", "orientation", "make",
-                              "model", "datetime", "has_gps"):
-                        rows[k].append(meta[k])
-                    rows["exif_ok"].append(1)
-            yield pd.DataFrame(rows)
+    def rows(ref, content):
+        meta = parse_exif(content)
+        if meta is None:
+            return [(ref, None, None, None, None, None, 0, 0)]
+        return [(ref, *(meta[k] for k in EXIF_SCHEMA.fieldNames()[1:-1]), 1)]
 
     return (
         media.filter(F.col("media_type") == "image")
@@ -1349,7 +1306,7 @@ def exif_df(media: DataFrame) -> DataFrame:
             media.sparkSession.sparkContext.defaultParallelism, "media_ref"
         )
         .select("media_ref", "content")
-        .mapInPandas(gen, schema=EXIF_SCHEMA)
+        .mapInPandas(row_mapper(rows, EXIF_SCHEMA), schema=EXIF_SCHEMA)
     )
 
 
@@ -1415,19 +1372,9 @@ def exif_strip_df(media: DataFrame) -> DataFrame:
     decode). The audit pair (orig_len, new_len) makes the removal
     relationally checkable: the delta IS the APP1 segment size."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in EXIF_STRIP_SCHEMA.fields}
-            for i in range(len(pdf)):
-                raw = pdf["content"].iloc[i]
-                out, had, ok = strip_exif(raw)
-                rows["media_ref"].append(pdf["media_ref"].iloc[i])
-                rows["content"].append(out)
-                rows["orig_len"].append(len(bytes(raw or b"")))
-                rows["new_len"].append(len(out))
-                rows["had_exif"].append(had)
-                rows["strip_ok"].append(ok)
-            yield pd.DataFrame(rows)
+    def rows(ref, raw):
+        out, had, ok = strip_exif(raw)
+        return [(ref, out, len(bytes(raw or b"")), len(out), had, ok)]
 
     return (
         media.filter(F.col("media_type") == "image")
@@ -1435,7 +1382,7 @@ def exif_strip_df(media: DataFrame) -> DataFrame:
             media.sparkSession.sparkContext.defaultParallelism, "media_ref"
         )
         .select("media_ref", "content")
-        .mapInPandas(gen, schema=EXIF_STRIP_SCHEMA)
+        .mapInPandas(row_mapper(rows, EXIF_STRIP_SCHEMA), schema=EXIF_STRIP_SCHEMA)
     )
 
 
@@ -1534,7 +1481,6 @@ def avi_frames_df(media: DataFrame) -> DataFrame:
 
     Scale shape: media_ref-hash repartition (giant-binary spread), then
     ONE mapInPandas explode — same contract as decode_features_df."""
-    import pandas as pd
 
     schema = StructType(
         [
@@ -1547,38 +1493,24 @@ def avi_frames_df(media: DataFrame) -> DataFrame:
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                parsed = parse_avi(content)
-                if parsed is None:
-                    continue
-                _, _, uspf, frames = parsed
-                blob = bytes(content)
-                for i, (off, sz) in enumerate(frames):
-                    hdr = parse_image_header(blob[off:off + sz])
-                    rows.append(
-                        (
-                            ref,
-                            i,
-                            int(i * uspf // 1000),
-                            hdr[1] if hdr else None,
-                            hdr[2] if hdr else None,
-                            sz,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_ref", "frame_idx", "ts_ms",
-                    "frame_w", "frame_h", "size_bytes",
-                ],
-            )
+    def rows(ref, content):
+        parsed = parse_avi(content)
+        if parsed is None:
+            return []
+        _, _, uspf, frames = parsed
+        blob = bytes(content)
+        out = []
+        for i, (off, sz) in enumerate(frames):
+            hdr = parse_image_header(blob[off:off + sz])
+            out.append((
+                ref, i, int(i * uspf // 1000),
+                hdr[1] if hdr else None, hdr[2] if hdr else None, sz,
+            ))
+        return out
 
-    return media.repartition(
+    return media.select("media_ref", "content").repartition(
         media.sparkSession.sparkContext.defaultParallelism, "media_ref"
-    ).mapInPandas(gen, schema=schema)
+    ).mapInPandas(row_mapper(rows, schema), schema=schema)
 
 
 # ----------------------------------------------- real GIF pixel decode
@@ -1818,91 +1750,51 @@ def decode_features_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     decode_ok=0 — never a fake success. Non-image media keeps the
     digest-seeded fake except WAV audio (real PCM decode)."""
     use_pil = _have_pil()
-    for pdf in batches:
-        rows = {
-            "media_ref": [],
-            "media_type": [],
-            "format": [],
-            "width": [],
-            "height": [],
-            "channels": [],
-            "decode_ok": [],
-            "features": [],
-        }
-        for i in range(len(pdf)):
-            ref = pdf["media_ref"].iloc[i]
-            mtype = pdf["media_type"].iloc[i]
-            content = pdf["content"].iloc[i]
-            if mtype == "image":
-                header = parse_image_header(content)
-                if header is None:
-                    rows["format"].append(None)
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["channels"].append(None)
-                    rows["decode_ok"].append(0)
-                    rows["features"].append(None)
-                else:
-                    fmt, w, h, c = header
+
+    def rows(ref, mtype, content):
+        if mtype == "image":
+            header = parse_image_header(content)
+            if header is None:
+                return [(ref, mtype, None, None, None, None, 0, None)]
+            fmt, w, h, c = header
+            feats = None
+            if use_pil:
+                try:
+                    import io
+
+                    import PIL.Image
+
+                    img = PIL.Image.open(io.BytesIO(content))
+                    feats = np.asarray(
+                        img.convert("L").resize((8, 8)),
+                        dtype=np.float32,
+                    ).ravel()
+                except Exception:
                     feats = None
-                    if use_pil:
-                        try:
-                            import io
+            if feats is None and fmt in ("png", "gif", "jpeg"):
+                # REAL pixels, no image library: stdlib
+                # inflate/LZW/baseline-DCT decode, 8×8
+                # block-mean luma
+                feats = _pixel_features(content, fmt)
+            if feats is None:
+                feats = _fake_decode(content)[3]
+            return [(ref, mtype, fmt, w, h, c, 1, feats)]
+        wav = decode_wav_features(content) if mtype == "audio" else None
+        if wav is not None:
+            # REAL PCM decode: window-RMS features; channels
+            # carries the audio channel count, width/height NULL
+            rate, ch, bits, n_frames, dur, feats = wav
+            return [(ref, mtype, audio_format(content), None, None, ch, 1, feats)]
+        w, h, c, feats = _fake_decode(content)
+        return [(ref, mtype, None, w, h, c, 1, feats)]
 
-                            import PIL.Image
-
-                            img = PIL.Image.open(io.BytesIO(content))
-                            feats = np.asarray(
-                                img.convert("L").resize((8, 8)),
-                                dtype=np.float32,
-                            ).ravel()
-                        except Exception:
-                            feats = None
-                    if feats is None and fmt in ("png", "gif", "jpeg"):
-                        # REAL pixels, no image library: stdlib
-                        # inflate/LZW/baseline-DCT decode, 8×8
-                        # block-mean luma
-                        feats = _pixel_features(content, fmt)
-                    if feats is None:
-                        feats = _fake_decode(content)[3]
-                    rows["format"].append(fmt)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["channels"].append(c)
-                    rows["decode_ok"].append(1)
-                    rows["features"].append(feats)
-            else:
-                wav = (
-                    decode_wav_features(content)
-                    if mtype == "audio" else None
-                )
-                if wav is not None:
-                    # REAL PCM decode: window-RMS features; channels
-                    # carries the audio channel count, width/height NULL
-                    rate, ch, bits, n_frames, dur, feats = wav
-                    rows["format"].append(audio_format(content))
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["channels"].append(ch)
-                    rows["decode_ok"].append(1)
-                    rows["features"].append(feats)
-                else:
-                    w, h, c, feats = _fake_decode(content)
-                    rows["format"].append(None)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["channels"].append(c)
-                    rows["decode_ok"].append(1)
-                    rows["features"].append(feats)
-            rows["media_ref"].append(ref)
-            rows["media_type"].append(mtype)
-        yield pd.DataFrame(rows)
+    return row_mapper(rows, DECODED_SCHEMA)(batches)
 
 
 def decode_features_df(media: DataFrame) -> DataFrame:
     """media(MEDIA_SCHEMA) → DECODED_SCHEMA, partition-parallel.
     Repartitions by media_ref hash first so giant binaries spread out."""
-    return media.repartition(
+    return media.select("media_ref", "media_type", "content").repartition(
         media.sparkSession.sparkContext.defaultParallelism, "media_ref"
     ).mapInPandas(decode_features_fn, schema=DECODED_SCHEMA)
 
@@ -1926,46 +1818,30 @@ def make_resize_fn(target: int = 32):
     without image libraries."""
     use_pil = _have_pil()
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_ref": [], "width": [], "height": [], "thumb": []}
-            for i in range(len(pdf)):
-                content = pdf["content"].iloc[i]
-                rows["media_ref"].append(pdf["media_ref"].iloc[i])
-                if use_pil:
-                    try:
-                        import io
+    def rows(ref, content):
+        if use_pil:
+            try:
+                import io
 
-                        import PIL.Image
+                import PIL.Image
 
-                        img = PIL.Image.open(io.BytesIO(content)).convert("L")
-                        img = img.resize((target, target))
-                        rows["width"].append(target)
-                        rows["height"].append(target)
-                        rows["thumb"].append(img.tobytes())
-                        continue
-                    except Exception:
-                        pass
-                arr = decode_image_pixels(content)
-                if arr is not None:
-                    # REAL thumbnail: block-mean luma pooled to target²
-                    thumb = np.clip(
-                        np.rint(_block_pool(_gray(arr), target)), 0, 255
-                    ).astype(np.uint8)
-                    rows["width"].append(target)
-                    rows["height"].append(target)
-                    rows["thumb"].append(thumb.tobytes())
-                    continue
-                dig = hashlib.blake2b(content or b"", digest_size=32).digest()
-                rng = np.random.RandomState(int.from_bytes(dig[:4], "little"))
-                rows["width"].append(target)
-                rows["height"].append(target)
-                rows["thumb"].append(
-                    rng.randint(0, 256, size=target * target, dtype=np.uint8).tobytes()
-                )
-            yield pd.DataFrame(rows)
+                img = PIL.Image.open(io.BytesIO(content)).convert("L")
+                return [(ref, target, target, img.resize((target, target)).tobytes())]
+            except Exception:
+                pass
+        arr = decode_image_pixels(content)
+        if arr is not None:
+            # REAL thumbnail: block-mean luma pooled to target²
+            thumb = np.clip(
+                np.rint(_block_pool(_gray(arr), target)), 0, 255
+            ).astype(np.uint8)
+        else:
+            dig = hashlib.blake2b(content or b"", digest_size=32).digest()
+            rng = np.random.RandomState(int.from_bytes(dig[:4], "little"))
+            thumb = rng.randint(0, 256, size=target * target, dtype=np.uint8)
+        return [(ref, target, target, thumb.tobytes())]
 
-    return fn
+    return row_mapper(rows, RESIZED_SCHEMA)
 
 
 FRAMES_SCHEMA = StructType(
@@ -1991,62 +1867,50 @@ def make_frame_sample_fn(n_frames: int = 4, fps_ms: int = 1000):
     no libav in this container) keep the deterministic digest-seeded
     fake on the fps_ms grid so the explosion shape stays exercisable."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_ref": [], "frame_idx": [], "ts_ms": [], "features": []}
-            for i in range(len(pdf)):
-                ref = pdf["media_ref"].iloc[i]
-                content = pdf["content"].iloc[i]
-                parsed = parse_avi(content)
-                if parsed is not None and parsed[3]:
-                    _w, _h, uspf, frames = parsed
-                    body = bytes(content)
-                    take = min(n_frames, len(frames))
-                    for s in range(take):
-                        fi = (s * len(frames)) // take
-                        off, size = frames[fi]
-                        feats = _pixel_features(
-                            body[off:off + size], "jpeg"
-                        )
-                        if feats is None:
-                            dig = hashlib.blake2b(
-                                body[off:off + size], digest_size=32
-                            ).digest()
-                            rng = np.random.RandomState(
-                                int.from_bytes(dig[:4], "little")
-                            )
-                            feats = rng.randn(_FEATURE_DIM).astype(
-                                np.float32
-                            )
-                        rows["media_ref"].append(ref)
-                        rows["frame_idx"].append(fi)
-                        rows["ts_ms"].append(fi * uspf // 1000)
-                        rows["features"].append(feats)
-                    continue
-                dig = hashlib.blake2b(content or b"", digest_size=32).digest()
-                for f in range(n_frames):
+    def rows(ref, content):
+        parsed = parse_avi(content)
+        if parsed is not None and parsed[3]:
+            _w, _h, uspf, frames = parsed
+            body = bytes(content)
+            take = min(n_frames, len(frames))
+            out = []
+            for s in range(take):
+                fi = (s * len(frames)) // take
+                off, size = frames[fi]
+                feats = _pixel_features(body[off:off + size], "jpeg")
+                if feats is None:
+                    dig = hashlib.blake2b(
+                        body[off:off + size], digest_size=32
+                    ).digest()
                     rng = np.random.RandomState(
-                        int.from_bytes(dig[:4], "little") + f
+                        int.from_bytes(dig[:4], "little")
                     )
-                    rows["media_ref"].append(ref)
-                    rows["frame_idx"].append(f)
-                    rows["ts_ms"].append(f * fps_ms)
-                    rows["features"].append(rng.randn(_FEATURE_DIM).astype(np.float32))
-            yield pd.DataFrame(rows)
+                    feats = rng.randn(_FEATURE_DIM).astype(np.float32)
+                out.append((ref, fi, fi * uspf // 1000, feats))
+            return out
+        dig = hashlib.blake2b(content or b"", digest_size=32).digest()
+        seed = int.from_bytes(dig[:4], "little")
+        return [
+            (
+                ref, f, f * fps_ms,
+                np.random.RandomState(seed + f).randn(_FEATURE_DIM).astype(np.float32),
+            )
+            for f in range(n_frames)
+        ]
 
-    return fn
+    return row_mapper(rows, FRAMES_SCHEMA)
 
 
 def resize_images_df(media: DataFrame, target: int = 32) -> DataFrame:
-    return media.filter(F.col("media_type") == "image").mapInPandas(
-        make_resize_fn(target), schema=RESIZED_SCHEMA
-    )
+    return media.filter(F.col("media_type") == "image").select(
+        "media_ref", "content"
+    ).mapInPandas(make_resize_fn(target), schema=RESIZED_SCHEMA)
 
 
 def frame_sample_df(media: DataFrame, n_frames: int = 4) -> DataFrame:
-    return media.filter(F.col("media_type") == "video").mapInPandas(
-        make_frame_sample_fn(n_frames), schema=FRAMES_SCHEMA
-    )
+    return media.filter(F.col("media_type") == "video").select(
+        "media_ref", "content"
+    ).mapInPandas(make_frame_sample_fn(n_frames), schema=FRAMES_SCHEMA)
 
 
 def synth_dims(ref: str) -> tuple[int, int]:
@@ -2073,40 +1937,22 @@ def synth_media_df(spark, docs_extracted: DataFrame) -> DataFrame:
 
     _BUILDERS = {"png": build_png, "gif": build_gif}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            ext = [
-                (r or "").rsplit(".", 1)[-1].lower() if "." in (r or "") else ""
-                for r in pdf["media_ref"]
-            ]
-            mtype = [
-                "image"
-                if e in ("jpg", "jpeg", "png", "gif", "webp")
-                else ("video" if e in ("mp4", "webm") else "other")
-                for e in ext
-            ]
-            content = []
-            for r, e, t in zip(pdf["media_ref"], ext, mtype):
-                dig = hashlib.blake2b((r or "").encode(), digest_size=32).digest()
-                if t == "image":
-                    w, h = synth_dims(r or "")
-                    content.append(_BUILDERS.get(e, build_jpeg)(w, h, dig))
-                else:
-                    content.append(dig * 8)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "media_type": mtype,
-                    "content": content,
-                    "format": ext,
-                    "width": [None] * n,
-                    "height": [None] * n,
-                    "duration_ms": [None] * n,
-                }
-            )
+    def rows(ref):
+        r = ref or ""
+        ext = r.rsplit(".", 1)[-1].lower() if "." in r else ""
+        if ext in ("jpg", "jpeg", "png", "gif", "webp"):
+            mtype = "image"
+        else:
+            mtype = "video" if ext in ("mp4", "webm") else "other"
+        dig = hashlib.blake2b(r.encode(), digest_size=32).digest()
+        if mtype == "image":
+            w, h = synth_dims(r)
+            content = _BUILDERS.get(ext, build_jpeg)(w, h, dig)
+        else:
+            content = dig * 8
+        return [(ref, mtype, content, ext, None, None, None)]
 
-    return refs.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return refs.mapInPandas(row_mapper(rows, MEDIA_SCHEMA), schema=MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------- media quality gate

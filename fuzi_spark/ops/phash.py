@@ -36,7 +36,7 @@ given pixel array within one BLAS environment; across environments the
 float DCT can flip bits whose coefficients sit within rounding jitter
 of the median (measured: 0 on every corpus in this repo — the up-to-8-
 bit drift an earlier round attributed to BLAS jitter was actually the
-float64 hash-transport bug fixed in r4, see _int64_frame). Exact-
+float64 hash-transport bug since fixed, see udfs._frame). Exact-
 equality dedup (phash_dedup_groups) targets byte-identical or
 losslessly re-encoded copies computed within one job — the
 planted-oracle design; hamming thresholds for near-dups are operating
@@ -71,6 +71,7 @@ from fuzi_spark.ops.multimodal import (
     _gray,
     decode_image_pixels,
 )
+from fuzi_spark.udfs import row_mapper
 
 
 def _dct_matrix(n: int) -> np.ndarray:
@@ -120,21 +121,6 @@ PHASH_SCHEMA = StructType(
 )
 
 
-
-def _int64_frame(rows: dict, int64_cols) -> pd.DataFrame:
-    """dict-of-lists → DataFrame with the named columns as pandas
-    NULLABLE Int64. A plain list with a None coerces to float64, and
-    float64 silently ROUNDS int64 values above 2^53 — for a 64-bit
-    perceptual hash that corrupts the low ~11 bits of every hash that
-    shares a batch with one undecodable row (found round 4: a single
-    junk image made co-batched near-dup pairs vanish). The nullable
-    dtype keeps exact int64 through the Arrow boundary."""
-    pdf = pd.DataFrame({k: v for k, v in rows.items() if k not in int64_cols})
-    for c in int64_cols:
-        pdf[c] = pd.array(rows[c], dtype="Int64")
-    return pdf[list(rows)]
-
-
 def _phash_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # content-addressed memo, bounded per task (same rationale as the
     # video frame memo below): byte-identical images are EXACTLY the
@@ -165,28 +151,13 @@ def _phash_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         memo[key] = got
         return got
 
-    for pdf in batches:
-        rows = {
-            "media_ref": [],
-            "width": [],
-            "height": [],
-            "phash": [],
-            "decode_ok": [],
-        }
-        for i in range(len(pdf)):
-            rows["media_ref"].append(pdf["media_ref"].iloc[i])
-            got = decode_memo(pdf["content"].iloc[i])
-            if got is None:
-                rows["width"].append(None)
-                rows["height"].append(None)
-                rows["phash"].append(None)
-                rows["decode_ok"].append(0)
-            else:
-                rows["width"].append(got[0])
-                rows["height"].append(got[1])
-                rows["phash"].append(got[2])
-                rows["decode_ok"].append(1)
-        yield _int64_frame(rows, ("phash",))
+    def rows(ref, content):
+        got = decode_memo(content)
+        if got is None:
+            return [(ref, None, None, None, 0)]
+        return [(ref, *got, 1)]
+
+    return row_mapper(rows, PHASH_SCHEMA)(batches)
 
 
 def phash_df(media: DataFrame) -> DataFrame:
@@ -208,6 +179,7 @@ def phash_df(media: DataFrame) -> DataFrame:
             media.sparkSession.sparkContext.defaultParallelism,
             "media_ref",
         )
+        .select("media_ref", "content")
         .mapInPandas(_phash_fn, schema=PHASH_SCHEMA)
     )
 
@@ -258,28 +230,13 @@ def _multi_phash_fn(trims):
             memo[key] = got
             return got
 
-        for pdf in batches:
-            rows = {
-                "media_ref": [],
-                "trim": [],
-                "phash": [],
-                "decode_ok": [],
-            }
-            for i in range(len(pdf)):
-                ref = pdf["media_ref"].iloc[i]
-                got = hashes_memo(pdf["content"].iloc[i])
-                if not got:
-                    rows["media_ref"].append(ref)
-                    rows["trim"].append(None)
-                    rows["phash"].append(None)
-                    rows["decode_ok"].append(0)
-                else:
-                    for t, hsh in got:
-                        rows["media_ref"].append(ref)
-                        rows["trim"].append(t)
-                        rows["phash"].append(hsh)
-                        rows["decode_ok"].append(1)
-            yield _int64_frame(rows, ("trim", "phash"))
+        def rows(ref, content):
+            got = hashes_memo(content)
+            if not got:
+                return [(ref, None, None, 0)]
+            return [(ref, t, hsh, 1) for t, hsh in got]
+
+        return row_mapper(rows, MULTI_PHASH_SCHEMA)(batches)
 
     return fn
 
@@ -302,6 +259,7 @@ def phash_multi_df(media: DataFrame, trims=(0, 2, 4)) -> DataFrame:
             media.sparkSession.sparkContext.defaultParallelism,
             "media_ref",
         )
+        .select("media_ref", "content")
         .mapInPandas(_multi_phash_fn(trims), schema=MULTI_PHASH_SCHEMA)
     )
 
@@ -479,42 +437,25 @@ def _video_phash_fn(n_frames: int):
             memo[fb] = got
         return got
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in VIDEO_PHASH_SCHEMA.fields}
-            for i in range(len(pdf)):
-                rows["media_ref"].append(pdf["media_ref"].iloc[i])
-                content = pdf["content"].iloc[i]
-                parsed = parse_avi(content)
-                frames = parsed[3] if parsed else []
-                if not frames:
-                    rows["n_frames_total"].append(None)
-                    rows["n_sampled"].append(None)
-                    rows["phash"].append(None)
-                    rows["decode_ok"].append(0)
-                    continue
-                blob = bytes(content)
-                total = len(frames)
-                n_s = min(n_frames, total)
-                hashes = []
-                for k in range(n_s):
-                    off, sz = frames[(k * total) // n_s]
-                    h = frame_hash(blob[off:off + sz])
-                    if h is not None:
-                        hashes.append(h)
-                if not hashes:
-                    rows["n_frames_total"].append(total)
-                    rows["n_sampled"].append(0)
-                    rows["phash"].append(None)
-                    rows["decode_ok"].append(0)
-                    continue
-                rows["n_frames_total"].append(total)
-                rows["n_sampled"].append(len(hashes))
-                rows["phash"].append(video_phash_from_frame_hashes(hashes))
-                rows["decode_ok"].append(1)
-            yield _int64_frame(rows, ("phash",))
+    def rows(ref, content):
+        parsed = parse_avi(content)
+        frames = parsed[3] if parsed else []
+        if not frames:
+            return [(ref, None, None, None, 0)]
+        blob = bytes(content)
+        total = len(frames)
+        n_s = min(n_frames, total)
+        hashes = []
+        for k in range(n_s):
+            off, sz = frames[(k * total) // n_s]
+            h = frame_hash(blob[off:off + sz])
+            if h is not None:
+                hashes.append(h)
+        if not hashes:
+            return [(ref, total, 0, None, 0)]
+        return [(ref, total, len(hashes), video_phash_from_frame_hashes(hashes), 1)]
 
-    return fn
+    return row_mapper(rows, VIDEO_PHASH_SCHEMA)
 
 
 def video_phash_df(media: DataFrame, n_frames: int = 4) -> DataFrame:
@@ -569,34 +510,27 @@ def _video_scenes_fn(threshold: int):
             memo[fb] = got
         return got
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in SCENES_SCHEMA.fields}
-            for i in range(len(pdf)):
-                ref = pdf["media_ref"].iloc[i]
-                content = pdf["content"].iloc[i]
-                parsed = parse_avi(content)
-                if not parsed or not parsed[3]:
-                    continue
-                _, _, uspf, frames = parsed
-                blob = bytes(content)
-                prev = None
-                for idx, (off, sz) in enumerate(frames):
-                    h = frame_hash(blob[off:off + sz])
-                    if h is None:
-                        continue
-                    ham = None if prev is None else bin(h ^ prev).count("1")
-                    rows["media_ref"].append(ref)
-                    rows["frame_idx"].append(idx)
-                    rows["ts_ms"].append(int(idx * uspf // 1000))
-                    rows["hamming_prev"].append(ham)
-                    rows["is_scene_start"].append(
-                        1 if (ham is None or ham > threshold) else 0
-                    )
-                    prev = h
-            yield pd.DataFrame(rows)
+    def rows(ref, content):
+        parsed = parse_avi(content)
+        if not parsed or not parsed[3]:
+            return []
+        _, _, uspf, frames = parsed
+        blob = bytes(content)
+        out = []
+        prev = None
+        for idx, (off, sz) in enumerate(frames):
+            h = frame_hash(blob[off:off + sz])
+            if h is None:
+                continue
+            ham = None if prev is None else bin(h ^ prev).count("1")
+            out.append((
+                ref, idx, int(idx * uspf // 1000), ham,
+                1 if (ham is None or ham > threshold) else 0,
+            ))
+            prev = h
+        return out
 
-    return fn
+    return row_mapper(rows, SCENES_SCHEMA)
 
 
 def video_scenes_df(media: DataFrame, threshold: int = 12) -> DataFrame:

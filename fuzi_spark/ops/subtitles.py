@@ -25,9 +25,7 @@ Dialect coverage, deliberately bounded:
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Optional, Tuple
-
-import pandas as pd
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,6 +36,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..udfs import row_mapper
 
 _TS = re.compile(
     r"(?:(\d{1,2}):)?(\d{1,2}):(\d{1,2})[.,](\d{1,3})"
@@ -139,29 +139,18 @@ def parse_subtitles_df(
     the same narrow-map shape as parse_warc/sitemap_urls; cue rows are
     small, so the explode is the only fan-out and there is no shuffle."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in SUBTITLE_SCHEMA.fields}
-            for i in range(len(pdf)):
-                did = pdf[id_col].iloc[i]
-                blob = pdf[text_col].iloc[i]
-                blob = "" if blob is None else str(blob)
-                cues = (
-                    parse_vtt(blob)
-                    if blob.lstrip("﻿").startswith("WEBVTT")
-                    else parse_srt(blob)
-                )
-                for seq, s, e, t in cues:
-                    rows["doc_id"].append(did)
-                    rows["seq"].append(seq)
-                    rows["start_ms"].append(s)
-                    rows["end_ms"].append(e)
-                    rows["text"].append(t)
-            yield pd.DataFrame(rows)
+    def rows(did, blob):
+        blob = "" if blob is None else str(blob)
+        cues = (
+            parse_vtt(blob)
+            if blob.lstrip("﻿").startswith("WEBVTT")
+            else parse_srt(blob)
+        )
+        return [(did, *cue) for cue in cues]
 
     return docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col)
-    ).mapInPandas(gen, schema=SUBTITLE_SCHEMA)
+    ).mapInPandas(row_mapper(rows, SUBTITLE_SCHEMA), schema=SUBTITLE_SCHEMA)
 
 
 def align_frames_to_subtitles(

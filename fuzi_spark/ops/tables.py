@@ -27,13 +27,13 @@ Narrow map, no shuffle: composes with downstream aggs for free.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 
 from ..dom import ELEMENT_NODE, Element
-from ..extract import sniff_doc_type
 from ..htmlparser import parse_html
+from ..udfs import row_mapper
 
 _SECTIONS = frozenset(("thead", "tbody", "tfoot"))
 _CELLS = frozenset(("th", "td"))
@@ -80,8 +80,6 @@ def extract_tables(
 ) -> list[dict]:
     """All table rows of one document, in document order. Never raises;
     unparseable markup yields []."""
-    if doc_type not in ("html", "xml"):
-        doc_type = sniff_doc_type(markup)
     try:
         doc = parse_html(markup, assign_order=False)
     except Exception:
@@ -117,31 +115,17 @@ def extract_tables_df(
 ) -> DataFrame:
     """Explode documents into table rows: (doc_id, table_idx, row_idx,
     is_header, cells, n_cells)."""
-    import pandas as pd
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for did, m in zip(pdf[id_col], pdf[markup_col]):
-                if m is None:
-                    continue
-                for r in extract_tables(m):
-                    rows.append(
-                        (
-                            int(did),
-                            r["table_idx"],
-                            r["row_idx"],
-                            r["is_header"],
-                            r["cells"],
-                            len(r["cells"]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "table_idx", "row_idx",
-                    "is_header", "cells", "n_cells",
-                ],
+    def rows(did, m):
+        if m is None:
+            return []
+        return [
+            (
+                int(did), r["table_idx"], r["row_idx"],
+                r["is_header"], r["cells"], len(r["cells"]),
             )
+            for r in extract_tables(m)
+        ]
 
-    return docs.mapInPandas(gen, schema=TABLE_SCHEMA)
+    return docs.select(id_col, markup_col).mapInPandas(
+        row_mapper(rows, TABLE_SCHEMA), schema=TABLE_SCHEMA
+    )

@@ -467,7 +467,7 @@ def page_metadata(markup_col: str = "markup", doc_type: str = "html"):
     robots directive, compared lowercased per the spec.
     """
     from ..query import css
-    from ..udfs import _parse_doc
+    from ..udfs import _parse_doc, doc_column
 
     def _meta_content(doc, name_attr: str, value: str):
         for el in css(doc, "meta"):
@@ -476,47 +476,28 @@ def page_metadata(markup_col: str = "markup", doc_type: str = "html"):
                 return el.attr("content")
         return None
 
-    @pandas_udf(_PAGE_META_SCHEMA)
-    def _udf(markup: pd.Series) -> pd.DataFrame:
-        rows = []
-        for m in markup:
-            doc = _parse_doc(m, doc_type) if m is not None else None
-            if doc is None:
-                rows.append((None, None, None, None, None, None))
-                continue
-            canonical = None
-            for el in css(doc, "link"):
-                rel = el.attr("rel")
-                if rel is not None and rel.strip().lower() == "canonical":
-                    canonical = el.attr("href")
-                    break
-            robots = _meta_content(doc, "name", "robots")
-            noindex = int(
-                robots is not None and "noindex" in robots.lower()
-            )
-            rows.append(
-                (
-                    doc.title,
-                    _meta_content(doc, "name", "description"),
-                    canonical,
-                    _meta_content(doc, "property", "og:title"),
-                    _meta_content(doc, "property", "og:image"),
-                    noindex,
-                )
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "title",
-                "description",
-                "canonical_url",
-                "og_title",
-                "og_image",
-                "robots_noindex",
-            ],
+    def _meta(markup):
+        doc = _parse_doc(markup, doc_type)
+        if doc is None:
+            return None
+        canonical = None
+        for el in css(doc, "link"):
+            rel = el.attr("rel")
+            if rel is not None and rel.strip().lower() == "canonical":
+                canonical = el.attr("href")
+                break
+        robots = _meta_content(doc, "name", "robots")
+        noindex = int(robots is not None and "noindex" in robots.lower())
+        return (
+            doc.title,
+            _meta_content(doc, "name", "description"),
+            canonical,
+            _meta_content(doc, "property", "og:title"),
+            _meta_content(doc, "property", "og:image"),
+            noindex,
         )
 
-    return _udf(F.col(markup_col))
+    return doc_column(_PAGE_META_SCHEMA, _meta)(F.col(markup_col))
 
 
 # --------------------------------------------------------------- robots
@@ -928,9 +909,12 @@ def hidden_text(
     never false-positive. Arrow-batched pandas UDF; parse failure →
     all-NULL struct (never a fake zero)."""
     from ..dom import ELEMENT_NODE, TEXT_NODE
-    from ..udfs import _parse_doc
+    from ..udfs import _parse_doc, doc_column
 
-    def _stats(doc):
+    def _stats(markup):
+        doc = _parse_doc(markup, doc_type)
+        if doc is None:
+            return None
         root = doc.root
         if root is None:
             return (0, 0, 0, 0.0, 0)
@@ -958,26 +942,7 @@ def hidden_text(
         frac = (hid / total) if total else 0.0
         return (vis, hid, blocks, frac, int(frac > cloak_frac))
 
-    @pandas_udf(_HIDDEN_SCHEMA)
-    def _udf(markup: pd.Series) -> pd.DataFrame:
-        rows = []
-        for m in markup:
-            doc = _parse_doc(m, doc_type) if m is not None else None
-            rows.append(
-                (None, None, None, None, None) if doc is None else _stats(doc)
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "visible_len",
-                "hidden_len",
-                "n_hidden_blocks",
-                "hidden_frac",
-                "cloaked",
-            ],
-        )
-
-    return _udf(F.col(markup_col))
+    return doc_column(_HIDDEN_SCHEMA, _stats)(F.col(markup_col))
 
 
 # ------------------------------------------------------- publish date
@@ -1034,40 +999,31 @@ def publish_date(
     'meta'|'time'|'url'|NULL, has_date).
     """
     from ..query import css
-    from ..udfs import _parse_doc
+    from ..udfs import _parse_doc, doc_column
 
-    @pandas_udf(_PUBDATE_SCHEMA)
-    def _dom_date(markup: pd.Series) -> pd.DataFrame:
-        rows = []
-        for m in markup:
-            doc = _parse_doc(m, "html") if m is not None else None
-            if doc is None:
-                rows.append((None, None))
-                continue
-            got = None
-            for el in css(doc, "meta"):
-                prop = el.attr("property")
-                if (
-                    prop is not None
-                    and prop.strip().lower() == "article:published_time"
-                ):
-                    got = _valid_iso_prefix(el.attr("content"))
-                    if got is not None:
-                        break
-            if got is not None:
-                rows.append((got, "meta"))
-                continue
-            for el in css(doc, "time"):
-                got = _valid_iso_prefix(el.attr("datetime"))
+    def _dom_date(markup):
+        doc = _parse_doc(markup, "html")
+        if doc is None:
+            return None
+        for el in css(doc, "meta"):
+            prop = el.attr("property")
+            if (
+                prop is not None
+                and prop.strip().lower() == "article:published_time"
+            ):
+                got = _valid_iso_prefix(el.attr("content"))
                 if got is not None:
-                    break
-            rows.append((got, "time") if got is not None else (None, None))
-        return pd.DataFrame(rows, columns=["published", "date_source"])
+                    return (got, "meta")
+        for el in css(doc, "time"):
+            got = _valid_iso_prefix(el.attr("datetime"))
+            if got is not None:
+                return (got, "time")
+        return None
 
     staged = docs.select(
         F.col(id_col),
         F.col(url_col).alias("_u"),
-        _dom_date(F.col(markup_col)).alias("_d"),
+        doc_column(_PUBDATE_SCHEMA, _dom_date)(F.col(markup_col)).alias("_d"),
     )
     u = F.col("_u")
     y = F.regexp_extract(u, _URL_DATE_RE, 1)
@@ -1144,9 +1100,12 @@ def paywall_signals(markup_col: str = "markup", doc_type: str = "html"):
     reached (head is descended, only its text-bearing decoys are
     skipped). Arrow-batched pandas UDF; parse failure → all-NULL."""
     from ..dom import ELEMENT_NODE, TEXT_NODE
-    from ..udfs import _parse_doc
+    from ..udfs import _parse_doc, doc_column
 
-    def _scan(doc):
+    def _scan(markup):
+        doc = _parse_doc(markup, doc_type)
+        if doc is None:
+            return None
         root = doc.root
         if root is None:
             return (0, 0, 0, 0, 0)
@@ -1195,26 +1154,7 @@ def paywall_signals(markup_col: str = "markup", doc_type: str = "html"):
             int(bool(schema or phrase or markers)),
         )
 
-    @pandas_udf(_PAYWALL_SCHEMA)
-    def _udf(markup: pd.Series) -> pd.DataFrame:
-        rows = []
-        for m in markup:
-            doc = _parse_doc(m, doc_type) if m is not None else None
-            rows.append(
-                (None, None, None, None, None) if doc is None else _scan(doc)
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "has_password_input",
-                "has_paywall_schema",
-                "n_wall_markers",
-                "has_wall_phrase",
-                "paywalled",
-            ],
-        )
-
-    return _udf(F.col(markup_col))
+    return doc_column(_PAYWALL_SCHEMA, _scan)(F.col(markup_col))
 
 
 # ------------------------------------------------------------ URL signals

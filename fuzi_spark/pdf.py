@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator, Optional
+from typing import Optional
 
 # ------------------------------------------------------------ object scan
 
@@ -702,39 +702,11 @@ def pdf_extract_df(docs, content_col: str = "content", id_col: str = "doc_id"):
     """(doc_id, content: binary) → extracted spans, one row per span —
     the same EXTRACTED_SCHEMA/mapInPandas contract as the HTML extractor,
     so lineage/resume/verification compose unchanged."""
-    import pandas as pd
+    from .udfs import EXTRACTED_SCHEMA, row_mapper, span_rows
 
-    from .udfs import EXTRACTED_SCHEMA
+    def rows(doc_id, data):
+        return span_rows(doc_id, *extract_pdf_spans(bytes(data or b"")))
 
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf_batch in batches:
-            out = {k: [] for k in
-                   ("doc_id", "seq", "kind", "text", "media_ref", "offset",
-                    "parse_error")}
-            ids = pdf_batch[id_col].to_numpy()
-            contents = pdf_batch[content_col].to_numpy()
-            for i in range(len(pdf_batch)):
-                data = contents[i]
-                spans, err = extract_pdf_spans(
-                    bytes(data) if data is not None else b""
-                )
-                if err or not spans:
-                    out["doc_id"].append(ids[i])
-                    out["seq"].append(-1)
-                    out["kind"].append("error" if err else "empty")
-                    out["text"].append(None)
-                    out["media_ref"].append(None)
-                    out["offset"].append(-1)
-                    out["parse_error"].append(int(err))
-                    continue
-                for seq, s in enumerate(spans):
-                    out["doc_id"].append(ids[i])
-                    out["seq"].append(seq)
-                    out["kind"].append(s["kind"])
-                    out["text"].append(s["text"])
-                    out["media_ref"].append(s["media_ref"])
-                    out["offset"].append(s["offset"])
-                    out["parse_error"].append(0)
-            yield pd.DataFrame(out)
-
-    return docs.select(id_col, content_col).mapInPandas(fn, schema=EXTRACTED_SCHEMA)
+    return docs.select(id_col, content_col).mapInPandas(
+        row_mapper(rows, EXTRACTED_SCHEMA), schema=EXTRACTED_SCHEMA
+    )

@@ -51,7 +51,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .udfs import extract_markup_df, extract_spans_df, markup_from_spans_col
+from .udfs import extract_markup_df, extract_spans_df, markup_select
 
 # Giant-doc threshold, calibrated by measurement (round 1): the extractor
 # amortizes per-doc overhead on large documents (~58 MB/s on a 7.5 MB doc
@@ -61,6 +61,11 @@ from .udfs import extract_markup_df, extract_spans_df, markup_from_spans_col
 # measured: salting 6 deliberately-colliding 7.5 MB giants made the job
 # ~40% SLOWER. Route only genuinely pathological documents.
 DEFAULT_GIANT_THRESHOLD = 32_000_000  # bytes of markup per doc
+
+
+def _bucket(n_buckets: int):
+    """The commit-unit column: pmod(xxhash64(doc_id), n_buckets)."""
+    return F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets))
 
 
 def salt_partition(
@@ -171,16 +176,10 @@ def run_extraction_pipeline(
     # coalesce(text,'') over every span, so the two are identical by
     # construction (the old with_weight_and_bucket aggregate was a second
     # full pass over the spans arrays).
-    cols = [F.col("doc_id"), markup_from_spans_col("spans").alias("markup")]
-    if "doc_type" in docs.columns:
-        cols.append(F.col("doc_type"))
     docs = (
-        docs.select(*cols)
+        markup_select(docs)
         .withColumn("doc_weight", F.length(F.coalesce("markup", F.lit(""))))
-        .withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets)),
-        )
+        .withColumn("bucket", _bucket(n_buckets))
     )
 
     spans_path = lineage_path = None
@@ -197,9 +196,7 @@ def run_extraction_pipeline(
     extracted = extract_markup_df(docs, doc_type)
     # re-attach the stable bucket (cheap hash recompute — avoids carrying it
     # through the Python stage)
-    extracted = extracted.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets))
-    )
+    extracted = extracted.withColumn("bucket", _bucket(n_buckets))
 
     if output_dir:
         run_id = uuid.uuid4().hex
@@ -316,12 +313,7 @@ def streaming_extraction(
         run_id = uuid.uuid4().hex
         extracted = (
             extract_spans_df(batch_df, doc_type)
-            .withColumn(
-                "bucket",
-                F.pmod(
-                    F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets)
-                ),
-            )
+            .withColumn("bucket", _bucket(n_buckets))
             .withColumn("run_id", F.lit(run_id))
         )
         extracted.persist()

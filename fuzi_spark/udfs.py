@@ -4,8 +4,15 @@ The distribution contract mirrors the reference's actor layer
 (kylehughes/Fuzi Sources/Actor.swift:136-405): one DOM per document per
 task, built transiently inside an Arrow batch, with only flat value
 snapshots crossing the executor boundary. There are NO row-at-a-time
-Python UDFs anywhere (input_hint hard requirement) — everything is
-`pandas_udf` / `mapInPandas` over Arrow batches.
+Python UDFs anywhere — everything is `pandas_udf` / `mapInPandas` over
+Arrow batches.
+
+Every per-row operator in the package is written with one of two
+helpers, which own the batch loop, null inputs and the output frame:
+`row_mapper(fn, schema)` builds a `mapInPandas` function from a per-row
+`fn` returning 0..N output tuples, and `doc_column(return_type, fn)`
+builds a `pandas_udf` over a markup column from a per-document `fn`.
+Only whole-batch numpy kernels and grouped operators loop themselves.
 
 XPath/CSS expressions are compiled ONCE per executor process
 (lru_cache in xpath.py / css.py) and reused across every batch — an
@@ -15,6 +22,7 @@ Queryable.swift:299).
 
 from __future__ import annotations
 
+import re
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -81,18 +89,119 @@ EXTRACTED_SCHEMA = StructType(
 )
 
 
-def _parse_doc(markup: str, doc_type: Optional[str]):
-    """Batch-local parse helper (never raises)."""
+def _parse_doc(markup: Optional[str], doc_type: Optional[str]):
+    """Batch-local parse helper (never raises); None for a null or
+    unparseable document."""
     from .extract import sniff_doc_type
     from .htmlparser import parse_html
     from .xmlparser import parse_xml
 
+    if markup is None:
+        return None
     if doc_type not in ("html", "xml"):
         doc_type = sniff_doc_type(markup)
     try:
         return parse_html(markup) if doc_type == "html" else parse_xml(markup)
     except Exception:
         return None
+
+
+# ---------------------------------------------------------------- operator helpers
+
+_DDL_FIELD = re.compile(r"\s*`?(\w+)`?\s*(?::\s*|\s+)(.+?)\s*$", re.S)
+
+
+def _fields(schema) -> Optional[list]:
+    """(name, is_long) per field of a struct type — a StructType or a DDL
+    string ('a long, b string' or 'struct<a:long,b:string>') — or None
+    when the type is not a struct."""
+    if isinstance(schema, StructType):
+        return [(f.name, isinstance(f.dataType, LongType)) for f in schema.fields]
+    if not isinstance(schema, str):
+        return None
+    s = schema.strip()
+    if s.lower().startswith("struct<"):
+        s = s[7:-1]
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(s[start:i])
+            start = i + 1
+    parts.append(s[start:])
+    matches = [_DDL_FIELD.match(p) for p in parts]
+    if not all(matches):
+        return None
+    return [(m.group(1), m.group(2).lower() in ("long", "bigint")) for m in matches]
+
+
+def _frame(fields: list, rows: list) -> pd.DataFrame:
+    """Output tuples → a DataFrame in field order. A long column that
+    holds a None is built as nullable Int64: a plain list would coerce
+    to float64, which rounds int64 values above 2^53 (64-bit hashes).
+    No rows gives object columns: an empty float64 column does not
+    convert to an Arrow array or string type."""
+    if not rows:
+        return pd.DataFrame(columns=[name for name, _ in fields])
+    return pd.DataFrame(
+        {
+            name: pd.array(col, dtype="Int64") if is_long and None in col else col
+            for (name, is_long), col in zip(fields, zip(*rows))
+        }
+    )
+
+
+def _values(s: pd.Series) -> list:
+    """A batch column as Python values, nulls as None."""
+    if s.dtype != object and s.hasnans:
+        return s.astype(object).where(s.notna(), None).tolist()
+    return s.tolist()
+
+
+def row_mapper(fn, schema):
+    """mapInPandas function that runs `fn` once per input row.
+
+    `fn(*row)` gets the row's column values in input-column order (nulls
+    as None) and returns that row's output tuples in `schema` field
+    order: none (a dropped row), one (a per-row result, failures flagged
+    in its ok column) or many (an explode)."""
+    fields = _fields(schema)
+
+    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list = []
+            for row in zip(*(_values(pdf[c]) for c in pdf.columns)):
+                rows.extend(fn(*row))
+            yield _frame(fields, rows)
+
+    return mapper
+
+
+def doc_column(return_type, fn):
+    """pandas_udf over a markup column that runs `fn` once per document.
+
+    `fn(markup)` gets the document (None when null) and returns its
+    value: a tuple in field order for a struct `return_type`, where None
+    stands for all-null fields."""
+    fields = _fields(return_type)
+    if fields is None:
+
+        @pandas_udf(return_type)
+        def _udf(markup: pd.Series) -> pd.Series:
+            return pd.Series([fn(m) for m in markup])
+
+        return _udf
+
+    nulls = (None,) * len(fields)
+
+    @pandas_udf(return_type)
+    def _udf(markup: pd.Series) -> pd.DataFrame:
+        return _frame(fields, [nulls if v is None else v for v in map(fn, markup)])
+
+    return _udf
 
 
 # ---------------------------------------------------------------- extraction
@@ -114,67 +223,43 @@ def markup_from_spans_col(spans_col: str = "spans"):
     )
 
 
+def span_rows(doc_id, spans: list, err: int) -> list:
+    """EXTRACTED_SCHEMA rows of one document: its spans in seq order, or
+    a single seq=-1 'error'/'empty' row so lineage can count failures
+    without a second pass over the data."""
+    if err or not spans:
+        return [(doc_id, -1, "error" if err else "empty", None, None, -1, int(err))]
+    return [
+        (doc_id, seq, s["kind"], s["text"], s["media_ref"], s["offset"], 0)
+        for seq, s in enumerate(spans)
+    ]
+
+
 def make_extract_markup_fn(doc_type: Optional[str] = None):
     """mapInPandas function: (doc_id, markup[, doc_type]) batches →
-    extracted span rows.
-
-    One input row (a whole document) produces N output rows (its content
-    spans, seq-ordered). parse_error rows keep the doc_id with seq=-1 so
-    lineage can count failures without a second pass over the data."""
+    extracted span rows, N per document (span_rows)."""
     from .extract import extract_spans
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "seq": [],
-                "kind": [],
-                "text": [],
-                "media_ref": [],
-                "offset": [],
-                "parse_error": [],
-            }
-            has_type = "doc_type" in pdf.columns
-            doc_ids = pdf["doc_id"].to_numpy()
-            markups = pdf["markup"].to_numpy()
-            types = pdf["doc_type"].to_numpy() if has_type else None
-            for i in range(len(pdf)):
-                doc_id = doc_ids[i]
-                markup = markups[i]
-                dt = types[i] if types is not None else doc_type
-                if markup is None or not markup:
-                    extracted, err = [], 1
-                else:
-                    extracted, err = extract_spans(markup, dt)
-                if err or not extracted:
-                    out["doc_id"].append(doc_id)
-                    out["seq"].append(-1)
-                    out["kind"].append("error" if err else "empty")
-                    out["text"].append(None)
-                    out["media_ref"].append(None)
-                    out["offset"].append(-1)
-                    out["parse_error"].append(int(err))
-                    continue
-                for seq, s in enumerate(extracted):
-                    out["doc_id"].append(doc_id)
-                    out["seq"].append(seq)
-                    out["kind"].append(s["kind"])
-                    out["text"].append(s["text"])
-                    out["media_ref"].append(s["media_ref"])
-                    out["offset"].append(s["offset"])
-                    out["parse_error"].append(0)
-            yield pd.DataFrame(out)
+    def rows(doc_id, markup, dt=doc_type):
+        if not markup:
+            return span_rows(doc_id, [], 1)
+        return span_rows(doc_id, *extract_spans(markup, dt))
 
-    return fn
+    return row_mapper(rows, EXTRACTED_SCHEMA)
 
 
-def extract_spans_df(docs: DataFrame, doc_type: Optional[str] = None) -> DataFrame:
-    """docs(doc_id, spans[, doc_type]) → extracted spans, one row per span.
-    The span→markup reassembly happens JVM-side (markup_from_spans_col)."""
+def markup_select(docs: DataFrame) -> DataFrame:
+    """docs(doc_id, spans[, doc_type]) → (doc_id, markup[, doc_type]):
+    the span→markup reassembly, JVM-side (markup_from_spans_col)."""
     cols = [F.col("doc_id"), markup_from_spans_col("spans").alias("markup")]
     if "doc_type" in docs.columns:
         cols.append(F.col("doc_type"))
-    return extract_markup_df(docs.select(*cols), doc_type)
+    return docs.select(*cols)
+
+
+def extract_spans_df(docs: DataFrame, doc_type: Optional[str] = None) -> DataFrame:
+    """docs(doc_id, spans[, doc_type]) → extracted spans, one row per span."""
+    return extract_markup_df(markup_select(docs), doc_type)
 
 
 def extract_markup_df(docs: DataFrame, doc_type: Optional[str] = None) -> DataFrame:
@@ -193,34 +278,35 @@ def extract_markup_df(docs: DataFrame, doc_type: Optional[str] = None) -> DataFr
 # ---------------------------------------------------------------- query UDFs
 
 
-def _snapshot_series(markup_series: pd.Series, expr: str, doc_type, ns, is_css: bool):
-    from .css import css_to_xpath
+def _snapshots(expr: str, doc_type, ns):
     from .query import element_snapshot, xpath as run_xpath
 
-    xp = css_to_xpath(expr) if is_css else expr
-    out = []
-    for markup in markup_series:
-        if markup is None:
-            out.append([])
-            continue
+    def snapshots(markup):
         doc = _parse_doc(markup, doc_type)
         if doc is None:
-            out.append([])
-            continue
-        if ns:
-            doc.namespaces.update(ns)
-        out.append([element_snapshot(n) for n in run_xpath(doc, xp)])
-    return pd.Series(out)
+            return []
+        return [element_snapshot(n) for n in run_xpath(doc, expr, ns)]
+
+    return snapshots
+
+
+def _eval(expr: str, doc_type, ns, value):
+    """markup → value(XPathResult of expr), None when the document does
+    not parse or the expression is invalid."""
+    from .query import eval_xpath
+
+    def evaluate(markup):
+        doc = _parse_doc(markup, doc_type)
+        r = eval_xpath(doc, expr, ns) if doc is not None else None
+        return value(r) if r is not None else None
+
+    return evaluate
 
 
 def xpath_select(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
-    """Column function: markup string → array<ElementSnapshot> of XPath hits."""
-
-    @pandas_udf(SNAPSHOT_ARRAY)
-    def _udf(markup: pd.Series) -> pd.Series:
-        return _snapshot_series(markup, expr, doc_type, ns, is_css=False)
-
-    return _udf
+    """Column function: markup string → array<ElementSnapshot> of XPath hits.
+    `ns` adds prefixes after the document's own (query.xpath extra_ns)."""
+    return doc_column(SNAPSHOT_ARRAY, _snapshots(expr, doc_type, ns))
 
 
 def css_select(selector: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
@@ -228,107 +314,50 @@ def css_select(selector: str, doc_type: Optional[str] = None, ns: Optional[dict]
     The selector is compiled to XPath at plan-build time (driver side)."""
     from .css import css_to_xpath
 
-    compiled = css_to_xpath(selector)
-
-    @pandas_udf(SNAPSHOT_ARRAY)
-    def _udf(markup: pd.Series) -> pd.Series:
-        return _snapshot_series(markup, compiled, doc_type, ns, is_css=False)
-
-    return _udf
+    return doc_column(SNAPSHOT_ARRAY, _snapshots(css_to_xpath(selector), doc_type, ns))
 
 
 def xpath_string(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
     """Column function: markup → string(XPath expr). The cheap common case:
     only a string crosses Arrow, not full snapshots."""
-    from .query import eval_xpath
-
-    @pandas_udf(StringType())
-    def _udf(markup: pd.Series) -> pd.Series:
-        out = []
-        for m in markup:
-            doc = _parse_doc(m, doc_type) if m is not None else None
-            if doc is None:
-                out.append(None)
-                continue
-            if ns:
-                doc.namespaces.update(ns)
-            r = eval_xpath(doc, expr)
-            out.append(r.string_value if r is not None else None)
-        return pd.Series(out, dtype=object)
-
-    return _udf
+    return doc_column(StringType(), _eval(expr, doc_type, ns, lambda r: r.string_value))
 
 
 def xpath_double(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
     """Column function: markup → number(XPath expr) (count/sum/...)."""
-    from .query import eval_xpath
-
-    @pandas_udf(DoubleType())
-    def _udf(markup: pd.Series) -> pd.Series:
-        out = []
-        for m in markup:
-            doc = _parse_doc(m, doc_type) if m is not None else None
-            if doc is None:
-                out.append(None)
-                continue
-            if ns:
-                doc.namespaces.update(ns)
-            r = eval_xpath(doc, expr)
-            out.append(r.double_value if r is not None else None)
-        return pd.Series(out, dtype="float64")
-
-    return _udf
+    return doc_column(DoubleType(), _eval(expr, doc_type, ns, lambda r: r.double_value))
 
 
 def xpath_eval(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
     """Column function: markup → XPathResult struct (bool, double, string)
     — the reference's eval(xpath:) surface (Queryable.swift:252-257)."""
-    from .query import eval_xpath
 
-    @pandas_udf(XPATH_RESULT_STRUCT)
-    def _udf(markup: pd.Series) -> pd.DataFrame:
-        rows = {"bool_value": [], "double_value": [], "string_value": []}
-        for m in markup:
-            doc = _parse_doc(m, doc_type) if m is not None else None
-            r = eval_xpath(doc, expr) if doc is not None else None
-            rows["bool_value"].append(r.bool_value if r else None)
-            rows["double_value"].append(r.double_value if r else None)
-            rows["string_value"].append(r.string_value if r else None)
-        return pd.DataFrame(rows)
+    def triple(r):
+        return (r.bool_value, r.double_value, r.string_value)
 
-    return _udf
+    return doc_column(XPATH_RESULT_STRUCT, _eval(expr, doc_type, ns, triple))
+
+
+DOC_META_STRUCT = StructType(
+    [
+        StructField("version", StringType()),
+        StructField("encoding", StringType()),
+        StructField("root_tag", StringType()),
+        StructField("title", StringType()),
+        StructField("parse_error", IntegerType()),
+    ]
+)
 
 
 def doc_meta(doc_type: Optional[str] = None):
     """Column function: markup → struct(version, encoding, root_tag,
     title, parse_error) — DocumentSnapshot surface (Actor.swift:67-86)."""
-    schema = StructType(
-        [
-            StructField("version", StringType()),
-            StructField("encoding", StringType()),
-            StructField("root_tag", StringType()),
-            StructField("title", StringType()),
-            StructField("parse_error", IntegerType()),
-        ]
-    )
 
-    @pandas_udf(schema)
-    def _udf(markup: pd.Series) -> pd.DataFrame:
-        rows = {"version": [], "encoding": [], "root_tag": [], "title": [], "parse_error": []}
-        for m in markup:
-            doc = _parse_doc(m, doc_type) if m is not None else None
-            if doc is None or doc.root is None:
-                rows["version"].append(None)
-                rows["encoding"].append(None)
-                rows["root_tag"].append(None)
-                rows["title"].append(None)
-                rows["parse_error"].append(1)
-            else:
-                rows["version"].append(doc.version)
-                rows["encoding"].append(doc.encoding)
-                rows["root_tag"].append(doc.root.tag)
-                rows["title"].append(doc.title if doc.is_html else None)
-                rows["parse_error"].append(0)
-        return pd.DataFrame(rows)
+    def meta(markup):
+        doc = _parse_doc(markup, doc_type)
+        if doc is None or doc.root is None:
+            return (None, None, None, None, 1)
+        title = doc.title if doc.is_html else None
+        return (doc.version, doc.encoding, doc.root.tag, title, 0)
 
-    return _udf
+    return doc_column(DOC_META_STRUCT, meta)

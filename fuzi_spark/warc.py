@@ -29,7 +29,7 @@ offsets are per-blob, deterministic.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 _MAGIC = b"WARC/"
 
@@ -136,36 +136,20 @@ def parse_warc_df(archives, data_col: str = "data", id_col: str = "archive_id"):
     10^12 records, repartition the archive table first (the extraction
     pipeline's salting applies — giant archives are the skew unit here).
     """
-    import pandas as pd
+    from .udfs import row_mapper
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, blob in zip(pdf[id_col], pdf[data_col]):
-                if blob is None:
-                    continue
-                recs = parse_warc(bytes(blob))
-                for idx, r in enumerate(recs):
-                    rows.append(
-                        (
-                            int(aid),
-                            idx,
-                            r["offset"],
-                            r["warc_type"],
-                            r["target_uri"],
-                            r["http_status"],
-                            r["content_type"],
-                            len(r["body"]),
-                            r["body"].decode("utf-8", "replace"),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "archive_id", "record_idx", "offset", "warc_type",
-                    "target_uri", "http_status", "content_type",
-                    "body_len", "body_text",
-                ],
+    def rows(aid, blob):
+        if blob is None:
+            return []
+        return [
+            (
+                int(aid), idx, r["offset"], r["warc_type"], r["target_uri"],
+                r["http_status"], r["content_type"], len(r["body"]),
+                r["body"].decode("utf-8", "replace"),
             )
+            for idx, r in enumerate(parse_warc(bytes(blob)))
+        ]
 
-    return archives.mapInPandas(gen, schema=WARC_RECORD_SCHEMA)
+    return archives.select(id_col, data_col).mapInPandas(
+        row_mapper(rows, WARC_RECORD_SCHEMA), schema=WARC_RECORD_SCHEMA
+    )

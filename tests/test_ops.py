@@ -9158,7 +9158,7 @@ class TestMicrodata:
         ]
 
     def test_malformed_markup_never_raises(self):
-        assert self._run("<div itemscope><<<%%") == [] or True
+        assert self._run("<div itemscope><<<%%") == []
         assert self._run("") == []
         assert isinstance(self._run("<p>no microdata</p>"), list)
 
@@ -12792,6 +12792,62 @@ class TestVideoContainers:
             got["v/2"].keyframes is None
         # coded-frame decode is honestly absent, always
         assert all(r.decode_ok == 0 for r in got.values())
+
+    def test_spark_operator_bit_flips(self, spark):
+        """Totality through the Spark surface: the top bit of every
+        byte of an MP4 and an M4A flipped in turn (each field's high
+        bit drives a 32-bit count or size past int32) — one job, one
+        row per input, no Arrow overflow. A planted stts count or stsz
+        size above int32 is a parse_ok=0 row; a planted stss entry 0
+        (1-based, so sample -1) is dropped, not a keyframe."""
+        import struct
+
+        from fuzi_spark.ops.mp4 import (
+            build_m4a,
+            build_mp4,
+            m4a_meta_df,
+            video_keyframes_df,
+        )
+        from fuzi_spark.ops.multimodal import MEDIA_SCHEMA
+
+        def put(b, box, at, value):
+            out = bytearray(b)
+            p = b.index(box) + at
+            out[p:p + 4] = struct.pack(">I", value)
+            return out
+
+        mp4 = build_mp4(sizes=[100, 80, 120], sync=[0, 2])
+        m4a = build_m4a()
+        planted = {
+            "p/stts": put(mp4, b"stts", 12, 0x80000003),
+            "p/stsz": put(mp4, b"stsz", 16, 0x80000064),
+            "p/stss": put(mp4, b"stss", 12, 0),
+        }
+        rows = [(ref, "video", b, None, None, None, None)
+                for ref, b in planted.items()]
+        for i in range(len(mp4)):
+            mut = bytearray(mp4)
+            mut[i] ^= 0x80
+            rows.append((f"v/{i}", "video", mut, None, None, None, None))
+        for i in range(len(m4a)):
+            mut = bytearray(m4a)
+            mut[i] ^= 0x80
+            rows.append((f"a/{i}", "audio", mut, None, None, None, None))
+        rows.append(("a/stts", "audio", put(m4a, b"stts", 12, 0x80000064),
+                     None, None, None, None))
+        media = spark.createDataFrame(rows, MEDIA_SCHEMA)
+
+        kf = {r.media_ref: r for r in video_keyframes_df(media).collect()}
+        assert len(kf) == len(mp4) + len(planted)
+        assert kf["p/stts"].parse_ok == 0 and kf["p/stsz"].parse_ok == 0
+        assert kf["p/stss"].parse_ok == 1
+        assert [k.idx for k in kf["p/stss"].keyframes] == [2]
+        for r in kf.values():
+            assert all(k.idx >= 0 for k in r.keyframes or ())
+
+        m4 = {r.media_ref: r for r in m4a_meta_df(media).collect()}
+        assert len(m4) == len(m4a) + 1
+        assert m4["a/stts"].n_samples is None
 
 
 def test_image_near_dups_trims_knob_routing(spark):
