@@ -1,264 +1,39 @@
-"""Benchmark harness.
+"""Operator battery: every `__spark_entry__.queries()` entry, timed.
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total query seconds>, "unit": "sec",
-   "queries": {...per-query seconds...}, "sf": <dir>,
-   "extraction": {"docs": N, "docs_per_sec@8": x, "docs_per_sec@32": y,
-                   "scaling_efficiency_8_to_32": e}}
+   "sf": <dir>, "queries": {...per-query seconds...},
+   "value_cold": ..., "queries_cold": {...},
+   "query_timeouts": [...], "query_errors": {name: message}}
 
-Two parts, scaling FIRST (it is the north-rule gate and gets the fresh
-loadavg-wait + retry budgets):
-1. the north_rule scaling evidence: the SAME extraction job on the SAME
-   synthetic corpus at two parallelism levels (local[1] vs local[4] as
-   the sandbox stand-in for N vs 4N executors — smallest pair; see
-   _run_scaling for why; 2→8 and 8→32 reported alongside), reporting
-   docs/sec at both and the throughput scaling efficiency
-   eff = (thr_4N / thr_N) / 4.
-2. headline query battery at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-   on local[$SPARK_GRAFT_CPUS] (default 32) — per-query wall seconds.
+Runs every query at $SPARK_GRAFT_SF_DIR (default: `SF_DIR` below) on
+local[<cores this process may run on>]. Each query is timed by `run_query`,
+which materializes every output column. A query that raises is listed under
+`query_errors` and left out of `value`.
+
+The extraction job's docs/sec, its N→4N scaling and its per-layer split
+are measured by perfbench (`python3 perfbench/run.py --trace 1`).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
+import threading
 import time
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# 120 copies → 600k docs. Sized so the per-run fixed overhead (~2.5-3 s of
-# job scheduling / stage barriers / parquet listing, measured round 2 by
-# fitting t_c = W/c + o across core counts) amortizes: at 48 copies the
-# overhead alone capped true 1→4 efficiency at ~0.80 — exactly the gate —
-# while at 120 copies the same job measures ~0.90. The 10^12-doc target
-# job amortizes fixed overhead to nil, so the bigger batch is the MORE
-# faithful proxy for the north rule, not a benchmark trick.
-DOC_COPIES = int(os.environ.get("SPARK_GRAFT_DOC_COPIES", "120"))
-SKIP_SCALING = os.environ.get("SPARK_GRAFT_SKIP_SCALING", "") == "1"
-
-BENCH_QUERIES = [
-    "parse_roundtrip",
-    "extract_flagship",
-    "extract_interleaved",
-    "css_select",
-    "snapshot_select",
-    "lineage",
-    "verification_join",
-    "dedup_exact",
-    "code_dedup",
-    "dedup_minhash",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_keep",
-    "edit_verify",
-    "stream_dedup",
-    "stream_near_dedup",
-    "extract_pdf",
-    "extract_pdf_cmap",
-    "text_quality",
-    "repetition",
-    "fingerprint",
-    "similarity_topk",
-    "similarity_lsh",
-    "embedding_near_dups",
-    "line_dedup",
-    "hash_sample",
-    "bloom_seen",
-    "decontaminate",
-    "redact_pii",
-    "redact_cc",
-    "pack_sequences",
-    "skew_report",
-    "domain_stats",
-    "blocked_domains",
-    "top_terms",
-    "corpus_report",
-    "link_graph",
-    "vocab_table",
-    "repeated_passages",
-    "lm_perplexity",
-    "perplexity_buckets",
-    "detect_license",
-    "chunk_documents",
-    "url_dedup",
-    "encode_documents",
-    "remove_passages",
-    "interleaved_text",
-    "media_balance",
-    "image_pixels_deep",
-    "image_pixels_12bit",
-    "audio_flac",
-    "audio_mp3_pcm",
-    "video_keyframes",
-    "video_container_dedup",
-    "curate",
-    "materialize_packs",
-    "group_quota",
-    "split_by_group",
-    "epoch_order",
-    "mixture_sample",
-    "temperature_mix",
-    "normalize_text",
-    "semantic_dedup",
-    "semantic_decontaminate",
-    "content_filter",
-    "domain_rank",
-    "page_metadata",
-    "parse_warc",
-    "parse_archive",
-    "apply_robots",
-    "strip_media_chrome",
-    "sitemap_urls",
-    "extract_feed",
-    "to_markdown",
-    "extract_tables",
-    "anchor_text",
-    "json_ld",
-    "readability",
-    "hreflang",
-    "image_captions",
-    "doc_outline",
-    "fix_mojibake",
-    "detect_code",
-    "code_quality",
-    "image_pixels",
-    "image_exif",
-    "exif_strip",
-    "span_language",
-    "snapshot_delta",
-    "audio_features",
-    "audio_spectrogram",
-    "audio_mp3",
-    "audio_aac_meta",
-    "audio_m4a_meta",
-    "video_frames",
-    "subtitles",
-    "crawl_frontier",
-    "crawl_schedule",
-    "media_context",
-    "bpe_encode",
-    "image_dedup",
-    "video_dedup",
-    "video_scenes",
-    "nb_classifier",
-    "reflow_text",
-    "split_sentences",
-    "site_template",
-    "hidden_text",
-    "publish_date",
-    "paywall",
-    "script_mix",
-    "compress_ratio",
-    "url_signals",
-    "bitext_pairs",
-    "media_quality",
-    "interleave_episodes",
-    "dsir_select",
-    "audio_dedup",
-    "bitext_margin",
-    "asof_join",
-    "range_join",
-    "merge_upsert",
-    "zorder_layout",
-    "heavy_hitters",
-    "embedding_quantize",
-    "hard_negatives",
-    "hll_distinct",
-    "bm25_search",
-    "hash_embed",
-    "thread_assembly",
-    "preference_pairs",
-    "chat_validate",
-    "loss_mask",
-    "parse_jsonl",
-    "rate_anomalies",
-    "text_semantic_dedup",
-    "resolve_redirects",
-    "fim_split",
-    "span_corruption",
-    "length_quantiles",
-    "multimodal_dedup",
-    "embedding_pca",
-    "embedding_outliers",
-    "kmeans_clusters",
-    "funnel",
-    "retention",
-    "gap_fill",
-    "attribution",
-    "collocations",
-    "ngram_novelty",
-    "extract_citations",
-    "section_chunks",
-    "pseudonymize",
-    "strip_running_lines",
-    "span_validate",
-    "media_integrity",
-    "gazetteer_tag",
-    "rrf_fuse",
-    "source_drift",
-    "balanced_shards",
-    "pr_curve",
-    "near_decontaminate",
-    "pq_encode",
-    "domain_weights",
-    "bradley_terry",
-    "shard_manifest",
-    "corpus_rollup",
-    "corpus_overlap",
-    "microdata",
-    "code_blocks",
-    "token_budget",
-    "triangle_count",
-    "label_agreement",
-    "pareto_select",
-    "edit_join",
-    "kcore",
-    "retrieval_eval",
-    "hll_rollup",
-    "cdc_dedup",
-    "span_diff",
-    "tokenizer_fertility",
-    "markov_transitions",
-    "reliability_bins",
-    "weighted_sample",
-    "skew_join",
-    "quantile_rollup",
-    "frequent_pairs",
-    "assign_ids",
-    "vocab_rank",
-    "containment_join",
-    "score_percentiles",
-    "skipgram_pairs",
-    "similarity_ivfpq",
-    "robust_outliers",
-    "group_sample",
-    "join_size",
-    "length_buckets",
-    "scd2_history",
-    "quantile_map",
-    "containment_pipeline",
-    "set_similarity",
-    "weighted_draws",
-    "poisson_bootstrap",
-    "bloom_join",
-    "stream_histogram",
-]
+QUERY_TIMEOUT_S = int(os.environ.get("SPARK_GRAFT_QUERY_TIMEOUT", "180"))
 
 
-def make_session(cores: int, name: str):
+def make_session(cores: int):
     from pyspark.sql import SparkSession
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-        SparkSession._instantiatedSession = None
     return (
         SparkSession.builder.master(f"local[{cores}]")
-        .appName(name)
+        .appName("bench-queries")
         .config("spark.sql.shuffle.partitions", str(max(cores * 2, 16)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -271,409 +46,102 @@ def make_session(cores: int, name: str):
     )
 
 
-def build_bench_corpus(spark, sf_dir: str, copies: int, out_path: str) -> int:
-    """Deterministic synthetic interleaved corpus: each document row is
-    amplified into `copies` realistic pages (title, nav boilerplate,
-    headings, paragraphs, list, images) encoded as multi-span rows."""
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    amplified = docs.crossJoin(
-        spark.range(copies).select(F.col("id").alias("copy"))
-    ).select(
-        F.concat(
-            F.col("doc_id").cast("string"), F.lit("-"), F.col("copy").cast("string")
-        ).alias("doc_id"),
-        "text",
-        "source",
-        "lang",
-        "copy",
-    )
-    head = F.concat(
-        F.lit("<html><head><title>"),
-        F.col("source"),
-        F.lit(" page "),
-        F.col("copy").cast("string"),
-        F.lit('</title><style>p{margin:0}</style><script>var a=1;</script>'
-              '</head><body><nav><a href="/">Home</a> <a href="/x">X</a> '
-              '<a href="/y">Y</a></nav><h1>'),
-        F.col("source"),
-        F.lit("</h1><p>"),
-        F.col("text"),
-        F.lit("</p><h2>Section</h2><p>"),
-        F.col("text"),
-        F.lit("</p><ul><li>alpha "),
-        F.col("lang"),
-        F.lit("</li><li>beta</li></ul><p>"),
-    )
-    spans = F.array(
-        F.struct(
-            F.lit("text").alias("kind"),
-            head.alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).alias("offset"),
-        ),
-        F.struct(
-            F.lit("text").alias("kind"),
-            F.col("text").alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(1).alias("offset"),
-        ),
-        F.struct(
-            F.lit("text").alias("kind"),
-            F.lit("</p>").alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(2).alias("offset"),
-        ),
-        F.struct(
-            F.lit("media").alias("kind"),
-            F.concat(
-                F.lit('<img src="img/'), F.col("doc_id"), F.lit('.jpg" alt="fig">')
-            ).alias("text"),
-            F.concat(F.lit("img/"), F.col("doc_id"), F.lit(".jpg")).alias("media_ref"),
-            F.lit(3).alias("offset"),
-        ),
-        F.struct(
-            F.lit("text").alias("kind"),
-            F.lit("</body></html>").alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(4).alias("offset"),
-        ),
-    )
-    # write pre-split: a single parquet file would serialize the first
-    # shuffle-write stage of every downstream run
-    corpus = amplified.select("doc_id", spans.alias("spans")).repartition(64, "doc_id")
-    corpus.write.mode("overwrite").parquet(out_path)
-    return spark.read.parquet(out_path).count()
+def run_query(df) -> None:
+    """The timed action. A noop write computes every output column;
+    `count()` would let the optimizer prune Python stages whose columns
+    nothing reads, and their cost would not be timed."""
+    df.write.format("noop").mode("overwrite").save()
 
 
-PARTS_MULT = int(os.environ.get("SPARK_GRAFT_PARTS_MULT", "4"))
+def timed_run(spark, df) -> tuple[float, bool]:
+    """(wall seconds, timed out) of `run_query(df)` under a watchdog.
 
+    The host occasionally stalls a handful of tasks for many minutes under
+    co-tenant load (observed: a stage stuck at 54/64 for 10+ min on a query
+    that normally takes ~1 s, fine on rerun). One wedged query must not
+    block the whole battery: past QUERY_TIMEOUT_S its jobs are cancelled.
+    An exception raised by the query is raised here."""
+    done = {}
 
-def run_extraction(spark, corpus_path: str, cores: int) -> float:
-    """Return wall seconds for the full extraction pipeline (count action)."""
-    from pyspark.sql import functions as F
+    def run():
+        try:
+            run_query(df)
+        except Exception as e:
+            done["err"] = e
 
-    from fuzi_spark.pipeline import run_extraction_pipeline
-
-    docs = spark.read.parquet(corpus_path)
     t0 = time.time()
-    extracted, lineage = run_extraction_pipeline(
-        spark,
-        docs,
-        output_dir=None,
-        n_buckets=64,
-        # 4 tasks per core: finer tasks smooth co-tenant stalls and
-        # stragglers (A/B'd equal-or-better than 2 per core)
-        num_partitions=cores * PARTS_MULT,
-        doc_type="html",
-    )
-    # one action: the lineage agg consumes every extracted row, so counting
-    # it materializes the whole pipeline exactly once
-    lineage.count()
-    return time.time() - t0
+    th = threading.Thread(target=run, daemon=True)
+    th.start()
+    th.join(QUERY_TIMEOUT_S)
+    if th.is_alive():
+        spark.sparkContext.cancelAllJobs()
+        th.join(30)
+        return time.time() - t0, True
+    if "err" in done:
+        raise done["err"]
+    return time.time() - t0, False
 
 
-def _scaling_child(corpus_path: str, cores: int) -> None:
-    """Child-process entry: measured extraction runs on a FRESH JVM.
+def time_query(spark, fn) -> tuple[float, float, bool]:
+    """(cold seconds, best seconds, timed out) of one battery query.
 
-    Isolation matters: in local mode every SparkSession in a process shares
-    one JVM via the py4j gateway, so back-to-back measurements accumulate
-    heap garbage and JIT/GC state — measured drift of 2-2.5× between the
-    first and last of six same-process runs. A subprocess per measurement
-    is the sandbox equivalent of 'each cluster size is its own set of
-    executors'.
+    The first (cold) pass pays per-plan codegen compilation and
+    Python-worker spin-up; the second measures steady-state execution.
+    clearCache between passes drops persisted intermediates (LSH bands,
+    shingle sets), so every pass re-executes ALL the work; only JVM-level
+    compilation artifacts are reused, as a long-running cluster job would
+    amortize them. A cold pass that times out is retried once."""
 
-    Two measured runs per child, min reported — SYMMETRIC at every core
-    count (an asymmetric protocol would gift the wide levels a JIT/load
-    advantage and inflate the efficiency ratio). The min cancels transient
-    co-tenant stalls that land inside a single run without paying another
-    JVM start."""
-    s = make_session(cores, f"bench-extract-{cores}")
-    s.sparkContext.setLogLevel("ERROR")
-    from fuzi_spark.udfs import extract_spans_df
+    def one_pass():
+        spark.catalog.clearCache()
+        return timed_run(spark, fn(spark, SF_DIR))
 
-    # warm JIT + python workers on a slice before measuring
-    extract_spans_df(s.read.parquet(corpus_path).sample(0.1), "html").count()
-    secs = min(run_extraction(s, corpus_path, cores) for _ in range(2))
-    print(f"SCALING_RESULT {secs:.3f}", flush=True)
-
-
-LOADAVG_GATE = float(os.environ.get("SPARK_GRAFT_LOADAVG_GATE", "3.0"))
-LOADAVG_WAIT_S = int(os.environ.get("SPARK_GRAFT_LOADAVG_WAIT", "180"))
-# cumulative waiting budget across the WHOLE bench: per-sample waits must
-# never stack into an unbounded stall if the host stays busy for an hour
-LOADAVG_TOTAL_WAIT_S = int(os.environ.get("SPARK_GRAFT_LOADAVG_TOTAL_WAIT", "600"))
-_wait_spent = 0.0
-
-
-def _wait_for_quiet_host(tag: str) -> float:
-    """Gate a measurement on co-tenant load: the sandbox VM shows loadavg
-    spikes of 7-15 with zero local processes, and a wide-parallelism run
-    needs its vCPUs simultaneously free. Wait (bounded per sample AND
-    cumulatively) until the 1-min loadavg drops below the gate; returns
-    the loadavg we started under."""
-    global _wait_spent
-    t0 = time.time()
-    while True:
-        load1 = os.getloadavg()[0]
-        waited = time.time() - t0
-        if (
-            load1 < LOADAVG_GATE
-            or waited > LOADAVG_WAIT_S
-            or _wait_spent + waited > LOADAVG_TOTAL_WAIT_S
-        ):
-            _wait_spent += waited
-            if load1 >= LOADAVG_GATE:
-                print(
-                    f"# loadavg gate gave up for {tag}: proceeding at "
-                    f"load {load1:.1f} (waited {waited:.0f}s, "
-                    f"total {_wait_spent:.0f}s)",
-                    file=sys.stderr,
-                )
-            return load1
-        time.sleep(10)
-
-
-def _run_scaling_subprocess(corpus_path: str, cores: int) -> float:
-    import subprocess
-
-    _wait_for_quiet_host(f"extract@{cores}")
-    out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--scaling-child",
-         corpus_path, str(cores)],
-        capture_output=True, text=True, timeout=1200,
-    )
-    for line in out.stdout.splitlines():
-        if line.startswith("SCALING_RESULT "):
-            return float(line.split()[1])
-    raise RuntimeError(
-        f"scaling child (cores={cores}) produced no result:\n{out.stderr[-2000:]}"
-    )
-
-
-def _build_corpus_guarded(spark, corpus_path: str):
-    """Corpus build under a watchdog (same wedge insurance as the battery):
-    one retry, None if it wedges twice."""
-    import threading
-
-    def build_once():
-        box = {}
-
-        def run():
-            try:
-                box["n"] = build_bench_corpus(spark, SF_DIR, DOC_COPIES, corpus_path)
-            except Exception as e:
-                box["err"] = e
-
-        th = threading.Thread(target=run, daemon=True)
-        th.start()
-        th.join(600)
-        if th.is_alive():
-            spark.sparkContext.cancelAllJobs()
-            th.join(30)
-            return None
-        if "err" in box:
-            raise box["err"]
-        return box.get("n")
-
-    n_docs = build_once()
-    if n_docs is None:
-        n_docs = build_once()
-    if n_docs is None:
-        raise RuntimeError("bench corpus build wedged twice")
-    return n_docs
-
-
-def _run_scaling(corpus_path: str, n_docs: int) -> dict:
-    """The north-rule scaling evidence. Runs FIRST in the bench (before the
-    battery) so the headline 1→4 measurement gets the full loadavg-wait
-    and retry budgets — two rounds of driver artifacts lost the gate to
-    budget exhaustion after the battery had already spent it."""
-    extraction = {"docs": n_docs}
-    # Scaling evidence at three N→4N pairs — 1→4 (sanctioned headline),
-    # 2→8, and 8→32 — mirrored ordering + per-level minimum: the sandbox
-    # VM shows strongly time-varying external load, so interleaving
-    # cancels drift that a sequential protocol would alias into the
-    # efficiency number.
-    #
-    # Why 1→4 is the headline N→4N pair: contention with co-tenant load
-    # and the single-host memory bus grows with run WIDTH, so wider pairs
-    # fold a host artifact into the job's scaling curve — an artifact a
-    # real 4N-executor cluster (4N memory buses, dedicated cores) does
-    # not have. The smallest-N pair isolates the job's intrinsic serial
-    # fraction, which is what the north rule's efficiency criterion is
-    # about. The wider pairs are reported alongside, not hidden.
-    samples: dict[int, list[float]] = {1: [], 2: [], 4: [], 8: [], 32: []}
-    for cores in (1, 4, 2, 8, 32, 4, 1, 32, 8, 2, 4):
-        samples[cores].append(_run_scaling_subprocess(corpus_path, cores))
-        print(
-            f"# sample extract@{cores}: {samples[cores][-1]:.1f}s",
-            file=sys.stderr,
-        )
-
-    def _eff(lo: int, hi: int) -> float:
-        return min(samples[hi]) and (
-            (n_docs / min(samples[hi])) / (n_docs / min(samples[lo])) / 4.0
-        )
-
-    # min-of-k per level is the declared estimator of per-level quiet
-    # capability (the host shows co-tenant loadavg spikes of 7-15 with
-    # zero local processes; wide runs are hit hardest). Extra samples
-    # only sharpen a level's min, so when the headline pair lands low
-    # keep sampling BOTH its levels until the ratio stabilizes — under a
-    # wall-clock budget so a busy host can never stall the bench into a
-    # driver timeout.
-    deadline = time.time() + int(os.environ.get("SPARK_GRAFT_RETRY_BUDGET", "600"))
-    retries = 0
-    while _eff(1, 4) < 0.85 and retries < 8 and time.time() < deadline:
-        retries += 1
-        samples[4].append(_run_scaling_subprocess(corpus_path, 4))
-        if retries % 2 == 0:
-            samples[1].append(_run_scaling_subprocess(corpus_path, 1))
-    retries = 0
-    while _eff(2, 8) < 0.85 and retries < 4 and time.time() < deadline:
-        retries += 1
-        samples[8].append(_run_scaling_subprocess(corpus_path, 8))
-        # the 2-core level is load-stable (needs only 2 free vCPUs);
-        # re-sample it on alternate retries only
-        if retries % 2 == 0:
-            samples[2].append(_run_scaling_subprocess(corpus_path, 2))
-    retries = 0
-    while _eff(8, 32) < 0.5 and retries < 2 and time.time() < deadline:
-        retries += 1
-        samples[32].append(_run_scaling_subprocess(corpus_path, 32))
-    extraction["scaling_samples"] = {
-        str(c): [round(s, 2) for s in v] for c, v in samples.items()
-    }
-    for cores in (1, 2, 4, 8, 32):
-        secs = min(samples[cores])
-        extraction[f"secs@{cores}"] = round(secs, 2)
-        extraction[f"docs_per_sec@{cores}"] = round(n_docs / secs, 1)
-    extraction["scaling_efficiency_1_to_4"] = round(_eff(1, 4), 3)
-    extraction["scaling_efficiency_2_to_8"] = round(_eff(2, 8), 3)
-    extraction["scaling_efficiency_8_to_32"] = round(_eff(8, 32), 3)
-    # the sanctioned N→4N evidence for the north rule
-    extraction["scaling_efficiency_n_to_4n"] = extraction[
-        "scaling_efficiency_1_to_4"
-    ]
-    return extraction
+    dt_cold, timed_out = one_pass()
+    if timed_out:
+        dt_cold, timed_out = one_pass()
+    dt_steady, timed_out2 = one_pass()
+    best = dt_cold if timed_out2 else min(dt_steady, dt_cold)
+    if best > 2.0:
+        # expensive queries get a third pass: a single co-tenant stall
+        # otherwise lands in the recorded steady number for good
+        dt3, timed_out3 = one_pass()
+        if not timed_out3:
+            best = min(best, dt3)
+    spark.catalog.clearCache()
+    return dt_cold, best, timed_out
 
 
 def main():
-    global _wait_spent
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as E
 
+    spark = make_session(len(os.sched_getaffinity(0)))
+    spark.sparkContext.setLogLevel("ERROR")
     result = {
-        "metric": "end-to-end extraction throughput (docs/sec) + headline query seconds",
+        "metric": "operator battery: per-query seconds",
         "unit": "sec",
         "sf": SF_DIR,
         "queries": {},
+        "queries_cold": {},
+        "query_timeouts": [],
+        "query_errors": {},
     }
-
-    # -------- PART 1: the north-rule scaling evidence, FIRST --------
-    tmp = tempfile.mkdtemp(prefix="fuzi_bench_")
-    corpus_path = os.path.join(tmp, "corpus")
-    try:
-        _wait_for_quiet_host("corpus-build")
-        build_spark = make_session(CPUS, "bench-corpus")
-        build_spark.sparkContext.setLogLevel("ERROR")
-        n_docs = _build_corpus_guarded(build_spark, corpus_path)
-        if SKIP_SCALING:
-            secs = run_extraction(build_spark, corpus_path, CPUS)
-            result["extraction"] = {
-                "docs": n_docs,
-                f"secs@{CPUS}": round(secs, 2),
-                f"docs_per_sec@{CPUS}": round(n_docs / secs, 1),
-            }
-            build_spark.stop()
-        else:
-            # no battery JVM alive during the measured children
-            build_spark.stop()
-            _wait_spent = 0.0  # scaling gets the full wait budget
-            result["extraction"] = _run_scaling(corpus_path, n_docs)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    # -------- PART 2: headline query battery --------
-    _wait_spent = 0.0
-    _wait_for_quiet_host("battery")
-    spark = make_session(CPUS, "bench-queries")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = E.queries()
-    total = 0.0
-    # Per-query watchdog: the sandbox host occasionally stalls a handful of
-    # tasks for many minutes under co-tenant load (observed: a stage stuck
-    # at 54/64 for 10+ min on a query that normally takes ~1 s, fine on
-    # rerun). One wedged query must not block the whole bench — cancel,
-    # retry once, then record the elapsed wall and move on.
-    QUERY_TIMEOUT_S = int(os.environ.get("SPARK_GRAFT_QUERY_TIMEOUT", "180"))
-
-    def timed_count(df) -> tuple[float, bool]:
-        import threading
-
-        done = {}
-
-        def run():
-            try:
-                done["n"] = df.count()
-            except Exception as e:
-                done["err"] = str(e)
-
-        t0 = time.time()
-        th = threading.Thread(target=run, daemon=True)
-        th.start()
-        th.join(QUERY_TIMEOUT_S)
-        if th.is_alive():
-            spark.sparkContext.cancelAllJobs()
-            th.join(30)
-            return time.time() - t0, True
-        return time.time() - t0, False
-
-    # Two passes per query: the first (cold) pays per-plan codegen
-    # compilation and Python-worker spin-up, the second measures
-    # steady-state execution — both are recorded. clearCache between runs
-    # drops persisted intermediates (LSH bands, shingle sets), so the
-    # steady pass re-executes ALL the work; only JVM-level compilation
-    # artifacts are reused, exactly what a long-running cluster job would
-    # amortize. Headline `value`/`queries` = steady-state; cold numbers
+    # Headline `value`/`queries` = best of the steady passes; cold numbers
     # live in `queries_cold`/`value_cold`.
-    result["queries_cold"] = {}
-    total_cold = 0.0
-    for name in BENCH_QUERIES:
-        fn = qs[name]
-        dt_cold, timed_out = timed_count(fn(spark, SF_DIR))
+    for name, fn in E.queries().items():
+        try:
+            dt_cold, best, timed_out = time_query(spark, fn)
+        except Exception as e:
+            result["query_errors"][name] = f"{type(e).__name__}: {str(e).strip()[:1000]}"
+            continue
         if timed_out:
-            spark.catalog.clearCache()
-            dt_cold, timed_out = timed_count(fn(spark, SF_DIR))
-            if timed_out:
-                result.setdefault("query_timeouts", []).append(name)
-        spark.catalog.clearCache()
-        dt_steady, timed_out2 = timed_count(fn(spark, SF_DIR))
-        if timed_out2:
-            dt_steady = dt_cold
-        best = min(dt_steady, dt_cold)
-        if best > 2.0:
-            # expensive queries get a third pass: a single co-tenant stall
-            # otherwise lands in the recorded steady number for good
-            spark.catalog.clearCache()
-            dt3, timed_out3 = timed_count(fn(spark, SF_DIR))
-            if not timed_out3:
-                best = min(best, dt3)
+            result["query_timeouts"].append(name)
         result["queries_cold"][name] = round(dt_cold, 3)
         result["queries"][name] = round(best, 3)
-        total_cold += dt_cold
-        total += best
-        spark.catalog.clearCache()
-    result["value"] = round(total, 3)
-    result["value_cold"] = round(total_cold, 3)
-
+    result["value"] = round(sum(result["queries"].values()), 3)
+    result["value_cold"] = round(sum(result["queries_cold"].values()), 3)
     print(json.dumps(result))
 
 
 if __name__ == "__main__":
-    if len(sys.argv) == 4 and sys.argv[1] == "--scaling-child":
-        _scaling_child(sys.argv[2], int(sys.argv[3]))
-    else:
-        main()
+    main()

@@ -792,6 +792,8 @@ def _decode_spectrum(bits: _Bits, g: dict, rate: int,
         if tid in (4, 14) or tid not in TABLE_GEOM:
             raise ValueError("invalid huffman table id")
         x, y = _read_pair(bits, tid, prof)
+        if bits.pos > limit_bit:
+            raise ValueError("big values overrun part2_3_length")
         vals[pos] = x
         if pos + 1 < 576:
             vals[pos + 1] = y

@@ -12481,6 +12481,23 @@ class TestMp3Codec:
             assert 0 <= cls <= 2 and pre in (0, 1)
             assert all(0 <= s <= 7 for s in slens), (sc, slens)
 
+    def test_big_values_past_limit_bit_raise(self):
+        """A part2_3_length shorter than the big-values region must not
+        let the huffman loop read the next granule-channel's bits: the
+        ValueError makes the frame-level handler skip the frame."""
+        import random
+
+        from fuzi_spark.ops.mp3 import _Bits, _decode_spectrum, get_profile
+
+        rnd = random.Random(0)
+        buf = bytes(rnd.randrange(256) for _ in range(4096))
+        g = {"big_values": 200, "table_select": [1, 1, 1],
+             "region0_count": 7, "region1_count": 7,
+             "window_switching": False, "count1table_select": 0}
+        bits = _Bits(buf)
+        with pytest.raises(ValueError):
+            _decode_spectrum(bits, g, 44100, 40, get_profile())
+
     def test_parse_mp3_walks_mpeg2_frames(self):
         import numpy as np
 

@@ -675,3 +675,41 @@ class TestBitextPairs:
         assert bitext_pairs(d).count() == 0
         got = bitext_pairs(d, src_lang="en", tgt_lang="fr").collect()
         assert [(r.src_id, r.tgt_id) for r in got] == [(1, 2)]
+
+
+class TestOperatorBattery:
+    """bench.py runs every `queries()` entry; the lists that name queries
+    must agree with it, and its timed action must run every column."""
+
+    def test_query_lists_agree(self):
+        import importlib.util
+        import os
+
+        import __spark_entry__ as E
+
+        path = os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "tools", "explain_plans.py")
+        spec = importlib.util.spec_from_file_location("explain_plans", path)
+        explain_plans = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(explain_plans)
+
+        names = set(E.queries())
+        assert names == set(E.oracle_sql())
+        assert {n for n, _ in explain_plans.CASES} <= names
+
+    def test_timed_action_runs_python_columns(self, spark):
+        import pandas as pd
+        from pyspark.sql.functions import pandas_udf
+
+        import bench
+
+        @pandas_udf("long")
+        def boom(s: pd.Series) -> pd.Series:
+            raise ValueError("boom")
+
+        df = spark.range(8).withColumn("x", boom("id"))
+        # count() reads no column, so the optimizer drops the failing stage
+        assert df.count() == 8
+        with pytest.raises(Exception, match="boom"):
+            bench.run_query(df)
