@@ -576,7 +576,11 @@ def _is_ns_decl(qname: str) -> bool:
 class Document(Node):
     """Owns the tree. reference: Sources/Document.swift:26-214."""
 
-    __slots__ = ("version", "encoding", "root", "namespaces", "is_html", "errors", "children", "dtd")
+    # __weakref__: a test checks that the DOMs a batch shares are freed with it
+    __slots__ = (
+        "version", "encoding", "root", "namespaces", "is_html", "errors", "children", "dtd",
+        "__weakref__",
+    )
     type = DOCUMENT_NODE
 
     def __init__(self, is_html: bool = False):

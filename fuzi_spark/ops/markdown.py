@@ -359,6 +359,7 @@ def markdown_udf(
             return ("", 1)
         return to_markdown(markup, doc_type=doc_type, strip=strip)
 
+    # doc_column, not dom_column: strip_boilerplate mutates the DOM
     return doc_column(_MD_SCHEMA, _md)
 
 

@@ -467,7 +467,7 @@ def page_metadata(markup_col: str = "markup", doc_type: str = "html"):
     robots directive, compared lowercased per the spec.
     """
     from ..query import css
-    from ..udfs import _parse_doc, doc_column
+    from ..udfs import dom_column
 
     def _meta_content(doc, name_attr: str, value: str):
         for el in css(doc, "meta"):
@@ -476,8 +476,7 @@ def page_metadata(markup_col: str = "markup", doc_type: str = "html"):
                 return el.attr("content")
         return None
 
-    def _meta(markup):
-        doc = _parse_doc(markup, doc_type)
+    def _meta(doc):
         if doc is None:
             return None
         canonical = None
@@ -497,7 +496,7 @@ def page_metadata(markup_col: str = "markup", doc_type: str = "html"):
             noindex,
         )
 
-    return doc_column(_PAGE_META_SCHEMA, _meta)(F.col(markup_col))
+    return dom_column(_PAGE_META_SCHEMA, _meta, doc_type)(F.col(markup_col))
 
 
 # --------------------------------------------------------------- robots
@@ -909,10 +908,9 @@ def hidden_text(
     never false-positive. Arrow-batched pandas UDF; parse failure →
     all-NULL struct (never a fake zero)."""
     from ..dom import ELEMENT_NODE, TEXT_NODE
-    from ..udfs import _parse_doc, doc_column
+    from ..udfs import dom_column
 
-    def _stats(markup):
-        doc = _parse_doc(markup, doc_type)
+    def _stats(doc):
         if doc is None:
             return None
         root = doc.root
@@ -942,7 +940,7 @@ def hidden_text(
         frac = (hid / total) if total else 0.0
         return (vis, hid, blocks, frac, int(frac > cloak_frac))
 
-    return doc_column(_HIDDEN_SCHEMA, _stats)(F.col(markup_col))
+    return dom_column(_HIDDEN_SCHEMA, _stats, doc_type)(F.col(markup_col))
 
 
 # ------------------------------------------------------- publish date
@@ -999,10 +997,9 @@ def publish_date(
     'meta'|'time'|'url'|NULL, has_date).
     """
     from ..query import css
-    from ..udfs import _parse_doc, doc_column
+    from ..udfs import dom_column
 
-    def _dom_date(markup):
-        doc = _parse_doc(markup, "html")
+    def _dom_date(doc):
         if doc is None:
             return None
         for el in css(doc, "meta"):
@@ -1023,7 +1020,7 @@ def publish_date(
     staged = docs.select(
         F.col(id_col),
         F.col(url_col).alias("_u"),
-        doc_column(_PUBDATE_SCHEMA, _dom_date)(F.col(markup_col)).alias("_d"),
+        dom_column(_PUBDATE_SCHEMA, _dom_date, "html")(F.col(markup_col)).alias("_d"),
     )
     u = F.col("_u")
     y = F.regexp_extract(u, _URL_DATE_RE, 1)
@@ -1100,10 +1097,9 @@ def paywall_signals(markup_col: str = "markup", doc_type: str = "html"):
     reached (head is descended, only its text-bearing decoys are
     skipped). Arrow-batched pandas UDF; parse failure → all-NULL."""
     from ..dom import ELEMENT_NODE, TEXT_NODE
-    from ..udfs import _parse_doc, doc_column
+    from ..udfs import dom_column
 
-    def _scan(markup):
-        doc = _parse_doc(markup, doc_type)
+    def _scan(doc):
         if doc is None:
             return None
         root = doc.root
@@ -1154,7 +1150,7 @@ def paywall_signals(markup_col: str = "markup", doc_type: str = "html"):
             int(bool(schema or phrase or markers)),
         )
 
-    return doc_column(_PAYWALL_SCHEMA, _scan)(F.col(markup_col))
+    return dom_column(_PAYWALL_SCHEMA, _scan, doc_type)(F.col(markup_col))
 
 
 # ------------------------------------------------------------ URL signals

@@ -7,12 +7,22 @@ snapshots crossing the executor boundary. There are NO row-at-a-time
 Python UDFs anywhere — everything is `pandas_udf` / `mapInPandas` over
 Arrow batches.
 
-Every per-row operator in the package is written with one of two
+Every per-row operator in the package is written with one of three
 helpers, which own the batch loop, null inputs and the output frame:
 `row_mapper(fn, schema)` builds a `mapInPandas` function from a per-row
-`fn` returning 0..N output tuples, and `doc_column(return_type, fn)`
-builds a `pandas_udf` over a markup column from a per-document `fn`.
-Only whole-batch numpy kernels and grouped operators loop themselves.
+`fn` returning 0..N output tuples; `doc_column(return_type, fn)` builds a
+`pandas_udf` over a markup column from a per-document `fn(markup)`; and
+`dom_column(return_type, fn, doc_type)` does the same from a `fn(doc)`
+over the parsed document. Only whole-batch numpy kernels and grouped
+operators loop themselves.
+
+Each document is parsed once per Arrow batch, and that DOM is shared by
+every `dom_column` over the same markup column and doc_type: pyspark
+evaluates the columns of one ArrowEvalPython node one after another over
+the same batch Series, and `_batch_docs` keeps that batch's DOMs until
+the Series is freed. So a `dom_column` fn must not mutate the document.
+A batch keeps the DOMs of at most `_SHARED_MARKUP_CHARS` of markup (a
+prefix of its rows); the documents past it are parsed once per column.
 
 XPath/CSS expressions are compiled ONCE per executor process
 (lru_cache in xpath.py / css.py) and reused across every batch — an
@@ -23,6 +33,7 @@ Queryable.swift:299).
 from __future__ import annotations
 
 import re
+import weakref
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -106,6 +117,44 @@ def _parse_doc(markup: Optional[str], doc_type: Optional[str]):
         return None
 
 
+# Markup characters whose DOMs one batch keeps for its other DOM columns:
+# ~10 MB of DOM at the ~10x expansion of markup into nodes.
+_SHARED_MARKUP_CHARS = 1 << 20
+
+# (id(markup Series), doc_type) -> [weakref to the Series, kept DOMs, kept chars]
+_batch_doms: dict = {}
+
+
+def _batch_docs(markup: pd.Series, doc_type: Optional[str]) -> Iterator:
+    """The parsed documents of one batch's markup column, in row order
+    (None for a null or unparseable document).
+
+    The first caller parses; callers with the same Series and doc_type get
+    the kept DOMs of the batch's first `_SHARED_MARKUP_CHARS` of markup and
+    parse only the rest. The entry is dropped when the Series is freed. A
+    top-level function, so every pickled UDF reaches this one module state
+    by reference instead of carrying its own copy."""
+    if doc_type not in ("html", "xml"):
+        doc_type = None
+    key = (id(markup), doc_type)
+    entry = _batch_doms.get(key)
+    if entry is None:
+        # dropped as the Series is freed, before its id can be reused
+        ref = weakref.ref(markup, lambda _: _batch_doms.pop(key, None))
+        entry = _batch_doms[key] = [ref, [], 0]
+    kept = entry[1]
+    for i, m in enumerate(markup):
+        if i < len(kept):
+            yield kept[i]
+            continue
+        doc = _parse_doc(m, doc_type)
+        size = 0 if m is None else len(m)
+        if i == len(kept) and entry[2] + size <= _SHARED_MARKUP_CHARS:
+            kept.append(doc)
+            entry[2] += size
+        yield doc
+
+
 # ---------------------------------------------------------------- operator helpers
 
 _DDL_FIELD = re.compile(r"\s*`?(\w+)`?\s*(?::\s*|\s+)(.+?)\s*$", re.S)
@@ -180,18 +229,16 @@ def row_mapper(fn, schema):
     return mapper
 
 
-def doc_column(return_type, fn):
-    """pandas_udf over a markup column that runs `fn` once per document.
-
-    `fn(markup)` gets the document (None when null) and returns its
-    value: a tuple in field order for a struct `return_type`, where None
-    stands for all-null fields."""
+def _column(return_type, values):
+    """pandas_udf over a markup column; `values(markup)` yields one value
+    per document: a tuple in field order for a struct `return_type`,
+    where None stands for all-null fields."""
     fields = _fields(return_type)
     if fields is None:
 
         @pandas_udf(return_type)
         def _udf(markup: pd.Series) -> pd.Series:
-            return pd.Series([fn(m) for m in markup])
+            return pd.Series(list(values(markup)))
 
         return _udf
 
@@ -199,9 +246,30 @@ def doc_column(return_type, fn):
 
     @pandas_udf(return_type)
     def _udf(markup: pd.Series) -> pd.DataFrame:
-        return _frame(fields, [nulls if v is None else v for v in map(fn, markup)])
+        return _frame(fields, [nulls if v is None else v for v in values(markup)])
 
     return _udf
+
+
+def doc_column(return_type, fn):
+    """pandas_udf over a markup column that runs `fn` once per document.
+
+    `fn(markup)` gets the document (None when null) and returns its
+    value: a tuple in field order for a struct `return_type`, where None
+    stands for all-null fields."""
+    return _column(return_type, lambda markup: map(fn, markup))
+
+
+def dom_column(return_type, fn, doc_type: Optional[str] = None):
+    """pandas_udf over a markup column that runs `fn` once per parsed
+    document.
+
+    `fn(doc)` gets the document's DOM (None when the markup is null or
+    does not parse) and returns its value as for `doc_column`. The DOM is
+    parsed as `doc_type` ('html', 'xml', else sniffed) and shared with
+    every other dom_column over the same column in the batch
+    (`_batch_docs`), so `fn` must not mutate it."""
+    return _column(return_type, lambda markup: map(fn, _batch_docs(markup, doc_type)))
 
 
 # ---------------------------------------------------------------- extraction
@@ -278,11 +346,10 @@ def extract_markup_df(docs: DataFrame, doc_type: Optional[str] = None) -> DataFr
 # ---------------------------------------------------------------- query UDFs
 
 
-def _snapshots(expr: str, doc_type, ns):
+def _snapshots(expr: str, ns):
     from .query import element_snapshot, xpath as run_xpath
 
-    def snapshots(markup):
-        doc = _parse_doc(markup, doc_type)
+    def snapshots(doc):
         if doc is None:
             return []
         return [element_snapshot(n) for n in run_xpath(doc, expr, ns)]
@@ -290,13 +357,12 @@ def _snapshots(expr: str, doc_type, ns):
     return snapshots
 
 
-def _eval(expr: str, doc_type, ns, value):
-    """markup → value(XPathResult of expr), None when the document does
+def _eval(expr: str, ns, value):
+    """doc → value(XPathResult of expr), None when the document does
     not parse or the expression is invalid."""
     from .query import eval_xpath
 
-    def evaluate(markup):
-        doc = _parse_doc(markup, doc_type)
+    def evaluate(doc):
         r = eval_xpath(doc, expr, ns) if doc is not None else None
         return value(r) if r is not None else None
 
@@ -306,7 +372,7 @@ def _eval(expr: str, doc_type, ns, value):
 def xpath_select(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
     """Column function: markup string → array<ElementSnapshot> of XPath hits.
     `ns` adds prefixes after the document's own (query.xpath extra_ns)."""
-    return doc_column(SNAPSHOT_ARRAY, _snapshots(expr, doc_type, ns))
+    return dom_column(SNAPSHOT_ARRAY, _snapshots(expr, ns), doc_type)
 
 
 def css_select(selector: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
@@ -314,18 +380,18 @@ def css_select(selector: str, doc_type: Optional[str] = None, ns: Optional[dict]
     The selector is compiled to XPath at plan-build time (driver side)."""
     from .css import css_to_xpath
 
-    return doc_column(SNAPSHOT_ARRAY, _snapshots(css_to_xpath(selector), doc_type, ns))
+    return dom_column(SNAPSHOT_ARRAY, _snapshots(css_to_xpath(selector), ns), doc_type)
 
 
 def xpath_string(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
     """Column function: markup → string(XPath expr). The cheap common case:
     only a string crosses Arrow, not full snapshots."""
-    return doc_column(StringType(), _eval(expr, doc_type, ns, lambda r: r.string_value))
+    return dom_column(StringType(), _eval(expr, ns, lambda r: r.string_value), doc_type)
 
 
 def xpath_double(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
     """Column function: markup → number(XPath expr) (count/sum/...)."""
-    return doc_column(DoubleType(), _eval(expr, doc_type, ns, lambda r: r.double_value))
+    return dom_column(DoubleType(), _eval(expr, ns, lambda r: r.double_value), doc_type)
 
 
 def xpath_eval(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = None):
@@ -335,7 +401,7 @@ def xpath_eval(expr: str, doc_type: Optional[str] = None, ns: Optional[dict] = N
     def triple(r):
         return (r.bool_value, r.double_value, r.string_value)
 
-    return doc_column(XPATH_RESULT_STRUCT, _eval(expr, doc_type, ns, triple))
+    return dom_column(XPATH_RESULT_STRUCT, _eval(expr, ns, triple), doc_type)
 
 
 DOC_META_STRUCT = StructType(
@@ -353,11 +419,10 @@ def doc_meta(doc_type: Optional[str] = None):
     """Column function: markup → struct(version, encoding, root_tag,
     title, parse_error) — DocumentSnapshot surface (Actor.swift:67-86)."""
 
-    def meta(markup):
-        doc = _parse_doc(markup, doc_type)
+    def meta(doc):
         if doc is None or doc.root is None:
             return (None, None, None, None, 1)
         title = doc.title if doc.is_html else None
         return (doc.version, doc.encoding, doc.root.tag, title, 0)
 
-    return doc_column(DOC_META_STRUCT, meta)
+    return dom_column(DOC_META_STRUCT, meta, doc_type)

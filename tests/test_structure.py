@@ -713,3 +713,31 @@ class TestOperatorBattery:
         assert df.count() == 8
         with pytest.raises(Exception, match="boom"):
             bench.run_query(df)
+
+
+class TestSharedParsePlan:
+    def test_query_columns_plan_one_python_node(self, spark):
+        """DOM columns share one parse per document only when pyspark
+        evaluates them in the same ArrowEvalPython node over the same
+        markup input; the benchmark's nine query columns must plan so."""
+        import re
+
+        from fuzi_spark import udfs
+        from perfbench.workloads import QUERIES
+
+        docs = spark.createDataFrame(
+            [("d1", [("text", "<p>x</p>", None, 0)])],
+            f"doc_id string, spans {udfs.SPANS_ARRAY.simpleString()}",
+        ).select("doc_id", udfs.markup_from_spans_col("spans").alias("markup"))
+        cols = [
+            (udfs.doc_meta() if fn == "doc_meta" else getattr(udfs, fn)(expr, ns=ns))(
+                "markup"
+            ).alias(name)
+            for name, fn, expr, ns in QUERIES
+        ]
+        plan = docs.select("doc_id", *cols)._jdf.queryExecution().executedPlan().toString()
+        assert len(QUERIES) == 9
+        assert plan.count("ArrowEvalPython") == 1
+        (node,) = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+        inputs = re.findall(r"_udf\((\w+#\d+)\)", node)
+        assert len(inputs) == 9 and len(set(inputs)) == 1

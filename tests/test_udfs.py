@@ -1,6 +1,9 @@
 """The per-row operator helpers in fuzi_spark/udfs.py — `row_mapper`
-(mapInPandas) and `doc_column` (pandas_udf) — and the query columns
-built on them."""
+(mapInPandas), `doc_column` and `dom_column` (pandas_udf) — and the query
+columns built on them."""
+
+import gc
+import weakref
 
 import pandas as pd
 import pytest
@@ -165,3 +168,130 @@ def test_query_columns_pass_ns(spark):
     assert (r.ev.bool_value, r.ev.double_value, r.ev.string_value) == (True, 2.0, "2")
     assert r.d == 2.0 and r.s == "2"
     assert [e.string_value for e in r.sel] == ["1", "2"]
+
+
+ATOM = "http://www.w3.org/2005/Atom"
+PAGE = (
+    "<html><head><title>Page</title></head><body>"
+    "<ul><li>a</li><li>b</li></ul><p>x</p></body></html>"
+)
+FEED = (
+    f'<?xml version="1.0"?><feed xmlns="{ATOM}"><title>Feed</title>'
+    "<entry><title>e1</title></entry><entry><title>e2</title></entry></feed>"
+)
+# upper-case tags: HTML parsing folds them, XML parsing keeps them
+SHOUT = "<HTML><HEAD><TITLE>Shout</TITLE></HEAD><BODY><P>y</P></BODY></HTML>"
+
+
+@pytest.fixture
+def parses(monkeypatch):
+    """Every parse_html / parse_xml call's markup, in call order."""
+    from fuzi_spark import htmlparser, xmlparser
+
+    seen = []
+    for mod, name in ((htmlparser, "parse_html"), (xmlparser, "parse_xml")):
+
+        def counted(markup, *a, _real=getattr(mod, name), **k):
+            seen.append(markup)
+            return _real(markup, *a, **k)
+
+        monkeypatch.setattr(mod, name, counted)
+    return seen
+
+
+def _query_columns():
+    from fuzi_spark import udfs
+
+    return [
+        udfs.xpath_select("//li"),
+        udfs.css_select("ul li + li"),
+        udfs.xpath_string("//title"),
+        udfs.xpath_double("count(//li)"),
+        udfs.doc_meta(),
+    ]
+
+
+def _rows(out):
+    """A pandas_udf batch result as a list of plain values per row, nulls
+    as None."""
+    out = out.astype(object).where(out.notna(), None)
+    if isinstance(out, pd.DataFrame):
+        return list(out.itertuples(index=False, name=None))
+    return out.tolist()
+
+
+class TestSharedParse:
+    def test_each_document_parsed_once_per_batch(self, parses):
+        markup = pd.Series([PAGE, FEED, None, SHOUT, FEED])
+        cols = _query_columns()
+        outs = [_rows(col.func(markup)) for col in cols]
+        assert len(parses) == markup.notna().sum()
+        for col, out in zip(cols, outs):
+            assert out == [_rows(col.func(pd.Series([m])))[0] for m in markup]
+        assert [meta[2] for meta in outs[4]] == ["html", "feed", None, "html", "feed"]
+
+    def test_over_cap_batch_parses_the_rest_per_column(self, parses):
+        from fuzi_spark import udfs
+
+        # two documents of 3/4 of the cap: only the first one's DOM is kept
+        n_items = udfs._SHARED_MARKUP_CHARS * 3 // 4 // len("<li>item</li>")
+        big = "<html><body><ul>" + "<li>item</li>" * n_items + "</ul></body></html>"
+        markup = pd.Series([PAGE, big, big.replace("<li>item", "<li>x", 2), FEED])
+        cols = [udfs.xpath_double("count(//li)"), udfs.xpath_string("//li[2]"),
+                udfs.doc_meta()]
+        over = [_rows(col.func(markup)) for col in cols]
+        assert len(parses) == 2 + len(cols) * 2
+        under = [[_rows(col.func(pd.Series([m])))[0] for m in markup] for col in cols]
+        assert over == under
+        assert over[0][1:3] == [n_items, n_items]
+        assert over[1][1:3] == ["item", "x"]
+
+    def test_doms_freed_with_the_batch(self):
+        from fuzi_spark import udfs
+
+        markup = pd.Series([PAGE, FEED])
+        docs = list(udfs._batch_docs(markup, None))
+        assert list(udfs._batch_docs(markup, None)) == docs
+        freed = weakref.ref(docs[0])
+        del docs
+        gc.collect()
+        assert freed() is not None
+        del markup
+        gc.collect()
+        assert freed() is None
+        assert udfs._batch_doms == {}
+
+    def test_columns_leak_nothing_to_each_other(self, spark):
+        """One select over shared DOMs equals each column selected alone:
+        an `ns` binding stays in its own column, and the same markup
+        read as HTML and as XML keeps both readings."""
+        from fuzi_spark import udfs
+
+        cols = {
+            "ns_entries": udfs.xpath_select("//a:entry", ns={"a": ATOM}),
+            "bare_entries": udfs.xpath_select("//a:entry"),
+            "ns_count": udfs.xpath_double("count(//a:entry)", ns={"a": ATOM}),
+            "html_title": udfs.xpath_string("//title", doc_type="html"),
+            "xml_title": udfs.xpath_string("//title", doc_type="xml"),
+            "html_meta": udfs.doc_meta(doc_type="html"),
+            "xml_meta": udfs.doc_meta(doc_type="xml"),
+            "sniffed_meta": udfs.doc_meta(),
+        }
+        df = spark.createDataFrame(
+            [(1, FEED), (2, SHOUT), (3, None), (4, PAGE)], "id int, markup string"
+        ).coalesce(1)
+
+        def by_id(rows, name):
+            return {r.id: r[name] for r in rows}
+
+        together = df.select("id", *[c("markup").alias(n) for n, c in cols.items()]).collect()
+        for name, col in cols.items():
+            alone = df.select("id", col("markup").alias(name)).collect()
+            assert by_id(together, name) == by_id(alone, name), name
+        assert {i: len(e) for i, e in by_id(together, "ns_entries").items()} == {
+            1: 2, 2: 0, 3: 0, 4: 0}
+        assert all(e == [] for e in by_id(together, "bare_entries").values())
+        assert by_id(together, "html_title")[2] == "Shout"
+        assert by_id(together, "xml_title")[2] == ""
+        assert by_id(together, "html_meta")[2].title == "Shout"
+        assert by_id(together, "xml_meta")[2].title is None
