@@ -32,7 +32,7 @@ Design notes:
   DataFrame API — the catalog jars/config come from spark-submit --conf
   (spark.sql.catalog.*). Parquet paths are the self-contained dev surface.
 - Resume: with --output/--output-table set, previously committed buckets
-  (recorded in the lineage table) are anti-joined out before extraction, so
+  (recorded in the lineage table) are filtered out before extraction, so
   a re-run after a partial failure only processes the remainder
   (pipeline.committed_buckets).
 - The job prints a one-line JSON summary (docs, spans, parse errors,

@@ -11,22 +11,30 @@ Design notes for 1000-executor scale:
 - Unit of commit is a BUCKET: pmod(xxhash64(doc_id), n_buckets). Buckets are
   stable across runs (resume-safe) and independent of Spark's task
   partitioning, so changing cluster size never invalidates a checkpoint.
+- The extraction shuffle is bucket-aligned (salt_partition): bucket b owns
+  a contiguous run of the P extract partitions, so each extract task writes
+  one or two bucket files, not one into every bucket — <= P+B+giants span
+  files per run instead of P*B, so fewer parquet footers and FS calls. A
+  repartitionById with an explicit count is never AQE-coalesced.
 - Skew: extraction cost is ~linear in document bytes, and one document is
   one row (atomic). Hash-partitioning alone balances row COUNTS, not BYTES;
-  a partition that draws several giant documents becomes a straggler. We
-  split the input by a weight threshold: normal docs shuffle on doc_id hash;
-  giant docs are round-robin repartitioned so no two land together — the
-  classic salting move expressed with built-in primitives. AQE then
-  coalesces small post-shuffle partitions.
-- The span→markup codec runs BEFORE the shuffle (pure Catalyst), so the
+  a partition that draws several giant documents becomes a straggler. So
+  docs above a weight threshold go to partition
+  pmod(xxhash64(doc_id, 'giant-salt'), P) whatever their bucket: a
+  deterministic salted spread in the same single scan and shuffle.
+- The span->markup codec runs BEFORE the shuffle (pure Catalyst), so the
   exchange carries one string column per doc, and the skew weight is a
   free length(markup) — media spans keep their tag markup in `text`
   (codec.encode_spans), so media-heavy docs weigh their true bytes.
 - Lineage aggregation is a map-side-combinable hash agg (Catalyst default),
-  one row per bucket — trivially small output even at 10^12 docs.
-- Resume = broadcast anti-join of the input against committed bucket ids —
-  a metadata-sized broadcast, no shuffle of the big side beyond the one it
-  already needs.
+  one row per bucket — trivially small output even at 10^12 docs; each run
+  commits it as one parquet file.
+- Resume: the driver collects the <= n_buckets committed bucket ids and
+  filters their docs out; the rest are routed by their bucket's rank among
+  those left, so a resumed run still fills all P partitions.
+- Read-backs use pinned schemas and the lineage probe is Hadoop's
+  FileSystem.exists, so no job infers a schema from footers: a fresh run
+  launches 4 jobs (shuffle map + span write, lineage agg + write).
 - Exactly-once without atomic multi-file renames: the MANIFEST protocol.
   Every run stamps its span rows with a fresh run_id; spans are written
   first (the only pass over the raw input), then lineage — derived from
@@ -47,11 +55,11 @@ import os
 import uuid
 from typing import Optional
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from .udfs import extract_markup_df, extract_spans_df, markup_select
+from .udfs import EXTRACTED_SCHEMA, extract_markup_df, extract_spans_df, markup_select
 
 # Giant-doc threshold, calibrated by measurement (round 1): the extractor
 # amortizes per-doc overhead on large documents (~58 MB/s on a 7.5 MB doc
@@ -62,53 +70,86 @@ from .udfs import extract_markup_df, extract_spans_df, markup_select
 # ~40% SLOWER. Route only genuinely pathological documents.
 DEFAULT_GIANT_THRESHOLD = 32_000_000  # bytes of markup per doc
 
+# The span files as read back: `bucket` comes from the partition dirs.
+WRITTEN_SCHEMA = StructType(
+    [*EXTRACTED_SCHEMA.fields, StructField("run_id", StringType()),
+     StructField("bucket", IntegerType())]
+)
+# One row per (bucket, run) of the batch job's lineage.
+LINEAGE_SCHEMA = StructType(
+    [StructField("bucket", IntegerType())]
+    + [StructField(c, LongType()) for c in ("doc_count", "span_count", "parse_error_count")]
+    + [StructField("run_id", StringType())]
+)
+# Streaming lineage computes `bucket` (a bigint) instead of reading it back
+# from the partition dirs, and records its micro-batch.
+STREAM_LINEAGE_SCHEMA = StructType(
+    [StructField("bucket", LongType()), *LINEAGE_SCHEMA.fields[1:],
+     StructField("batch_id", IntegerType())]
+)
+
 
 def _bucket(n_buckets: int):
     """The commit-unit column: pmod(xxhash64(doc_id), n_buckets)."""
     return F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets))
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Hadoop-FS probe, scheme-agnostic (file:, hdfs://, s3a://): a
+    driver-local os.path.exists is always False for remote schemes, which
+    would silently disable resume. Only not-found is False; any other
+    failure (permissions) raises."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jpath.getFileSystem(conf).exists(jpath)
+
+
 def salt_partition(
     docs: DataFrame,
     num_partitions: int,
     giant_threshold: int = DEFAULT_GIANT_THRESHOLD,
+    n_buckets: int = 64,
 ) -> DataFrame:
-    """Repartition for the extraction stage: doc_id-hash for normal docs,
-    per-row salted hash for giants (weight-skew salting).
+    """Repartition for the extraction stage, aligned to the docs' `bucket`
+    column (values in [0, n_buckets)), with weight-skew salting for giants.
 
-    ONE scan + ONE shuffle: the earlier two-branch form
-    (filter(normal).repartition ∪ filter(giant).repartition) read the whole
-    input twice — at 10^12 docs the second scan costs more than any skew it
-    cures. A conditional partition expression keeps co-location by doc_id
-    for normal docs while giving each giant row its own uniformly-random
-    key, so colliding giants are spread without a second pass."""
-    part_key = F.when(
-        F.col("doc_weight") < giant_threshold,
-        F.xxhash64(F.col("doc_id").cast("string")),
-    ).otherwise(
-        # DETERMINISTIC second hash, not monotonically_increasing_id():
-        # a nondeterministic shuffle key re-routes recomputed rows after a
-        # fetch failure (the SPARK-23207 duplicate/loss class). One doc is
-        # one row, so an independent salted hash of doc_id spreads giants
-        # uniformly and is stable across stage retries.
-        F.xxhash64(F.col("doc_id").cast("string"), F.lit("giant-salt"))
+    With s = pmod(xxhash64(doc_id, 'giant-salt'), P), a normal doc of
+    bucket b goes to partition (b*P + s) div n_buckets: a contiguous run of
+    ~P/n_buckets partitions per bucket (~n_buckets/P buckets per partition
+    when P < n_buckets), so a partition holds at most two buckets when
+    P >= n_buckets and a bucket spans at most two partitions otherwise. s
+    is independent of the bucket hash, so it spreads a bucket's docs evenly
+    over its partitions. A giant (doc_weight >= giant_threshold) goes to
+    partition s, whatever its bucket.
+
+    ONE scan + ONE shuffle: the partition id is one conditional expression,
+    so colliding giants are spread without a second pass over the input.
+    It is a DETERMINISTIC function of doc_id, not monotonically_increasing_id():
+    a nondeterministic shuffle key re-routes recomputed rows after a fetch
+    failure (the SPARK-23207 duplicate/loss class)."""
+    spread = F.pmod(
+        F.xxhash64(F.col("doc_id").cast("string"), F.lit("giant-salt")),
+        F.lit(num_partitions),
     )
-    return docs.repartition(num_partitions, part_key)
+    aligned = F.floor((F.col("bucket") * num_partitions + spread) / n_buckets)
+    part = F.when(F.col("doc_weight") < giant_threshold, aligned).otherwise(spread)
+    return docs.repartitionById(num_partitions, part.cast("int"))
 
 
-def committed_buckets(spark: SparkSession, lineage_path: str) -> Optional[DataFrame]:
-    """Bucket ids already fully extracted (from prior runs' lineage).
+def committed_buckets(spark: SparkSession, lineage_path: str) -> Optional[set]:
+    """Bucket ids already fully extracted (from prior runs' lineage), or
+    None when no lineage dir exists.
 
-    Probed by ATTEMPTING the read, not an os.path.exists check: the
-    output dir is a Hadoop-FS path (s3a://, hdfs://, file:) and a
-    driver-local FS probe is always False for remote schemes — which
-    would silently disable resume. Only path-not-found (AnalysisException)
-    means "no lineage yet"; any other failure (permissions, corrupt
-    manifest) must surface, not silently restart from scratch."""
-    try:
-        return spark.read.parquet(lineage_path).select("bucket").distinct()
-    except AnalysisException:
+    The dir is probed with Hadoop's FileSystem.exists (_exists), so a
+    remote output dir resumes too and a failure other than not-found
+    surfaces instead of silently restarting from scratch. A lineage dir
+    with no committed file (empty, or only the `_temporary` of a commit
+    killed mid-job) gives the empty set. The ids (<= n_buckets) come back
+    to the driver, where the pipeline filters and ranks on them."""
+    if not _exists(spark, lineage_path):
         return None
+    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+    return {r.bucket for r in lineage.select("bucket").distinct().collect()}
 
 
 def _lineage_agg(extracted: DataFrame) -> DataFrame:
@@ -125,21 +166,29 @@ def _lineage_agg(extracted: DataFrame) -> DataFrame:
 
 def _commit_lineage(lineage: DataFrame, lineage_path: str) -> None:
     """The commit point of the manifest protocol: one small parquet job
-    (atomic at job granularity via the output committer — a killed job
-    leaves only _temporary files, never visible rows). Kept as a seam so
-    the crash-injection test can fail a run between the two writes."""
-    lineage.write.mode("append").parquet(lineage_path)
+    writing one file (a run's lineage is <= n_buckets rows), atomic at job
+    granularity via the output committer — a killed job leaves only
+    _temporary files, never visible rows. Kept as a seam so the
+    crash-injection test can fail a run between the two writes."""
+    lineage.coalesce(1).write.mode("append").parquet(lineage_path)
 
 
 def read_committed_spans(spark: SparkSession, output_dir: str) -> DataFrame:
     """Exactly-once read view of the span table: only spans whose
-    (bucket, run_id) is recorded in lineage are visible. Orphan files from
-    a run killed between the spans write and the lineage commit are
-    filtered out by a broadcast semi-join against the metadata-sized
-    manifest — no shuffle of the span table."""
-    spans = spark.read.parquet(os.path.join(output_dir, "spans"))
+    (bucket, run_id) is recorded in lineage are visible (none before the
+    first commit). Orphan files from a run killed between the spans write
+    and the lineage commit are filtered out by a broadcast semi-join
+    against the metadata-sized manifest — no shuffle of the span table."""
+    spans_path = os.path.join(output_dir, "spans")
+    lineage_path = os.path.join(output_dir, "lineage")
+    if not (_exists(spark, spans_path) and _exists(spark, lineage_path)):
+        return spark.createDataFrame([], WRITTEN_SCHEMA)
+    spans = spark.read.schema(WRITTEN_SCHEMA).parquet(spans_path)
+    # STREAM_LINEAGE_SCHEMA reads either writer's lineage: the batch job's
+    # int `bucket` widens to bigint
     manifest = (
-        spark.read.parquet(os.path.join(output_dir, "lineage"))
+        spark.read.schema(STREAM_LINEAGE_SCHEMA)
+        .parquet(lineage_path)
         .select("bucket", "run_id")
         .distinct()
     )
@@ -182,16 +231,23 @@ def run_extraction_pipeline(
         .withColumn("bucket", _bucket(n_buckets))
     )
 
-    spans_path = lineage_path = None
+    n_route = n_buckets
     if output_dir:
         spans_path = os.path.join(output_dir, "spans")
         lineage_path = os.path.join(output_dir, "lineage")
-        if resume:
-            done = committed_buckets(spark, lineage_path)
-            if done is not None:
-                docs = docs.join(F.broadcast(done), "bucket", "left_anti")
+        done = committed_buckets(spark, lineage_path) if resume else None
+        if done:
+            # route on each remaining bucket's rank among those left (-1:
+            # committed, dropped), so the docs still fill all P partitions
+            todo = [b for b in range(n_buckets) if b not in done]
+            rank = {b: i for i, b in enumerate(todo)}
+            lookup = F.array(*[F.lit(rank.get(b, -1)) for b in range(n_buckets)])
+            docs = docs.withColumn(
+                "bucket", F.element_at(lookup, F.col("bucket").cast("int") + 1)
+            ).filter(F.col("bucket") >= 0)
+            n_route = max(len(todo), 1)
 
-    docs = salt_partition(docs, num_partitions, giant_threshold)
+    docs = salt_partition(docs, num_partitions, giant_threshold, n_route)
 
     extracted = extract_markup_df(docs, doc_type)
     # re-attach the stable bucket (cheap hash recompute — avoids carrying it
@@ -207,12 +263,12 @@ def run_extraction_pipeline(
         # lineage from the durable files — a column-pruned scan of
         # (bucket, seq, parse_error, run_id); other runs' files are skipped
         # via parquet stats on the constant run_id column
-        written = spark.read.parquet(spans_path).filter(
+        written = spark.read.schema(WRITTEN_SCHEMA).parquet(spans_path).filter(
             F.col("run_id") == run_id
         )
         lineage = _lineage_agg(written).withColumn("run_id", F.lit(run_id))
         _commit_lineage(lineage, lineage_path)
-        committed = spark.read.parquet(lineage_path).filter(
+        committed = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path).filter(
             F.col("run_id") == run_id
         )
         return written, committed
@@ -292,24 +348,20 @@ def streaming_extraction(
         # rewrites it under a fresh run_id. Exactly-once at the read
         # surface either way.
         #
-        # The probe ATTEMPTS the filtered read (Hadoop-FS-scheme-agnostic:
-        # works for s3a://, hdfs://, file:); only path-not-found means
-        # "no lineage yet". A driver-local os.path.exists check (the
-        # round-2 form) was always False for remote schemes, and its
-        # blanket except disabled the guard entirely — letting a
-        # redelivered batch re-commit under a fresh run_id and
-        # double-count its spans at the read surface (round-3 ADVICE fix).
-        try:
-            already = (
-                batch_df.sparkSession.read.parquet(lineage_path)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .count()
-            )
-            if already:
-                return
-        except AnalysisException:
-            pass  # first batch ever: lineage dir doesn't exist yet
+        # The probe is Hadoop's FileSystem.exists (_exists), then a read
+        # under the pinned STREAM_LINEAGE_SCHEMA: no schema-inference job,
+        # and a failure other than not-found raises rather than letting a
+        # redelivered batch re-commit under a fresh run_id and double-count
+        # its spans at the read surface.
+        session = batch_df.sparkSession
+        if _exists(session, lineage_path) and (
+            session.read.schema(STREAM_LINEAGE_SCHEMA)
+            .parquet(lineage_path)
+            .filter(F.col("batch_id") == batch_id)
+            .limit(1)
+            .count()
+        ):
+            return
         run_id = uuid.uuid4().hex
         extracted = (
             extract_spans_df(batch_df, doc_type)

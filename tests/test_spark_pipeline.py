@@ -249,6 +249,228 @@ class TestCrashResume:
             assert "mapinpandas" not in plan.lower(), plan[:2000]
 
 
+def _page_docs(spark, n, giants=0):
+    """n one-span HTML pages; the first `giants` are ~2 kB of markup, the
+    rest under 30 bytes (giant_threshold=1000 singles out exactly those)."""
+    rows = [
+        (f"d{i}", [("text", f"<p>doc {i}{'x' * 2000 if i < giants else ''}</p>", None, 0)])
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+
+
+def _span_files(out):
+    """{partition id of the task that wrote it: count} over the span files
+    under `out` (file names are part-<partition>-<job uuid>...)."""
+    import collections
+    import glob
+
+    return collections.Counter(
+        int(os.path.basename(f).split("-")[1])
+        for f in glob.glob(os.path.join(out, "spans", "bucket=*", "*.parquet"))
+    )
+
+
+def _routed(spark, n_buckets, nparts, n_docs=2000, giants=0):
+    """{partition: set of buckets} of salt_partition over n_docs docs, the
+    first `giants` of them over the threshold and left out."""
+    from pyspark.sql import functions as F
+
+    from fuzi_spark.pipeline import _bucket, salt_partition
+
+    docs = spark.range(n_docs).select(
+        F.concat(F.lit("d"), F.col("id")).alias("doc_id"),
+        F.when(F.col("id") < giants, 10).otherwise(1).alias("doc_weight"),
+    ).withColumn("bucket", _bucket(n_buckets))
+    routed = salt_partition(docs, nparts, giant_threshold=10, n_buckets=n_buckets)
+    parts = {}
+    for r in routed.select(
+        "bucket", "doc_weight", F.spark_partition_id().alias("p")
+    ).collect():
+        buckets = parts.setdefault(r.p, set())
+        if r.doc_weight < 10:
+            buckets.add(r.bucket)
+    return parts
+
+
+class TestBucketAlignedShuffle:
+    """Bucket b owns a contiguous run of the extract partitions, so each
+    extract task writes one or two bucket files, not one per bucket."""
+
+    @pytest.mark.parametrize("n_buckets,nparts", [(4, 8), (16, 4)])
+    def test_span_files_per_run(self, spark, tmp_path, n_buckets, nparts):
+        from fuzi_spark.pipeline import run_extraction_pipeline
+
+        giants = 3
+        out = str(tmp_path / "out")
+        run_extraction_pipeline(
+            spark, _page_docs(spark, 400, giants), output_dir=out,
+            n_buckets=n_buckets, num_partitions=nparts, giant_threshold=1000,
+        )
+        files = _span_files(out)
+        assert sum(files.values()) <= nparts + n_buckets + giants, files
+
+    @pytest.mark.parametrize("n_buckets,nparts", [(4, 8), (4, 4), (3, 8), (5, 7)])
+    def test_partition_holds_at_most_two_buckets(self, spark, n_buckets, nparts):
+        parts = _routed(spark, n_buckets, nparts, giants=20)
+        assert all(len(b) <= 2 for b in parts.values()), parts
+
+    @pytest.mark.parametrize(
+        "n_buckets,nparts", [(4, 8), (16, 4), (64, 8), (3, 8), (5, 7), (7, 5)]
+    )
+    def test_no_partition_empty(self, spark, n_buckets, nparts):
+        parts = _routed(spark, n_buckets, nparts)
+        assert sorted(parts) == list(range(nparts))
+
+
+class TestPartialResume:
+    def test_half_committed_resume_fills_every_partition(self, spark, tmp_path):
+        """Commit buckets {0, 1}, then re-run on everything: the resumed
+        run routes the two buckets left over all P partitions, and the
+        committed view equals a clean single run."""
+        from pyspark.sql import functions as F
+
+        from fuzi_spark.pipeline import (
+            _bucket,
+            committed_buckets,
+            read_committed_spans,
+            run_extraction_pipeline,
+        )
+
+        def committed(out):
+            return sorted(
+                (r.doc_id, r.seq, r.kind, r.text, r.media_ref)
+                for r in read_committed_spans(spark, out).collect()
+            )
+
+        nparts, n_buckets = 4, 4
+        docs = _page_docs(spark, 400)
+        ref = str(tmp_path / "ref")
+        run_extraction_pipeline(
+            spark, docs, output_dir=ref, n_buckets=n_buckets, num_partitions=nparts
+        )
+
+        out = str(tmp_path / "out")
+        half = docs.filter(_bucket(n_buckets).isin(0, 1))
+        run_extraction_pipeline(
+            spark, half, output_dir=out, n_buckets=n_buckets, num_partitions=nparts
+        )
+        assert committed_buckets(spark, os.path.join(out, "lineage")) == {0, 1}
+        before = _span_files(out)
+        run_extraction_pipeline(
+            spark, docs, output_dir=out, n_buckets=n_buckets, num_partitions=nparts
+        )
+        resumed = _span_files(out) - before
+        assert sorted(resumed) == list(range(nparts)), resumed
+        assert committed(out) == committed(ref)
+
+    @pytest.mark.parametrize("leftover", ["_temporary", None])
+    def test_uncommitted_lineage_dir_skips_no_bucket(self, spark, tmp_path, leftover):
+        """A lineage dir with no committed file — only the _temporary of a
+        commit killed mid-job, or nothing at all — commits no bucket."""
+        from fuzi_spark.pipeline import (
+            committed_buckets,
+            read_committed_spans,
+            run_extraction_pipeline,
+        )
+
+        out = tmp_path / "out"
+        lineage = out / "lineage"
+        (lineage / leftover / "0" if leftover else lineage).mkdir(parents=True)
+        assert committed_buckets(spark, str(lineage)) == set()
+        assert read_committed_spans(spark, str(out)).count() == 0
+
+        run_extraction_pipeline(
+            spark, _page_docs(spark, 100), output_dir=str(out), n_buckets=4,
+            num_partitions=4,
+        )
+        assert committed_buckets(spark, str(lineage)) == {0, 1, 2, 3}
+        docs = read_committed_spans(spark, str(out)).select("doc_id").distinct()
+        assert docs.count() == 100
+
+
+class TestLeanCommit:
+    WRITTEN = (
+        "struct<doc_id:string,seq:int,kind:string,text:string,media_ref:string,"
+        "offset:int,parse_error:int,run_id:string,bucket:int>"
+    )
+    COMMITTED = (
+        "struct<bucket:int,doc_count:bigint,span_count:bigint,"
+        "parse_error_count:bigint,run_id:string>"
+    )
+
+    def test_read_back_schemas_are_pinned(self, spark, tmp_path):
+        """The read-backs use pinned schemas equal to what the files hold
+        (and to what footer inference used to give), so a drift in
+        EXTRACTED_SCHEMA fails here."""
+        from fuzi_spark.pipeline import run_extraction_pipeline
+
+        out = str(tmp_path / "out")
+        # uncoalesced shuffle partitions, so the lineage agg's output spans
+        # several partitions and only the commit itself makes it one file
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        spark.conf.set(key, "false")
+        try:
+            written, committed = run_extraction_pipeline(
+                spark, _page_docs(spark, 50), output_dir=out, n_buckets=4,
+                num_partitions=4,
+            )
+        finally:
+            spark.conf.unset(key)
+        assert written.schema.simpleString() == self.WRITTEN
+        assert committed.schema.simpleString() == self.COMMITTED
+        inferred = spark.read.parquet(os.path.join(out, "spans")).schema
+        assert inferred.simpleString() == self.WRITTEN
+        inferred = spark.read.parquet(os.path.join(out, "lineage")).schema
+        assert inferred.simpleString() == self.COMMITTED
+        # the commit is one lineage file per run
+        lineage_files = [
+            f for f in os.listdir(os.path.join(out, "lineage"))
+            if f.endswith(".parquet")
+        ]
+        assert len(lineage_files) == 1
+
+    def test_fresh_run_launches_four_jobs(self, spark, tmp_path):
+        """Shuffle map + span write, lineage agg + lineage write: no job
+        spent probing lineage or inferring a read-back schema."""
+        from fuzi_spark.pipeline import run_extraction_pipeline
+
+        docs = _page_docs(spark, 50)
+        docs.count()  # the input's own jobs stay out of the group
+        sc = spark.sparkContext
+        sc.setJobGroup("fresh-run", "jobs of one fresh pipeline run")
+        try:
+            run_extraction_pipeline(
+                spark, docs, output_dir=str(tmp_path / "out"), n_buckets=4,
+                num_partitions=4,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("fresh-run")) == 4
+
+    def test_streaming_lineage_schema_pinned(self, spark, tmp_path):
+        """Streaming lineage holds a computed bigint `bucket` and its
+        batch_id; the pinned schema the batch probe reads it with matches
+        what is written, and read_committed_spans reads streaming output."""
+        from fuzi_spark.pipeline import (
+            STREAM_LINEAGE_SCHEMA,
+            read_committed_spans,
+            streaming_extraction,
+        )
+
+        inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+        _page_docs(spark, 40).write.parquet(inp)
+        q = streaming_extraction(spark, inp, out, str(tmp_path / "cp"), n_buckets=4)
+        q.awaitTermination(120)
+        lineage = spark.read.parquet(os.path.join(out, "lineage"))
+        assert lineage.schema == STREAM_LINEAGE_SCHEMA
+        assert read_committed_spans(spark, out).count() == 40
+
+
 class TestVerificationJoin:
     def test_self_verification_empty(self, spark):
         from fuzi_spark.corpus import corpus_df
@@ -781,54 +1003,51 @@ class TestStreamingNearDedup:
         # history growth must not have grown the plan vs batch 1
         assert plan_nodes[-1] == plan_nodes[1], plan_nodes
     def test_salting_spreads_colliding_giants(self, spark):
-        """Find doc_ids whose plain hash(doc_id) keys collide into ONE
+        """Find doc_ids that the bucket-aligned routing sends to ONE
         partition, mark them giant, and assert salt_partition routes them
-        to MULTIPLE partitions while normal docs keep doc_id-hash routing
-        (the SPARK-23207-safe deterministic salt)."""
+        to MULTIPLE partitions while normal docs keep their bucket's
+        partitions (the SPARK-23207-safe deterministic salt)."""
         from pyspark.sql import functions as F
 
-        from fuzi_spark.pipeline import salt_partition
+        from fuzi_spark.pipeline import _bucket, salt_partition
 
-        nparts = 4
+        nparts, n_buckets = 4, 4
+        # the routing, modelled: with s = pmod(xxhash64(doc_id,'giant-salt'),
+        # P), a plain doc of bucket b goes to (b*P + s) div B, a giant to s
         ids = spark.range(200).select(
-            F.col("id").cast("string").alias("doc_id"),
-            F.lit(1).cast("long").alias("doc_weight"),
-        )
-        # observe ACTUAL plain routing (repartition re-hashes the key, so
-        # the partition is not pmod(xxhash64(id), n) — measure, don't model)
-        routed = salt_partition(ids, nparts, giant_threshold=10).select(
-            "doc_id", F.spark_partition_id().alias("p")
+            F.col("id").cast("string").alias("doc_id")
+        ).select(
+            "doc_id",
+            _bucket(n_buckets).alias("b"),
+            F.pmod(F.xxhash64("doc_id", F.lit("giant-salt")), F.lit(nparts)).alias("s"),
         )
         by_part = {}
-        for r in routed.collect():
-            by_part.setdefault(r.p, []).append(r.doc_id)
-        colliding = next(v for v in by_part.values() if len(v) >= 6)[:6]
+        for r in ids.collect():
+            by_part.setdefault((r.b * nparts + r.s) // n_buckets, []).append(r.doc_id)
+        part, colliding = next(
+            (p, v[:6]) for p, v in sorted(by_part.items()) if len(v) >= 6
+        )
         docs = spark.createDataFrame(
             [(d, 1_000_000) for d in colliding], "doc_id string, doc_weight long"
-        )
-        # below threshold: all six land together (the skew this cures)
-        plain = salt_partition(docs, nparts, giant_threshold=10_000_000)
-        plain_parts = (
-            plain.select(F.spark_partition_id().alias("sp"))
-            .distinct()
-            .count()
-        )
-        assert plain_parts == 1
-        # above threshold: the salted second hash spreads them
-        salted = salt_partition(docs, nparts, giant_threshold=10_000)
-        salted_parts = (
-            salted.select(F.spark_partition_id().alias("sp"))
-            .distinct()
-            .count()
-        )
-        assert salted_parts > 1, "giants were not spread by the salt"
+        ).withColumn("bucket", _bucket(n_buckets))
+
+        def partitions(threshold):
+            routed = salt_partition(docs, nparts, threshold, n_buckets)
+            return sorted(
+                (r.doc_id, r.sp)
+                for r in routed.select(
+                    "doc_id", F.spark_partition_id().alias("sp")
+                ).collect()
+            )
+
+        # below threshold: all six land together, where the model puts them
+        # (the skew this cures)
+        assert {sp for _, sp in partitions(10_000_000)} == {part}
+        # above threshold: the salted hash spreads them
+        salted = partitions(10_000)
+        assert len({sp for _, sp in salted}) > 1, "giants were not spread by the salt"
         # determinism: same input → same routing (stage-retry safety)
-        again = salt_partition(docs, nparts, giant_threshold=10_000)
-        a = sorted((r.doc_id, r.sp) for r in salted.select(
-            "doc_id", F.spark_partition_id().alias("sp")).collect())
-        b = sorted((r.doc_id, r.sp) for r in again.select(
-            "doc_id", F.spark_partition_id().alias("sp")).collect())
-        assert a == b
+        assert partitions(10_000) == salted
 
     def test_salting_is_semantics_neutral(self, spark):
         """Same extracted span sequences whether or not the giant path
