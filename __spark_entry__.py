@@ -6656,228 +6656,12 @@ def q_stream_histogram(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every `q_*` operator of this module, keyed by its name minus `q_`,
+    in definition order."""
     return {
-        "parse_roundtrip": q_parse_roundtrip,
-        "attr_extract": q_attr_extract,
-        "children_counts": q_children_counts,
-        "xpath_sum": q_xpath_sum,
-        "css_select": q_css_select,
-        "positional_select": q_positional_select,
-        "html_title": q_html_title,
-        "parse_errors": q_parse_errors,
-        "snapshot_select": q_snapshot_select,
-        "extract_flagship": q_extract_flagship,
-        "extract_interleaved": q_extract_interleaved,
-        "lineage": q_lineage,
-        "resume_anti_join": q_resume_anti_join,
-        "verification_join": q_verification_join,
-        "dedup_exact": q_dedup_exact,
-        "code_dedup": q_code_dedup,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_components": q_dedup_components,
-        "dedup_keep": q_dedup_keep,
-        "stream_dedup": q_stream_dedup,
-        "dedup_pipeline": q_dedup_pipeline,
-        "extract_pdf": q_extract_pdf,
-        "extract_pdf_cmap": q_extract_pdf_cmap,
-        "repetition": q_repetition,
-        "dedup_simhash": q_dedup_simhash,
-        "text_quality": q_text_quality,
-        "quality_filter": q_quality_filter,
-        "lang_id": q_lang_id,
-        "fingerprint": q_fingerprint,
-        "similarity_topk": q_similarity_topk,
-        "similarity_lsh": q_similarity_lsh,
-        "similarity_ivf": q_similarity_ivf,
-        "events_window": q_events_window,
-        "sessionize": q_sessionize,
-        "embedding_near_dups": q_embedding_near_dups,
-        "semantic_dedup": q_semantic_dedup,
-        "normalize_text": q_normalize_text,
-        "content_filter": q_content_filter,
-        "domain_rank": q_domain_rank,
-        "page_metadata": q_page_metadata,
-        "parse_warc": q_parse_warc,
-        "apply_robots": q_apply_robots,
-        "multimodal_decode": q_multimodal_decode,
-        "line_dedup": q_line_dedup,
-        "hash_sample": q_hash_sample,
-        "decontaminate": q_decontaminate,
-        "redact_pii": q_redact_pii,
-        "pack_sequences": q_pack_sequences,
-        "domain_stats": q_domain_stats,
-        "blocked_domains": q_blocked_domains,
-        "top_terms": q_top_terms,
-        "corpus_report": q_corpus_report,
-        "link_graph": q_link_graph,
-        "vocab_table": q_vocab_table,
-        "repeated_passages": q_repeated_passages,
-        "lm_perplexity": q_lm_perplexity,
-        "perplexity_buckets": q_perplexity_buckets,
-        "detect_license": q_detect_license,
-        "preference_pairs": q_preference_pairs,
-        "chat_validate": q_chat_validate,
-        "temperature_mix": q_temperature_mix,
-        "span_corruption": q_span_corruption,
-        "chunk_documents": q_chunk_documents,
-        "url_dedup": q_url_dedup,
-        "encode_documents": q_encode_documents,
-        "remove_passages": q_remove_passages,
-        "interleaved_text": q_interleaved_text,
-        "media_balance": q_media_balance,
-        "curate": q_curate,
-        "materialize_packs": q_materialize_packs,
-        "group_quota": q_group_quota,
-        "split_by_group": q_split_by_group,
-        "epoch_order": q_epoch_order,
-        "mixture_sample": q_mixture_sample,
-        "strip_media_chrome": q_strip_media_chrome,
-        "sitemap_urls": q_sitemap_urls,
-        "extract_feed": q_extract_feed,
-        "to_markdown": q_to_markdown,
-        "extract_tables": q_extract_tables,
-        "anchor_text": q_anchor_text,
-        "json_ld": q_json_ld,
-        "readability": q_readability,
-        "hreflang": q_hreflang,
-        "image_captions": q_image_captions,
-        "doc_outline": q_doc_outline,
-        "fix_mojibake": q_fix_mojibake,
-        "detect_code": q_detect_code,
-        "code_quality": q_code_quality,
-        "image_pixels": q_image_pixels,
-        "image_pixels_deep": q_image_pixels_deep,
-        "image_pixels_12bit": q_image_pixels_12bit,
-        "audio_flac": q_audio_flac,
-        "span_language": q_span_language,
-        "snapshot_delta": q_snapshot_delta,
-        "audio_features": q_audio_features,
-        "audio_spectrogram": q_audio_spectrogram,
-        "semantic_decontaminate": q_semantic_decontaminate,
-        "edit_verify": q_edit_verify,
-        "stream_near_dedup": q_stream_near_dedup,
-        "subtitles": q_subtitles,
-        "redact_cc": q_redact_cc,
-        "audio_mp3": q_audio_mp3,
-        "audio_mp3_pcm": q_audio_mp3_pcm,
-        "audio_aac_meta": q_audio_aac_meta,
-        "video_keyframes": q_video_keyframes,
-        "video_container_dedup": q_video_container_dedup,
-        "audio_m4a_meta": q_audio_m4a_meta,
-        "parse_archive": q_parse_archive,
-        "bloom_seen": q_bloom_seen,
-        "crawl_schedule": q_crawl_schedule,
-        "skew_report": q_skew_report,
-        "robots_sitemaps": q_robots_sitemaps,
-        "hidden_text": q_hidden_text,
-        "publish_date": q_publish_date,
-        "paywall": q_paywall,
-        "script_mix": q_script_mix,
-        "compress_ratio": q_compress_ratio,
-        "url_signals": q_url_signals,
-        "bitext_pairs": q_bitext_pairs,
-        "media_quality": q_media_quality,
-        "interleave_episodes": q_interleave_episodes,
-        "image_exif": q_image_exif,
-        "exif_strip": q_exif_strip,
-        "video_frames": q_video_frames,
-        "crawl_frontier": q_crawl_frontier,
-        "media_context": q_media_context,
-        "bpe_encode": q_bpe_encode,
-        "image_dedup": q_image_dedup,
-        "video_dedup": q_video_dedup,
-        "video_scenes": q_video_scenes,
-        "nb_classifier": q_nb_classifier,
-        "reflow_text": q_reflow_text,
-        "split_sentences": q_split_sentences,
-        "site_template": q_site_template,
-        "dsir_select": q_dsir_select,
-        "asof_join": q_asof_join,
-        "range_join": q_range_join,
-        "merge_upsert": q_merge_upsert,
-        "zorder_layout": q_zorder_layout,
-        "heavy_hitters": q_heavy_hitters,
-        "embedding_quantize": q_embedding_quantize,
-        "hard_negatives": q_hard_negatives,
-        "hll_distinct": q_hll_distinct,
-        "thread_assembly": q_thread_assembly,
-        "loss_mask": q_loss_mask,
-        "parse_jsonl": q_parse_jsonl,
-        "rate_anomalies": q_rate_anomalies,
-        "text_semantic_dedup": q_text_semantic_dedup,
-        "multimodal_dedup": q_multimodal_dedup,
-        "embedding_pca": q_embedding_pca,
-        "embedding_outliers": q_embedding_outliers,
-        "kmeans_clusters": q_kmeans_clusters,
-        "funnel": q_funnel,
-        "retention": q_retention,
-        "gap_fill": q_gap_fill,
-        "attribution": q_attribution,
-        "collocations": q_collocations,
-        "ngram_novelty": q_ngram_novelty,
-        "extract_citations": q_extract_citations,
-        "section_chunks": q_section_chunks,
-        "pseudonymize": q_pseudonymize,
-        "strip_running_lines": q_strip_running_lines,
-        "span_validate": q_span_validate,
-        "media_integrity": q_media_integrity,
-        "gazetteer_tag": q_gazetteer_tag,
-        "rrf_fuse": q_rrf_fuse,
-        "source_drift": q_source_drift,
-        "balanced_shards": q_balanced_shards,
-        "resolve_redirects": q_resolve_redirects,
-        "fim_split": q_fim_split,
-        "length_quantiles": q_length_quantiles,
-        "bm25_search": q_bm25_search,
-        "hash_embed": q_hash_embed,
-        "audio_dedup": q_audio_dedup,
-        "bitext_margin": q_bitext_margin,
-        "pr_curve": q_pr_curve,
-        "near_decontaminate": q_near_decontaminate,
-        "pq_encode": q_pq_encode,
-        "domain_weights": q_domain_weights,
-        "bradley_terry": q_bradley_terry,
-        "shard_manifest": q_shard_manifest,
-        "corpus_rollup": q_corpus_rollup,
-        "corpus_overlap": q_corpus_overlap,
-        "microdata": q_microdata,
-        "code_blocks": q_code_blocks,
-        "token_budget": q_token_budget,
-        "triangle_count": q_triangle_count,
-        "label_agreement": q_label_agreement,
-        "pareto_select": q_pareto_select,
-        "edit_join": q_edit_join,
-        "kcore": q_kcore,
-        "retrieval_eval": q_retrieval_eval,
-        "hll_rollup": q_hll_rollup,
-        "cdc_dedup": q_cdc_dedup,
-        "span_diff": q_span_diff,
-        "tokenizer_fertility": q_tokenizer_fertility,
-        "markov_transitions": q_markov_transitions,
-        "reliability_bins": q_reliability_bins,
-        "weighted_sample": q_weighted_sample,
-        "skew_join": q_skew_join,
-        "quantile_rollup": q_quantile_rollup,
-        "frequent_pairs": q_frequent_pairs,
-        "assign_ids": q_assign_ids,
-        "vocab_rank": q_vocab_rank,
-        "containment_join": q_containment_join,
-        "score_percentiles": q_score_percentiles,
-        "skipgram_pairs": q_skipgram_pairs,
-        "similarity_ivfpq": q_similarity_ivfpq,
-        "robust_outliers": q_robust_outliers,
-        "group_sample": q_group_sample,
-        "join_size": q_join_size,
-        "length_buckets": q_length_buckets,
-        "scd2_history": q_scd2_history,
-        "quantile_map": q_quantile_map,
-        "containment_pipeline": q_containment_pipeline,
-        "set_similarity": q_set_similarity,
-        "weighted_draws": q_weighted_draws,
-        "poisson_bootstrap": q_poisson_bootstrap,
-        "bloom_join": q_bloom_join,
-        "stream_histogram": q_stream_histogram,
+        name[2:]: fn
+        for name, fn in globals().items()
+        if name.startswith("q_") and callable(fn)
     }
 
 

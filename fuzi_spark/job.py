@@ -31,10 +31,12 @@ Design notes:
   (`spark.read.table` / `df.writeTo(...).append()`), which is the Iceberg
   DataFrame API — the catalog jars/config come from spark-submit --conf
   (spark.sql.catalog.*). Parquet paths are the self-contained dev surface.
-- Resume: with --output/--output-table set, previously committed buckets
-  (recorded in the lineage table) are filtered out before extraction, so
-  a re-run after a partial failure only processes the remainder
-  (pipeline.committed_buckets).
+- Resume: with --output set, buckets that earlier runs committed to
+  <output>/lineage are filtered out before extraction, so a re-run after
+  a partial failure only processes the remainder
+  (pipeline.committed_buckets). --output-table alone does not resume:
+  each run re-extracts every bucket and appends a new run_id, which the
+  lineage table keeps apart.
 - The job prints a one-line JSON summary (docs, spans, parse errors,
   buckets committed) to stdout for the orchestrator.
 """

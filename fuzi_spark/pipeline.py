@@ -32,21 +32,22 @@ Design notes for 1000-executor scale:
 - Resume: the driver collects the <= n_buckets committed bucket ids and
   filters their docs out; the rest are routed by their bucket's rank among
   those left, so a resumed run still fills all P partitions.
-- Read-backs use pinned schemas and the lineage probe is Hadoop's
+- Exactly-once without atomic multi-file renames: the MANIFEST protocol,
+  shared by run_extraction_pipeline, streaming_extraction and
+  streaming.streaming_exact_dedup / streaming_near_dedup. A run stamps
+  its rows with a fresh run_id and appends them (for the extraction job,
+  the only pass over the raw input); then manifest rows derived from the
+  durable rows (lineage here) are committed as one small parquet job.
+  The manifest IS the commit record: readers (read_committed_spans) see
+  only rows whose run_id it records, so a run killed between the two
+  writes leaves orphans no reader sees, and the re-run writes them again
+  under a new run_id. Same idea as an Iceberg snapshot commit, on the
+  plain-parquet dev surface. (Single-writer protocol: two runs racing the
+  same bucket would both commit; orchestration must not overlap runs on
+  one output dir.)
+- Read-backs use pinned schemas and every probe is Hadoop's
   FileSystem.exists, so no job infers a schema from footers: a fresh run
   launches 4 jobs (shuffle map + span write, lineage agg + write).
-- Exactly-once without atomic multi-file renames: the MANIFEST protocol.
-  Every run stamps its span rows with a fresh run_id; spans are written
-  first (the only pass over the raw input), then lineage — derived from
-  the already-durable span files, so nothing is extracted twice — is
-  committed as a single small parquet job. The lineage rows ARE the commit
-  record: readers (read_committed_spans) only see spans whose
-  (bucket, run_id) appears in lineage. A run killed between the two writes
-  leaves orphan span files that no reader ever sees; the re-run extracts
-  the bucket again under a new run_id and commits it. Same idea as an
-  Iceberg snapshot commit, expressed on the plain-parquet dev surface.
-  (Single-writer protocol: two runs racing the same bucket would both
-  commit; orchestration must not overlap runs on one output dir.)
 """
 
 from __future__ import annotations
@@ -75,17 +76,15 @@ WRITTEN_SCHEMA = StructType(
     [*EXTRACTED_SCHEMA.fields, StructField("run_id", StringType()),
      StructField("bucket", IntegerType())]
 )
-# One row per (bucket, run) of the batch job's lineage.
+# One row per (bucket, run) of the lineage.
 LINEAGE_SCHEMA = StructType(
     [StructField("bucket", IntegerType())]
     + [StructField(c, LongType()) for c in ("doc_count", "span_count", "parse_error_count")]
     + [StructField("run_id", StringType())]
 )
-# Streaming lineage computes `bucket` (a bigint) instead of reading it back
-# from the partition dirs, and records its micro-batch.
+# Streaming lineage also records each row's micro-batch.
 STREAM_LINEAGE_SCHEMA = StructType(
-    [StructField("bucket", LongType()), *LINEAGE_SCHEMA.fields[1:],
-     StructField("batch_id", IntegerType())]
+    [*LINEAGE_SCHEMA.fields, StructField("batch_id", IntegerType())]
 )
 
 
@@ -146,9 +145,9 @@ def committed_buckets(spark: SparkSession, lineage_path: str) -> Optional[set]:
     with no committed file (empty, or only the `_temporary` of a commit
     killed mid-job) gives the empty set. The ids (<= n_buckets) come back
     to the driver, where the pipeline filters and ranks on them."""
-    if not _exists(spark, lineage_path):
+    lineage = _read(spark, lineage_path, LINEAGE_SCHEMA)
+    if lineage is None:
         return None
-    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
     return {r.bucket for r in lineage.select("bucket").distinct().collect()}
 
 
@@ -164,35 +163,109 @@ def _lineage_agg(extracted: DataFrame) -> DataFrame:
     )
 
 
+# ------------------------------------------------------ manifest protocol
+
+
+def _read(spark: SparkSession, path: str, schema) -> Optional[DataFrame]:
+    """`path` read under a pinned schema (no footer-inference job), or None
+    when nothing was ever written there."""
+    return spark.read.schema(schema).parquet(path) if _exists(spark, path) else None
+
+
 def _commit_lineage(lineage: DataFrame, lineage_path: str) -> None:
     """The commit point of the manifest protocol: one small parquet job
-    writing one file (a run's lineage is <= n_buckets rows), atomic at job
-    granularity via the output committer — a killed job leaves only
-    _temporary files, never visible rows. Kept as a seam so the
-    crash-injection test can fail a run between the two writes."""
+    writing one file, atomic at job granularity via the output committer —
+    a killed job leaves only _temporary files, never visible rows. Kept as
+    a module-level seam, looked up at call time, so the crash-injection
+    tests can fail a run between the two writes."""
     lineage.coalesce(1).write.mode("append").parquet(lineage_path)
 
 
-def read_committed_spans(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Exactly-once read view of the span table: only spans whose
-    (bucket, run_id) is recorded in lineage are visible (none before the
-    first commit). Orphan files from a run killed between the spans write
-    and the lineage commit are filtered out by a broadcast semi-join
-    against the metadata-sized manifest — no shuffle of the span table."""
-    spans_path = os.path.join(output_dir, "spans")
-    lineage_path = os.path.join(output_dir, "lineage")
-    if not (_exists(spark, spans_path) and _exists(spark, lineage_path)):
-        return spark.createDataFrame([], WRITTEN_SCHEMA)
-    spans = spark.read.schema(WRITTEN_SCHEMA).parquet(spans_path)
-    # STREAM_LINEAGE_SCHEMA reads either writer's lineage: the batch job's
-    # int `bucket` widens to bigint
-    manifest = (
-        spark.read.schema(STREAM_LINEAGE_SCHEMA)
-        .parquet(lineage_path)
-        .select("bucket", "run_id")
-        .distinct()
+def _append_commit(
+    rows: DataFrame, path: str, schema, manifest_of, manifest_path: str,
+    batch_id: Optional[int] = None, partition_by: tuple = (),
+):
+    """The manifest protocol's one writer: stamp `rows` with a fresh
+    run_id, append them under `path`, read this run back under the pinned
+    `schema`, then commit manifest_of(written rows) — stamped with the
+    run_id, and with the batch_id of a micro-batch — to `manifest_path`.
+    The manifest derives from the durable rows, so it never recomputes
+    them and can never disagree with what was written. Returns (written
+    rows, run_id)."""
+    run_id = uuid.uuid4().hex
+    rows.withColumn("run_id", F.lit(run_id)).write.mode("append").partitionBy(
+        *partition_by
+    ).parquet(path)
+    written = rows.sparkSession.read.schema(schema).parquet(path).filter(
+        F.col("run_id") == run_id
     )
-    return spans.join(F.broadcast(manifest), ["bucket", "run_id"], "left_semi")
+    manifest = manifest_of(written).withColumn("run_id", F.lit(run_id))
+    if batch_id is not None:
+        manifest = manifest.withColumn("batch_id", F.lit(batch_id))
+    _commit_lineage(manifest, manifest_path)
+    return written, run_id
+
+
+def _committed(spark: SparkSession, path: str, schema, manifest_path: str) -> DataFrame:
+    """The manifest protocol's one read view: the rows of `path` whose
+    run_id the manifest records — a run commits all its manifest rows in
+    one job, so its run_id is the whole commit key. A broadcast semi-join
+    against the metadata-sized set of committed runs: the data never
+    shuffles. Empty, under the pinned `schema`, before the first commit
+    and when only orphan rows exist."""
+    data = _read(spark, path, schema)
+    runs = _read(spark, manifest_path, "run_id string")
+    if data is None or runs is None:
+        return spark.createDataFrame([], schema)
+    runs = runs.distinct().withColumnRenamed("run_id", "committed_run")
+    return data.join(
+        F.broadcast(runs), F.col("run_id") == F.col("committed_run"), "left_semi"
+    )
+
+
+def _stream_commits(
+    spark: SparkSession, input_path: str, schema, checkpoint_dir: str,
+    manifest_path: str, manifest_schema, commit_batch,
+    max_files_per_trigger: Optional[int] = None,
+):
+    """The manifest protocol's one stream: an availableNow foreachBatch
+    over the parquet files under `input_path` that commits each
+    micro-batch by commit_batch(batch_df, batch_id, seen), `seen` being
+    the committed manifest (None before the first commit).
+
+    foreachBatch is at-least-once, so the redelivery probe skips a batch
+    whose batch_id the manifest records; a batch killed between its two
+    writes never reached the manifest and commits again under a fresh
+    run_id. The probe is _exists plus a pinned-schema read: no inference
+    job, and a failure other than not-found raises."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        seen = _read(batch_df.sparkSession, manifest_path, manifest_schema)
+        if seen is not None and (
+            seen.filter(F.col("batch_id") == batch_id).limit(1).count()
+        ):
+            return  # redelivered, already committed
+        commit_batch(batch_df, batch_id, seen)
+
+    return (
+        reader.parquet(input_path)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def read_committed_spans(spark: SparkSession, output_dir: str) -> DataFrame:
+    """Exactly-once read view of the span table: only spans whose run the
+    lineage records are visible (none before the first commit). Orphan
+    files from a run killed between the spans write and the lineage commit
+    are filtered out (_committed)."""
+    return _committed(spark, os.path.join(output_dir, "spans"), WRITTEN_SCHEMA,
+                      os.path.join(output_dir, "lineage"))
 
 
 def run_extraction_pipeline(
@@ -255,19 +328,14 @@ def run_extraction_pipeline(
     extracted = extracted.withColumn("bucket", _bucket(n_buckets))
 
     if output_dir:
-        run_id = uuid.uuid4().hex
-        # the ONE pass over the raw input: extract + write spans
-        extracted.withColumn("run_id", F.lit(run_id)).write.mode(
-            "append"
-        ).partitionBy("bucket").parquet(spans_path)
-        # lineage from the durable files — a column-pruned scan of
-        # (bucket, seq, parse_error, run_id); other runs' files are skipped
-        # via parquet stats on the constant run_id column
-        written = spark.read.schema(WRITTEN_SCHEMA).parquet(spans_path).filter(
-            F.col("run_id") == run_id
+        # the ONE pass over the raw input: extract + write spans; lineage
+        # from the durable files — a column-pruned scan of (bucket, seq,
+        # parse_error, run_id); other runs' files are skipped via parquet
+        # stats on the constant run_id column
+        written, run_id = _append_commit(
+            extracted, spans_path, WRITTEN_SCHEMA, _lineage_agg, lineage_path,
+            partition_by=("bucket",),
         )
-        lineage = _lineage_agg(written).withColumn("run_id", F.lit(run_id))
-        _commit_lineage(lineage, lineage_path)
         committed = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path).filter(
             F.col("run_id") == run_id
         )
@@ -304,89 +372,38 @@ def streaming_extraction(
     checkpoint_dir: str,
     doc_type: Optional[str] = None,
     n_buckets: int = 64,
-    available_now: bool = True,
     max_files_per_trigger: Optional[int] = None,
 ):
-    """Structured-Streaming variant of the extraction job: continuously
-    ingest interleaved-document files, extract, and append spans + lineage.
-
-    Spark-first shape: the SAME Arrow-batched extraction operator runs on
-    the stream (mapInPandas is streaming-compatible); per-micro-batch
-    lineage is written via foreachBatch so each batch commits spans and
-    its lineage rows together. Exactly-once across restarts comes from the
-    checkpoint; the per-bucket lineage additionally enables the same
-    committed-bucket resume protocol as the batch job.
+    """Structured-Streaming variant of the extraction job: the SAME
+    Arrow-batched extraction operator (mapInPandas is streaming-compatible)
+    over interleaved-document files, each micro-batch's spans + lineage
+    committed under the manifest protocol into the batch job's layout —
+    so read_committed_spans reads it and a batch run over the same dir
+    resumes past its buckets.
 
     The reference has no streaming surface (SURVEY.md §2.8) — this is the
     pipeline-level capability a continuous crawl ingest needs."""
     from .udfs import SPANS_ARRAY
 
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("doc_type", StringType()),
-            StructField("spans", SPANS_ARRAY),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-
+    schema = StructType([StructField("doc_id", StringType()),
+                         StructField("doc_type", StringType()),
+                         StructField("spans", SPANS_ARRAY)])
     spans_path = os.path.join(output_dir, "spans")
     lineage_path = os.path.join(output_dir, "lineage")
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: on restart the last batch can be
-        # redelivered. Lineage is the commit record, so a batch whose
-        # batch_id is already committed is skipped wholesale, and a batch
-        # killed between the spans write and the lineage commit leaves
-        # only orphan span files under a run_id that never reaches the
-        # manifest — invisible to read_committed_spans; the redelivery
-        # rewrites it under a fresh run_id. Exactly-once at the read
-        # surface either way.
-        #
-        # The probe is Hadoop's FileSystem.exists (_exists), then a read
-        # under the pinned STREAM_LINEAGE_SCHEMA: no schema-inference job,
-        # and a failure other than not-found raises rather than letting a
-        # redelivered batch re-commit under a fresh run_id and double-count
-        # its spans at the read surface.
-        session = batch_df.sparkSession
-        if _exists(session, lineage_path) and (
-            session.read.schema(STREAM_LINEAGE_SCHEMA)
-            .parquet(lineage_path)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-        ):
-            return
-        run_id = uuid.uuid4().hex
-        extracted = (
-            extract_spans_df(batch_df, doc_type)
-            .withColumn("bucket", _bucket(n_buckets))
-            .withColumn("run_id", F.lit(run_id))
+    def commit_batch(batch_df: DataFrame, batch_id: int, seen) -> None:
+        extracted = extract_spans_df(batch_df, doc_type).withColumn(
+            "bucket", _bucket(n_buckets)
         )
-        extracted.persist()
-        try:
-            extracted.write.mode("append").partitionBy("bucket").parquet(spans_path)
-            lineage = (
-                _lineage_agg(extracted)
-                .withColumn("run_id", F.lit(run_id))
-                .withColumn("batch_id", F.lit(batch_id))
-            )
-            _commit_lineage(lineage, lineage_path)
-        finally:
-            extracted.unpersist()
+        _append_commit(
+            extracted, spans_path, WRITTEN_SCHEMA, _lineage_agg, lineage_path,
+            batch_id, ("bucket",),
+        )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _stream_commits(
+        spark, input_path, schema, checkpoint_dir, lineage_path,
+        STREAM_LINEAGE_SCHEMA, commit_batch, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def verification_join(extracted: DataFrame, golden: DataFrame) -> DataFrame:

@@ -1,18 +1,22 @@
 """Structured-Streaming operators beyond the extraction job.
 
 The reference is batch-parse only (SURVEY.md §2.8); these are the
-pipeline-level streaming capabilities a continuous ingest needs —
-watermarked tumbling-window aggregation over an event stream, expressed
-with the built-in streaming operators (no custom state)."""
+pipeline-level streaming capabilities a continuous ingest needs:
+watermarked tumbling-window aggregation over an event stream (built-in
+streaming operators), per-user sessionization with custom state
+(applyInPandasWithState), and the exact and near-duplicate dedup ingest
+against committed history, which writes, probes and reads through the
+manifest protocol of pipeline.py."""
 
 from __future__ import annotations
 
 import os
 from typing import Optional
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .pipeline import _append_commit, _committed, _stream_commits
 
 
 def windowed_event_counts(events: DataFrame, window: str = "1 day") -> DataFrame:
@@ -215,90 +219,52 @@ def dedup_novel(
     )
 
 
+# The dedup ingest's input documents, its novel rows as written (the
+# kernel appends `digest`), and its two manifests.
+DOCS_SCHEMA = "doc_id long, text string"
+NOVEL_SCHEMA = "digest string, doc_id long, text string, run_id string"
+DIGESTS_SCHEMA = "digest string, run_id string, batch_id int"
+NEAR_NOVEL_SCHEMA = "doc_id long, text string, run_id string"
+BANDS_SCHEMA = "band int, bucket long, run_id string, batch_id int"
+
+
 def streaming_exact_dedup(
     spark: SparkSession,
     input_path: str,
     output_dir: str,
     checkpoint_dir: str,
-    schema: str = "doc_id long, text string",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_files_per_trigger: Optional[int] = None,
 ):
-    """Continuously ingest documents and emit only never-seen-before
-    content: each micro-batch is deduplicated against ITSELF and against
-    every previously committed batch (the training-ingest "have we crawled
-    this page before" gate).
+    """Continuously ingest (doc_id, text) documents and emit only
+    never-seen-before content: each micro-batch is deduplicated against
+    ITSELF and against every previously committed batch (the
+    training-ingest "have we crawled this page before" gate).
 
-    Same manifest protocol as the extraction job (pipeline module
-    docstring): novel rows land first under a fresh run_id, then the
-    (digest, batch_id, run_id) rows are appended to the digest manifest —
-    the manifest append IS the commit. foreachBatch is at-least-once; a
-    redelivered batch whose batch_id is already in the manifest is skipped
-    wholesale, and a batch killed between the two writes leaves novel rows
-    whose (batch_id, run_id) never reaches the manifest — invisible to
-    `read_novel_docs`, re-written by the redelivery. The seen-set read
-    only trusts manifest digests, so orphans can never suppress a
-    legitimate novel row either."""
-    stream_reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        stream_reader = stream_reader.option(
-            "maxFilesPerTrigger", max_files_per_trigger
-        )
-    stream = stream_reader.parquet(input_path)
-
+    The manifest protocol of the extraction job (pipeline module
+    docstring): novel rows land under novel/, then their digests are
+    committed to the digests/ manifest. The seen set is that manifest, so
+    orphan rows of a killed batch can never suppress a legitimate novel
+    row; `read_novel_docs` is the committed-only view."""
     novel_path = os.path.join(output_dir, "novel")
     digest_path = os.path.join(output_dir, "digests")
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import uuid as _uuid
-
-        s = batch_df.sparkSession
-        seen = None
-        try:
-            seen = s.read.parquet(digest_path)
-            if (
-                seen.filter(F.col("batch_id") == batch_id).limit(1).count()
-            ):
-                return  # redelivered, already committed
-        except AnalysisException:
-            pass  # first batch ever
-        run_id = _uuid.uuid4().hex
-        novel = dedup_novel(batch_df, seen, text_col, id_col).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).withColumn("run_id", F.lit(run_id))
-        novel.write.mode("append").parquet(novel_path)
-        # commit point: manifest rows derive from the durable novel files
-        # (no second dedup pass, and the manifest can never disagree with
-        # what was actually written)
-        (
-            s.read.parquet(novel_path)
-            .filter((F.col("batch_id") == batch_id) & (F.col("run_id") == run_id))
-            .select("digest", "batch_id", "run_id")
-            .write.mode("append")
-            .parquet(digest_path)
+    def commit_batch(batch_df: DataFrame, batch_id: int, seen) -> None:
+        _append_commit(
+            dedup_novel(batch_df, seen), novel_path, NOVEL_SCHEMA,
+            lambda written: written.select("digest"), digest_path, batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_commits(
+        spark, input_path, DOCS_SCHEMA, checkpoint_dir, digest_path,
+        DIGESTS_SCHEMA, commit_batch, max_files_per_trigger,
     )
 
 
 def read_novel_docs(spark: SparkSession, output_dir: str) -> DataFrame:
     """Committed-only read view of the streaming dedup output: novel rows
-    whose (batch_id, run_id) is recorded in the digest manifest. Broadcast
-    semi-join against the metadata-sized (batch, run) pairs — the novel
-    table never shuffles."""
-    novel = spark.read.parquet(os.path.join(output_dir, "novel"))
-    manifest = (
-        spark.read.parquet(os.path.join(output_dir, "digests"))
-        .select("batch_id", "run_id")
-        .distinct()
-    )
-    return novel.join(F.broadcast(manifest), ["batch_id", "run_id"], "left_semi")
+    whose run the digest manifest records (pipeline._committed)."""
+    return _committed(spark, os.path.join(output_dir, "novel"), NOVEL_SCHEMA,
+                      os.path.join(output_dir, "digests"))
 
 
 def near_novel(
@@ -374,93 +340,42 @@ def streaming_near_dedup(
     input_path: str,
     output_dir: str,
     checkpoint_dir: str,
-    schema: str = "doc_id long, text string",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
     max_files_per_trigger: Optional[int] = None,
 ):
     """Continuous NEAR-dedup ingest: each micro-batch keeps only docs
-    that are not near-duplicates (minhash-LSH collision) of anything
-    previously committed or of an earlier doc in the same batch.
+    that are not near-duplicates (minhash-LSH collision, near_novel's
+    defaults) of anything previously committed or of an earlier doc in
+    the same batch.
 
-    Identical manifest protocol to streaming_exact_dedup — novel rows
-    land under a fresh run_id, then the survivors' BAND KEYS (band,
-    bucket, batch_id, run_id) are appended to the band manifest; the
-    manifest append IS the commit. Redelivered batch_ids are skipped;
-    a crash between the writes leaves orphan novel rows invisible to
-    read_novel_docs and re-written by the redelivery; the seen-set
-    only trusts manifest keys. Output layout: novel/ + bands/ under
-    output_dir (read_novel_docs reads novel/ against bands/)."""
-    stream_reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        stream_reader = stream_reader.option(
-            "maxFilesPerTrigger", max_files_per_trigger
-        )
-    stream = stream_reader.parquet(input_path)
+    The manifest protocol of streaming_exact_dedup, with the survivors'
+    BAND KEYS (band, bucket) as the manifest: novel rows land under
+    novel/, then the band keys of the rows actually written are committed
+    to bands/, the seen set of later batches. read_near_novel_docs is the
+    committed-only view."""
+    from fuzi_spark.ops.cache import cache_scope
 
     novel_path = os.path.join(output_dir, "novel")
     bands_path = os.path.join(output_dir, "bands")
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import uuid as _uuid
-
-        from fuzi_spark.ops.cache import cache_scope
-
-        s = batch_df.sparkSession
-        seen = None
-        try:
-            seen = s.read.parquet(bands_path)
-            if seen.filter(F.col("batch_id") == batch_id).limit(1).count():
-                return  # redelivered, already committed
-        except AnalysisException:
-            pass  # first batch ever
-        run_id = _uuid.uuid4().hex
+    def commit_batch(batch_df: DataFrame, batch_id: int, seen) -> None:
         with cache_scope():
-            novel, novel_bands = near_novel(
-                batch_df, seen, text_col, id_col, n_hashes, bands, shingle_n
-            )
-            novel = novel.withColumn("batch_id", F.lit(batch_id)).withColumn(
-                "run_id", F.lit(run_id)
-            )
-            novel.write.mode("append").parquet(novel_path)
-            # commit point: band keys derive from the DURABLE novel rows
-            committed_ids = (
-                s.read.parquet(novel_path)
-                .filter(
-                    (F.col("batch_id") == batch_id)
-                    & (F.col("run_id") == run_id)
-                )
-                .select(id_col)
-            )
-            (
-                novel_bands.join(committed_ids, id_col, "left_semi")
-                .select("band", "bucket")
-                .withColumn("batch_id", F.lit(batch_id))
-                .withColumn("run_id", F.lit(run_id))
-                .write.mode("append")
-                .parquet(bands_path)
+            novel, novel_bands = near_novel(batch_df, seen)
+            _append_commit(
+                novel, novel_path, NEAR_NOVEL_SCHEMA,
+                lambda written: novel_bands.join(
+                    written.select("doc_id"), "doc_id", "left_semi"
+                ).select("band", "bucket"),
+                bands_path, batch_id,
             )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_commits(
+        spark, input_path, DOCS_SCHEMA, checkpoint_dir, bands_path,
+        BANDS_SCHEMA, commit_batch, max_files_per_trigger,
     )
 
 
 def read_near_novel_docs(spark: SparkSession, output_dir: str) -> DataFrame:
     """Committed-only view of streaming_near_dedup output: novel rows
-    whose (batch_id, run_id) is in the band manifest."""
-    novel = spark.read.parquet(os.path.join(output_dir, "novel"))
-    manifest = (
-        spark.read.parquet(os.path.join(output_dir, "bands"))
-        .select("batch_id", "run_id")
-        .distinct()
-    )
-    return novel.join(
-        F.broadcast(manifest), ["batch_id", "run_id"], "left_semi"
-    )
+    whose run the band manifest records (pipeline._committed)."""
+    return _committed(spark, os.path.join(output_dir, "novel"), NEAR_NOVEL_SCHEMA,
+                      os.path.join(output_dir, "bands"))

@@ -8,6 +8,7 @@ means the distributed path (codec, shuffle, salting, Arrow transfer)
 changed observable semantics.
 """
 
+import contextlib
 import hashlib
 import json
 import os
@@ -453,7 +454,7 @@ class TestLeanCommit:
         assert len(sc.statusTracker().getJobIdsForGroup("fresh-run")) == 4
 
     def test_streaming_lineage_schema_pinned(self, spark, tmp_path):
-        """Streaming lineage holds a computed bigint `bucket` and its
+        """Streaming lineage holds a computed int `bucket` and its
         batch_id; the pinned schema the batch probe reads it with matches
         what is written, and read_committed_spans reads streaming output."""
         from fuzi_spark.pipeline import (
@@ -1070,6 +1071,197 @@ class TestStreamingNearDedup:
         # 5k: the skew-tail docs exceed it and take the salted route;
         # huge: nothing does
         assert run(5_000) == run(10_000_000_000)
+
+
+def _dedup_surface(kind):
+    """(streaming wrapper, committed-only view) of one streaming dedup."""
+    from fuzi_spark import streaming
+
+    if kind == "exact":
+        return streaming.streaming_exact_dedup, streaming.read_novel_docs
+    return streaming.streaming_near_dedup, streaming.read_near_novel_docs
+
+
+def _dedup_batches(spark, inp, n_batches):
+    """One file per micro-batch: a shared text twice in every batch
+    (within- and cross-batch duplicate) plus three texts of their own,
+    token-disjoint from every other text, so each batch commits rows."""
+    shared = " ".join(f"shared{j}" for j in range(12))
+    for k in range(n_batches):
+        rows = [(k * 100, shared), (k * 100 + 1, shared)] + [
+            (k * 100 + 10 + i, " ".join(f"k{k}i{i}w{j}" for j in range(12)))
+            for i in range(3)
+        ]
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("append").parquet(inp)
+
+
+@contextlib.contextmanager
+def _failing_commit(fail_on):
+    """Patch the one commit seam so its `fail_on`-th call (0-based) raises."""
+    from fuzi_spark import pipeline
+
+    real, calls = pipeline._commit_lineage, []
+
+    def commit(manifest, path):
+        calls.append(path)
+        if len(calls) - 1 == fail_on:
+            raise RuntimeError("simulated kill between data and manifest")
+        real(manifest, path)
+
+    pipeline._commit_lineage = commit
+    try:
+        yield
+    finally:
+        pipeline._commit_lineage = real
+
+
+def _last_job_id(sc, group):
+    """Id of a one-job marker run under `group`: job ids are sequential,
+    so the difference of two markers counts the jobs between them."""
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestManifestProtocol:
+    """The batch job, streaming extraction and both streaming dedups
+    write, probe and read through one manifest protocol (pipeline.py)."""
+
+    VIEWS = {
+        "spans": TestLeanCommit.WRITTEN,
+        "exact": "struct<digest:string,doc_id:bigint,text:string,run_id:string>",
+        "near": "struct<doc_id:bigint,text:string,run_id:string>",
+    }
+
+    def _orphans_only(self, spark, tmp_path, kind, out):
+        """Write one run's data into `out` and kill it before its commit."""
+        from pyspark.errors import StreamingQueryException
+
+        from fuzi_spark.pipeline import run_extraction_pipeline
+
+        with _failing_commit(0):
+            if kind == "spans":
+                with pytest.raises(RuntimeError):
+                    run_extraction_pipeline(
+                        spark, _page_docs(spark, 20), output_dir=out,
+                        n_buckets=4, num_partitions=4,
+                    )
+                return
+            run, _ = _dedup_surface(kind)
+            inp = str(tmp_path / "in")
+            _dedup_batches(spark, inp, 1)
+            q = run(spark, inp, out, str(tmp_path / "cp"))
+            with pytest.raises(StreamingQueryException):
+                q.awaitTermination(120)
+
+    @pytest.mark.parametrize("kind", ["spans", "exact", "near"])
+    def test_view_empty_before_first_commit(self, spark, tmp_path, kind):
+        """Fresh dir, and a dir holding only a killed run's data files:
+        the committed-only view is an empty frame under its pinned
+        schema."""
+        from fuzi_spark.pipeline import read_committed_spans
+
+        view = read_committed_spans if kind == "spans" else _dedup_surface(kind)[1]
+        out = str(tmp_path / "out")
+        fresh = view(spark, out)
+        assert fresh.schema.simpleString() == self.VIEWS[kind]
+        assert fresh.count() == 0
+
+        self._orphans_only(spark, tmp_path, kind, out)
+        data = "spans" if kind == "spans" else "novel"
+        assert spark.read.parquet(os.path.join(out, data)).count() > 0
+        orphaned = view(spark, out)
+        assert orphaned.schema.simpleString() == self.VIEWS[kind]
+        assert orphaned.count() == 0
+
+    def test_batch_run_resumes_over_streamed_dir(self, spark, tmp_path):
+        """Streaming lineage is the batch job's lineage plus batch_id, so
+        a batch run over a streamed dir skips every committed bucket."""
+        from fuzi_spark.pipeline import (
+            committed_buckets,
+            read_committed_spans,
+            run_extraction_pipeline,
+            streaming_extraction,
+        )
+
+        def view():
+            return sorted(
+                (r.doc_id, r.seq, r.kind, r.text, r.media_ref)
+                for r in read_committed_spans(spark, out).collect()
+            )
+
+        inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+        docs = _page_docs(spark, 40)
+        docs.write.parquet(inp)
+        streaming_extraction(
+            spark, inp, out, str(tmp_path / "cp"), n_buckets=4
+        ).awaitTermination(120)
+        streamed = view()
+        assert len({r[0] for r in streamed}) == 40
+        lineage = os.path.join(out, "lineage")
+        assert committed_buckets(spark, lineage) == {0, 1, 2, 3}
+        raw = spark.read.parquet(os.path.join(out, "spans")).count()
+
+        written, committed = run_extraction_pipeline(
+            spark, docs, output_dir=out, n_buckets=4, num_partitions=4
+        )
+        assert written.count() == 0 and committed.count() == 0
+        assert spark.read.parquet(os.path.join(out, "spans")).count() == raw
+        assert view() == streamed
+
+    @pytest.mark.parametrize("kind", ["exact", "near"])
+    def test_dedup_kill_between_writes_is_exactly_once(self, spark, tmp_path, kind):
+        """Kill micro-batch 1 between its novel rows and its manifest
+        commit, restart from the same checkpoint: the committed view
+        equals a clean run's, and the orphan rows are still on disk."""
+        from pyspark.errors import StreamingQueryException
+
+        run, view = _dedup_surface(kind)
+        inp = str(tmp_path / "in")
+        _dedup_batches(spark, inp, 3)
+
+        def committed(out):
+            return sorted((r.doc_id, r.text) for r in view(spark, out).collect())
+
+        ref = str(tmp_path / "ref")
+        run(spark, inp, ref, str(tmp_path / "ref_cp"), max_files_per_trigger=1
+            ).awaitTermination(120)
+        expected = committed(ref)
+        # batch 0 keeps one shared copy, every batch its own three texts
+        assert len(expected) == 1 + 3 * 3
+
+        out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+        with _failing_commit(1):
+            q = run(spark, inp, out, cp, max_files_per_trigger=1)
+            with pytest.raises(StreamingQueryException):
+                q.awaitTermination(120)
+        run(spark, inp, out, cp, max_files_per_trigger=1).awaitTermination(120)
+
+        assert committed(out) == expected
+        raw = spark.read.parquet(os.path.join(out, "novel")).count()
+        assert raw > len(expected)
+
+    def test_exact_dedup_job_count(self, spark, tmp_path):
+        """Six micro-batches of streaming_exact_dedup launch at most 38
+        Spark jobs: the probe and the read-backs use pinned schemas, so
+        no job infers one from parquet footers."""
+        from fuzi_spark.streaming import streaming_exact_dedup
+
+        inp = str(tmp_path / "in")
+        _dedup_batches(spark, inp, 6)
+        sc = spark.sparkContext
+        before = _last_job_id(sc, f"before-{tmp_path.name}")
+        streaming_exact_dedup(
+            spark, inp, str(tmp_path / "out"), str(tmp_path / "cp"),
+            max_files_per_trigger=1,
+        ).awaitTermination(120)
+        after = _last_job_id(sc, f"after-{tmp_path.name}")
+        assert after - before - 1 <= 38
 
 
 class TestJobCurateCLI:
