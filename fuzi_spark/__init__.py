@@ -13,8 +13,13 @@ kylehughes/Fuzi (a Swift libxml2 wrapper), re-expressed Spark-first:
 - scale plumbing: doc_id-hash repartitioning, skew salting, per-partition
   lineage, checkpoint-resume (pipeline.py),
 - training-data ops: dedup, similarity search, text stats (ops/).
+
+Importing the package guards `zipimporter.invalidate_caches` (_zipcache.py),
+so a PySpark worker that runs a fuzi_spark function stops re-reading the
+zip archives on its path before every task.
 """
 
+from . import _zipcache
 from .css import css_to_xpath
 from .dom import DTD, Document, Element, EntityDecl, Node, Text
 from .errors import XMLError, XPathError
@@ -31,6 +36,8 @@ from .query import (
     xpath,
 )
 from .xmlparser import parse_xml
+
+_zipcache.install()
 
 __version__ = "0.1.0"
 

@@ -334,6 +334,10 @@ class Element(Node):
     def append(self, node: Node) -> None:
         node.parent = self
         self.children.append(node)
+        d = self.doc
+        if d is not None:  # its ranks and tag index are stale now
+            d.ranked = False
+            d._tags = None
 
     @property
     def element_children(self) -> list["Element"]:
@@ -527,6 +531,10 @@ class Element(Node):
         if self.parent is not None:
             self.parent.children.remove(self)
             self.parent = None
+            d = self.doc
+            if d is not None:  # its ranks and tag index are stale now
+                d.ranked = False
+                d._tags = None
 
     def deep_copy(self) -> "Element":
         # iterative like every other walker here: copying a depth-1500
@@ -579,7 +587,7 @@ class Document(Node):
     # __weakref__: a test checks that the DOMs a batch shares are freed with it
     __slots__ = (
         "version", "encoding", "root", "namespaces", "is_html", "errors", "children", "dtd",
-        "__weakref__",
+        "ranked", "_tags", "__weakref__",
     )
     type = DOCUMENT_NODE
 
@@ -594,6 +602,30 @@ class Document(Node):
         self.errors: list[tuple[int, str]] = []  # (code, message)
         self.children: list[Node] = []  # top-level nodes (root + PIs/comments)
         self.dtd: Optional[DTD] = None  # internal subset, when declared
+        self.ranked = False  # every node's `ord` is current (assign_order)
+        self._tags: Optional[dict[str, list[Element]]] = None  # see tag_index
+
+    def tag_index(self) -> dict[str, list[Element]]:
+        """Local name -> every element of that name, in document order.
+
+        Built by one walk on first use, so XPath answers `//name` without
+        walking the tree again; `Element.append` and `Element.remove` drop
+        it. Edits made to `children` lists directly are not seen."""
+        idx = self._tags
+        if idx is None:
+            idx = {}
+            stack: list[Node] = list(reversed(self.children))
+            while stack:
+                n = stack.pop()
+                if n.type == ELEMENT_NODE:
+                    same = idx.get(n.tag)
+                    if same is None:
+                        idx[n.tag] = [n]
+                    else:
+                        same.append(n)
+                    stack.extend(reversed(n.children))
+            self._tags = idx
+        return idx
 
     def define_prefix(self, prefix: str, namespace: str) -> None:
         """reference Document.swift:162-164."""
@@ -608,7 +640,9 @@ class Document(Node):
         return "".join(c.raw_xml for c in self.children)
 
     def assign_order(self) -> None:
-        """Assign document-order ranks (post-parse, single pass)."""
+        """Assign document-order ranks (post-parse, single pass). XPath
+        calls it on first need when the parse skipped it or the tree
+        changed since."""
         i = 0
         stack: list[Node] = list(reversed(self.children))
         self.ord = i
@@ -617,7 +651,11 @@ class Document(Node):
             i += 1
             n.ord = i
             if n.type == ELEMENT_NODE:
+                if n._attr_nodes:
+                    for a in n._attr_nodes:
+                        a.ord = i
                 stack.extend(reversed(n.children))
+        self.ranked = True
 
     # HTML conveniences (reference Document.swift:197-209)
     @property

@@ -16,6 +16,24 @@ Expressions are compiled once (`compile_xpath`) and cached per process —
 an improvement over the reference, which re-compiles per call
 (Queryable.swift:299); in Spark this cache lives per executor across all
 Arrow batches.
+
+Compiling also plans the expression, so a document pays only for the work
+its query needs:
+- Rewrite. `_plan` turns each `descendant-or-self::node()/child::T[p]`
+  pair (what `//T[p]` parses to) into one `descendant::T[p]` step. If a
+  predicate may read its node's position (a number, position(), last()),
+  the step is marked `by_parent` and the predicates run on each parent's
+  hits apart, which is exactly what the child axis gave.
+- Index. `descendant::T` from the Document, or from a root element with no
+  other top-level element, reads `Document.tag_index()`: tag -> elements
+  in document order, built once per document on first use and dropped by
+  `Element.append` / `Element.remove`. A name test whose prefix is unbound
+  walks the tree instead, so 1219 is raised as before.
+- No sort. A step from one context node yields its axis order, reversed
+  for the reverse axes, which is document order already; only a step from
+  several context nodes merges and sorts (`_sort_ns`, which first ranks a
+  document whose `ord`s are not current).
+- A step resolves its name test's prefix once (`_node_test`), not per node.
 """
 
 from __future__ import annotations
@@ -30,6 +48,7 @@ from .dom import (
     ATTRIBUTE_NODE,
     COMMENT_NODE,
     DOCUMENT_NODE,
+    DTD_NODE,
     ELEMENT_NODE,
     PI_NODE,
     TEXT_NODE,
@@ -189,10 +208,15 @@ class FuncCall(_Ast):
 
 
 class Step(_Ast):
-    __slots__ = ("axis", "test", "preds")
+    """One location step. `by_parent` marks a `descendant` step planned from
+    `//T[p]` whose predicates read positions: they apply to the hits of each
+    parent apart, as the child axis they came from would (see `_plan`)."""
 
-    def __init__(self, axis, test, preds):
+    __slots__ = ("axis", "test", "preds", "by_parent")
+
+    def __init__(self, axis, test, preds, by_parent=False):
         self.axis, self.test, self.preds = axis, test, preds
+        self.by_parent = by_parent
 
 
 class Path(_Ast):
@@ -476,7 +500,84 @@ class _Parser:
 
 @lru_cache(maxsize=4096)
 def compile_xpath(expr: str) -> _Ast:
-    return _Parser(_lex(expr)).parse()
+    return _plan(_Parser(_lex(expr)).parse())
+
+
+# ---------------------------------------------------------------- plan
+
+_ANY_NODE = ("ntype", "node", None)
+# functions whose value is never a number: as a predicate, each one is a
+# test of its own context node, whatever that node's position
+_NON_NUMERIC_FUNCS = frozenset({
+    "id", "local-name", "name", "namespace-uri", "string", "concat",
+    "starts-with", "contains", "substring-before", "substring-after",
+    "substring", "normalize-space", "translate", "boolean", "not", "true",
+    "false", "lang",
+})
+
+
+def _subexprs(a: _Ast) -> list:
+    if isinstance(a, BinOp):
+        return [a.l, a.r]
+    if isinstance(a, Neg):
+        return [a.e]
+    if isinstance(a, Union):
+        return a.parts
+    if isinstance(a, FuncCall):
+        return a.args
+    if isinstance(a, Step):
+        return a.preds
+    if isinstance(a, Path):
+        head = [a.filter_expr] if a.filter_expr is not None else []
+        return head + a.steps + list(a.filter_preds)
+    return []
+
+
+def _reads_position(pred: _Ast) -> bool:
+    """Whether a predicate's value may depend on its node's position: a
+    number is a position test, and position()/last() read it (nested
+    predicates included, to stay on the safe side)."""
+    if isinstance(pred, (Num, Neg, Var)):
+        return True
+    if isinstance(pred, BinOp) and pred.op in ("+", "-", "*", "div", "mod"):
+        return True
+    if isinstance(pred, FuncCall) and pred.name not in _NON_NUMERIC_FUNCS:
+        return True
+    todo = [pred]
+    while todo:
+        a = todo.pop()
+        if isinstance(a, FuncCall) and a.name in ("position", "last"):
+            return True
+        todo.extend(_subexprs(a))
+    return False
+
+
+def _plan(ast: _Ast) -> _Ast:
+    """Rewrite every `descendant-or-self::node()/child::T[p]` step pair
+    (what `//T[p]` parses to) into one `descendant::T[p]` step. The two
+    select the same nodes; when a predicate reads positions, the step is
+    marked `by_parent` so the predicates still count among siblings."""
+    todo = [ast]
+    while todo:
+        a = todo.pop()
+        if isinstance(a, Path):
+            steps: list[Step] = []
+            for st in a.steps:
+                prev = steps[-1] if steps else None
+                if (
+                    st.axis == "child"
+                    and prev is not None
+                    and prev.axis == "descendant-or-self"
+                    and prev.test == _ANY_NODE
+                    and not prev.preds
+                ):
+                    by_parent = any(_reads_position(p) for p in st.preds)
+                    steps[-1] = Step("descendant", st.test, st.preds, by_parent)
+                else:
+                    steps.append(st)
+            a.steps = steps
+        todo.extend(_subexprs(a))
+    return ast
 
 
 # ---------------------------------------------------------------- values
@@ -491,13 +592,19 @@ def _doc_key(n: Node):
 
 
 def _sort_ns(nodes: list) -> list:
+    """Deduplicate and sort into document order, ranking the document
+    first if its `ord`s are not current."""
     seen = set()
     out = []
     for n in nodes:
         if id(n) not in seen:
             seen.add(id(n))
             out.append(n)
-    out.sort(key=_doc_key)
+    if len(out) > 1:
+        d = out[0].doc
+        if d is not None and not d.ranked:
+            d.assign_order()
+        out.sort(key=_doc_key)
     return out
 
 
@@ -575,6 +682,20 @@ class Context:
 # ---------------------------------------------------------------- axes
 
 
+def _parent_of(n: Node) -> Optional[Node]:
+    """The XPath parent: an attribute's owner element, a node's parent
+    element, or the Document for its top-level nodes (whose `parent` is
+    None in the DOM)."""
+    if n.type == ATTRIBUTE_NODE:
+        return n.owner
+    if n.parent is not None:
+        return n.parent
+    d = n.doc
+    if n.type != DOCUMENT_NODE and d is not None and n in d.children:
+        return d
+    return None
+
+
 def _axis_nodes(axis: str, n: Node):
     """Yield nodes along the axis in AXIS order (reverse axes reversed)."""
     if axis == "child":
@@ -591,11 +712,9 @@ def _axis_nodes(axis: str, n: Node):
                 if c.type == ELEMENT_NODE:
                     stack.extend(reversed(c.children))
     elif axis == "parent":
-        p = n.owner if n.type == ATTRIBUTE_NODE else n.parent
+        p = _parent_of(n)
         if p is not None:
             yield p
-        elif n.type != DOCUMENT_NODE and n.doc is not None and n in n.doc.children:
-            yield n.doc
     elif axis == "ancestor" or axis == "ancestor-or-self":
         if axis == "ancestor-or-self":
             yield n
@@ -605,46 +724,35 @@ def _axis_nodes(axis: str, n: Node):
             p = p.parent
         if n.doc is not None and n.type != DOCUMENT_NODE:
             yield n.doc
-    elif axis == "following-sibling":
-        p = n.parent
+    elif axis == "following-sibling" or axis == "preceding-sibling":
+        p = _parent_of(n)
         if p is not None and n.type != ATTRIBUTE_NODE:
             sibs = p.children
             try:
                 i = sibs.index(n)
             except ValueError:
                 return
-            yield from sibs[i + 1 :]
-    elif axis == "preceding-sibling":
-        p = n.parent
-        if p is not None and n.type != ATTRIBUTE_NODE:
-            sibs = p.children
-            try:
-                i = sibs.index(n)
-            except ValueError:
-                return
-            yield from reversed(sibs[:i])
+            if axis == "following-sibling":
+                yield from sibs[i + 1 :]
+            else:
+                # libxml2 skips the DTD node on both reverse axes
+                yield from (s for s in reversed(sibs[:i]) if s.type != DTD_NODE)
     elif axis == "following":
         cur = n.owner if n.type == ATTRIBUTE_NODE else n
-        while cur is not None:
-            p = cur.parent
-            if p is None:
-                break
+        while (p := _parent_of(cur)) is not None:
             sibs = p.children
-            i = sibs.index(cur)
-            for s in sibs[i + 1 :]:
+            for s in sibs[sibs.index(cur) + 1 :]:
                 yield s
                 if s.type == ELEMENT_NODE:
                     yield from _axis_nodes("descendant", s)
             cur = p
     elif axis == "preceding":
         cur = n.owner if n.type == ATTRIBUTE_NODE else n
-        while cur is not None:
-            p = cur.parent
-            if p is None:
-                break
+        while (p := _parent_of(cur)) is not None:
             sibs = p.children
-            i = sibs.index(cur)
-            for s in reversed(sibs[:i]):
+            for s in reversed(sibs[: sibs.index(cur)]):
+                if s.type == DTD_NODE:
+                    continue
                 # reverse doc order: deepest last nodes first
                 desc = list(_axis_nodes("descendant", s))
                 yield from reversed(desc)
@@ -670,47 +778,51 @@ def _attr_prefix_uri(attr: Attr, apfx) -> Optional[str]:
 
 _REVERSE_AXES = {"ancestor", "ancestor-or-self", "preceding", "preceding-sibling"}
 
-_PRINCIPAL = {"attribute": ATTRIBUTE_NODE}
 
-
-def _match_test(test, axis: str, n: Node, ns: dict) -> bool:
+def _node_test(test, axis: str, ns: dict):
+    """The step's node test as one function of a node. A name test's prefix
+    is resolved here, once per step; an unbound prefix raises 1219 at the
+    first node of the axis's principal type, as libxml2 does."""
     kind = test[0]
-    principal = _PRINCIPAL.get(axis, ELEMENT_NODE)
     if kind == "ntype":
-        k = test[1]
+        k, target = test[1], test[2]
         if k == "node":
-            return True
+            return lambda n: True
         if k == "text":
-            return n.type == TEXT_NODE
+            return lambda n: n.type == TEXT_NODE
         if k == "comment":
-            return n.type == COMMENT_NODE
+            return lambda n: n.type == COMMENT_NODE
         if k == "processing-instruction":
-            if n.type != PI_NODE:
-                return False
-            return test[2] is None or n.target == test[2]
-        return False
+            return lambda n: n.type == PI_NODE and (target is None or n.target == target)
+        return lambda n: False
     prefix, local = test[1], test[2]
-    if n.type != principal:
-        return False
+    principal = ATTRIBUTE_NODE if axis == "attribute" else ELEMENT_NODE
+    uri = None
     if prefix is not None:
         uri = ns.get(prefix)
         if uri is None:
-            raise XPathError(ERR_XPATH_UNDEF_PREFIX, f"undefined prefix {prefix!r}")
-    else:
-        uri = None
+            def unbound(n):
+                if n.type == principal:
+                    raise XPathError(ERR_XPATH_UNDEF_PREFIX, f"undefined prefix {prefix!r}")
+                return False
+
+            return unbound
     if principal == ATTRIBUTE_NODE:
-        name = n.local_name if prefix is not None else n.name
-        if local != "*" and name.rsplit(":", 1)[-1] != local:
-            return False
-        if prefix is not None:
-            apfx = n.name.split(":", 1)[0] if ":" in n.name else None
-            auri = _attr_prefix_uri(n, apfx)
-            return auri == uri
-        return ":" not in n.name or local == "*"
-    # element
-    if local != "*" and n.tag != local:
-        return False
-    return (n.ns_uri or None) == uri
+        def attr_test(n):
+            if n.type != ATTRIBUTE_NODE:
+                return False
+            name = n.local_name if prefix is not None else n.name
+            if local != "*" and name.rsplit(":", 1)[-1] != local:
+                return False
+            if prefix is not None:
+                apfx = n.name.split(":", 1)[0] if ":" in n.name else None
+                return _attr_prefix_uri(n, apfx) == uri
+            return ":" not in n.name or local == "*"
+
+        return attr_test
+    if local == "*":
+        return lambda n: n.type == ELEMENT_NODE and (n.ns_uri or None) == uri
+    return lambda n: n.type == ELEMENT_NODE and n.tag == local and (n.ns_uri or None) == uri
 
 
 # ---------------------------------------------------------------- evaluator
@@ -859,21 +971,66 @@ class _Evaluator:
         else:
             nodes = [ctx.node]
         for st in a.steps:
-            nodes = self._do_step(st, nodes, ctx)
+            nodes = self._do_step(st, nodes)
         return nodes
 
-    def _do_step(self, st: Step, nodes: list, outer_ctx: Context) -> list:
-        results = []
-        for cn in nodes:
-            cand = [
-                n
-                for n in _axis_nodes(st.axis, cn)
-                if _match_test(st.test, st.axis, n, self.ns)
+    def _do_step(self, st: Step, nodes: list) -> list:
+        axis, preds = st.axis, st.preds
+        test = _node_test(st.test, axis, self.ns)
+        each = preds if not st.by_parent else ()
+        if len(nodes) == 1:
+            # one context node: the axis order is document order, or its
+            # reverse, so there is nothing to merge
+            hits = self._axis_hits(st, test, nodes[0])
+            if each:
+                hits = self._apply_predicates(hits, each)
+            if axis in _REVERSE_AXES:
+                hits.reverse()
+        else:
+            hits = []
+            for cn in nodes:
+                cand = self._axis_hits(st, test, cn)
+                if each:
+                    cand = self._apply_predicates(cand, each)
+                hits.extend(cand)
+            hits = _sort_ns(hits)
+        if st.by_parent:
+            hits = self._per_parent(hits, preds)
+        return hits
+
+    def _axis_hits(self, st: Step, test, cn: Node) -> list:
+        """The nodes of `st`'s axis from `cn` that pass its node test, in
+        axis order. `descendant::T` from the Document, or from a root
+        element with no top-level element beside it, reads the Document's
+        tag index instead of walking the tree."""
+        kind, prefix, local = st.test
+        doc = cn.doc
+        if (
+            st.axis == "descendant"
+            and kind == "name"
+            and local != "*"
+            and doc is not None
+            and (prefix is None or self.ns.get(prefix) is not None)
+            and (cn is doc or (cn is doc.root and _sole_element(doc, cn)))
+        ):
+            uri = None if prefix is None else self.ns[prefix]
+            return [
+                e
+                for e in doc.tag_index().get(local, ())
+                if e is not cn and (e.ns_uri or None) == uri
             ]
-            if st.preds:
-                cand = self._apply_predicates(cand, st.preds)
-            results.extend(cand)
-        return _sort_ns(results)
+        return [n for n in _axis_nodes(st.axis, cn) if test(n)]
+
+    def _per_parent(self, hits: list, preds) -> list:
+        """`child::T[p]` over every parent of `hits` (the `descendant::T`
+        hits in document order): positions count among one parent's hits."""
+        groups: dict[int, list] = {}
+        for n in hits:
+            groups.setdefault(id(n.parent), []).append(n)
+        kept = set()
+        for g in groups.values():
+            kept.update(map(id, self._apply_predicates(g, preds)))
+        return [n for n in hits if id(n) in kept]
 
     def _apply_predicates(self, cand: list, preds) -> list:
         for p in preds:
@@ -1057,6 +1214,12 @@ class _Evaluator:
 
 
 # ---------------------------------------------------------------- API
+
+
+def _sole_element(doc: Document, el: Element) -> bool:
+    """Whether `el` is the only element at the top level of `doc`."""
+    tops = [c for c in doc.children if c.type == ELEMENT_NODE]
+    return len(tops) == 1 and tops[0] is el
 
 
 def build_namespace_map(node: Node, doc: Document) -> dict[str, str]:

@@ -197,6 +197,107 @@ def test_relative_vs_absolute_anchor():
     assert len(fz.xpath(hdr, "./title")) == 1
 
 
+class TestTopLevelAxes:
+    """The Document is the parent of its top-level nodes, so the sibling,
+    following and preceding axes reach the comments and PIs beside the
+    root element (XPath 1.0 §2.2; libxml2 agrees)."""
+
+    DOC = "<!--before--><r><a/></r><!--after--><?pi x?>"
+
+    @pytest.mark.parametrize(
+        "expr, want",
+        [
+            ("/r/following-sibling::node()", ["<!--after-->", "<?pi x?>"]),
+            ("//a/following::comment()", ["<!--after-->"]),
+            ("/r/preceding-sibling::comment()", ["<!--before-->"]),
+            ("//a/preceding::comment()", ["<!--before-->"]),
+        ],
+    )
+    def test_axis_reaches_top_level(self, expr, want):
+        d = fz.parse_xml(self.DOC)
+        assert [n.raw_xml for n in fz.try_xpath(d, expr)] == want
+
+    def test_reverse_axes_skip_the_dtd(self):
+        d = fz.parse_xml('<!DOCTYPE r [<!ENTITY e "x">]><!--c--><r><a/></r>')
+        assert [n.raw_xml for n in fz.try_xpath(d, "//a/preceding::node()")] == ["<!--c-->"]
+        assert [n.raw_xml for n in fz.try_xpath(d, "/r/preceding-sibling::node()")] == [
+            "<!--c-->"]
+
+
+class TestPlan:
+    """`compile_xpath` plans `//T` as one descendant step, read from the
+    Document's tag index; every answer stays the one the walk gives."""
+
+    def test_double_slash_is_one_descendant_step(self):
+        from fuzi_spark.xpath import Path, compile_xpath
+
+        plan = compile_xpath("//p")
+        assert isinstance(plan, Path) and plan.absolute
+        assert [(s.axis, s.test, s.by_parent) for s in plan.steps] == [
+            ("descendant", ("name", None, "p"), False)]
+        (step,) = compile_xpath("//p[2]").steps
+        assert (step.axis, step.by_parent) == ("descendant", True)
+        for boolean in ("//p[@a='v']", "//p[contains(., 'x')][q]"):
+            (step,) = compile_xpath(boolean).steps
+            assert (step.axis, step.by_parent) == ("descendant", False)
+        for positional in ("//p[position()>1]", "//p[last()]", "//p[count(q)]",
+                           "//p[not(position()=1)]"):
+            (step,) = compile_xpath(positional).steps
+            assert (step.axis, step.by_parent) == ("descendant", True), positional
+
+    def test_positional_predicate_counts_per_parent(self):
+        d = fz.parse_xml("<r><p i='1'/><s><p i='2'/><p i='3'/></s><p i='4'/></r>")
+        assert [e.attr("i") for e in fz.xpath(d, "//p[2]")] == ["3", "4"]
+        assert [e.attr("i") for e in fz.xpath(d, "//p[last()]")] == ["3", "4"]
+        assert [e.attr("i") for e in fz.xpath(d, "//p[position()>1]")] == ["3", "4"]
+        assert [e.attr("i") for e in fz.xpath(d, "(//p)[2]")] == ["2"]
+
+    def test_mutation_drops_the_index(self):
+        d = fz.parse_xml("<r><a><p/></a><b/></r>")
+        assert len(fz.xpath(d, "//p")) == 1
+        a = fz.xpath(d, "//a")[0]
+        a.remove()
+        assert fz.xpath(d, "//p") == []
+        assert fz.xpath(d, "//a") == []
+        b = fz.xpath(d, "//b")[0]
+        b.append(fz.Element("p", d))
+        b.append(a)
+        assert [e.parent.tag for e in fz.xpath(d, "//p")] == ["b", "a"]
+        assert len(fz.xpath(d.root, ".//a")) == 1
+
+    def test_root_with_a_top_level_sibling_walks(self):
+        # the recovering XML parser keeps a second top-level element; the
+        # index covers both, a query from the root element only its own
+        d = fz.parse_xml('<a><x i="1"/></a><b><x i="2"/></b>')
+        assert [e.attr("i") for e in fz.xpath(d, "//x")] == ["1", "2"]
+        assert [e.attr("i") for e in fz.xpath(d.root, ".//x")] == ["1"]
+        assert [e.attr("i") for e in fz.css(d, "x")] == ["1"]
+
+    def test_unbound_prefix_still_raises_1219(self):
+        from fuzi_spark.xpath import ERR_XPATH_UNDEF_PREFIX
+
+        d = fz.parse_xml("<root><child/></root>")
+        for expr in ("//u:x", "//u:x[1]", ".//u:x"):
+            with pytest.raises(fz.XPathError) as ei:
+                fz.try_xpath(d, expr)
+            assert ei.value.code == ERR_XPATH_UNDEF_PREFIX
+
+    @pytest.mark.parametrize("parse", [fz.parse_xml, fz.parse_html])
+    def test_unordered_doc_answers_the_same(self, parse):
+        src = ("<r><ul><li>1<ul><li>2</li><li>3</li></ul></li><li>4</li></ul>"
+               "<p class='x'>5</p><div><p>6</p></div></r>")
+        exprs = ["//li", "//li[2]", "//ul/li", "//ul//li[last()]",
+                 "//li/preceding-sibling::li", "//li/ancestor::ul", "//p[@class]",
+                 "//*[self::p or self::li]", "//li/following::p"]
+        ordered, unordered = parse(src), parse(src, assign_order=False)
+        for expr in exprs:
+            assert [n.raw_xml for n in fz.xpath(unordered, expr)] == [
+                n.raw_xml for n in fz.xpath(ordered, expr)], expr
+        for sel in ("ul li + li", "div > p", "p.x"):
+            assert [n.raw_xml for n in fz.css(unordered, sel)] == [
+                n.raw_xml for n in fz.css(ordered, sel)], sel
+
+
 class TestReviewHardening:
     """Regression tests for engine-crash and spec-deviation findings:
     every case previously raised a non-XPathError (killing a Spark task)
@@ -264,10 +365,13 @@ class TestReviewHardening:
 
 class TestSpecDifferential:
     """Randomized differential against a tiny spec-literal evaluator for
-    the restricted grammar /name[pred] and //name[pred] (child and
-    descendant-or-self axes; positional, last(), attribute, and
-    child-element predicates — applied PER CONTEXT NODE as XPath 1.0
-    requires). Validated clean on 12k queries before pinning."""
+    the restricted grammar /name[pred], //name[pred] and /axis::name[pred]
+    (child, descendant-or-self and the parent, ancestor, sibling and
+    preceding axes; positional, last(), position()>1, attribute,
+    contains() and child-element predicates — applied PER CONTEXT NODE, in
+    the axis's own order, as XPath 1.0 requires). Paths start at the root
+    or, as `.//`, at a non-root element. Validated clean on 12k queries
+    before pinning."""
 
     @staticmethod
     def _all_desc(node):
@@ -281,21 +385,65 @@ class TestSpecDifferential:
             stack = [k for k in c.children if k.type == ELEMENT_NODE] + stack
         return out
 
+    @staticmethod
+    def _ancestors(node):
+        out = []
+        while node.parent is not None:
+            node = node.parent
+            out.append(node)
+        return out
+
     @classmethod
-    def _ref_eval(cls, doc, path):
+    def _axis(cls, doc, axis, cn):
+        """Elements on `axis` from `cn`, nearest first."""
+        from fuzi_spark.dom import ELEMENT_NODE
+
+        if axis == "child":
+            return [c for c in cn.children if c.type == ELEMENT_NODE]
+        if axis == "parent":
+            return [cn.parent] if cn.parent is not None else []
+        if axis == "ancestor":
+            return cls._ancestors(cn)
+        if axis == "ancestor-or-self":
+            return [cn] + cls._ancestors(cn)
+        sibs = (
+            [c for c in cn.parent.children if c.type == ELEMENT_NODE]
+            if cn.parent is not None else [cn]
+        )
+        i = next(j for j, c in enumerate(sibs) if c is cn)
+        if axis == "following-sibling":
+            return sibs[i + 1 :]
+        if axis == "preceding-sibling":
+            return sibs[:i][::-1]
+        assert axis == "preceding"
+        anc = {id(a) for a in cls._ancestors(cn)}
+        before = [e for e in cls._all_desc(doc) if e.ord < cn.ord and id(e) not in anc]
+        return before[::-1]
+
+    @classmethod
+    def _ref_eval(cls, doc, path, start=None):
         import re
 
         from fuzi_spark.dom import ELEMENT_NODE
 
         steps = []
         i = 0
+        ctx = [doc]
+        if path.startswith("."):
+            ctx = [start]
+            i = 1
         while i < len(path):
             if path.startswith("//", i):
-                axis = "desc"
+                sep = "desc"
                 i += 2
             else:
-                axis = "child"
+                sep = "child"
                 i += 1
+            axis = "child"
+            m = re.match(r"([a-z-]+)::", path[i:])
+            if m:
+                axis = m.group(1)
+                i += len(m.group(0))
             m = re.match(r"([A-Za-z_][\w.-]*|\*)", path[i:])
             name = m.group(1)
             i += len(name)
@@ -304,24 +452,29 @@ class TestSpecDifferential:
                 j = path.index("]", i)
                 preds.append(path[i + 1 : j])
                 i = j + 1
-            steps.append((axis, name, preds))
-        ctx = [doc]
-        for axis, name, preds in steps:
+            steps.append((sep, axis, name, preds))
+        for sep, axis, name, preds in steps:
             out = []
             for node in ctx:
-                ctxnodes = [node] if axis == "child" else [node] + cls._all_desc(node)
+                ctxnodes = [node] if sep == "child" else [node] + cls._all_desc(node)
                 for cn in ctxnodes:
                     cands = [
                         c
-                        for c in cn.children
+                        for c in cls._axis(doc, axis, cn)
                         if c.type == ELEMENT_NODE and (name == "*" or c.tag == name)
                     ]
                     for p in preds:
                         if p == "last()":
                             cands = [cands[-1]] if cands else []
+                        elif p == "position()>1":
+                            cands = cands[1:]
                         elif p.isdigit():
                             k = int(p)
                             cands = [cands[k - 1]] if 1 <= k <= len(cands) else []
+                        elif p.startswith("contains(@"):
+                            an, av = p[len("contains(@") : -1].split(",")
+                            av = av.strip("'")
+                            cands = [c for c in cands if av in c.attrs.get(an, "")]
                         elif p.startswith("@"):
                             if "=" in p:
                                 an, av = p[1:].split("=", 1)
@@ -355,12 +508,14 @@ class TestSpecDifferential:
         from fuzi_spark.xmlparser import parse_xml
 
         names = ["a", "b", "c", "d"]
+        axes = ["parent", "ancestor", "ancestor-or-self", "preceding-sibling",
+                "preceding", "following-sibling"]
 
         def gen_doc(rng, depth=0):
             name = rng.choice(names)
             attrs = ""
             if rng.random() < 0.5:
-                attrs += f' k="{rng.choice(["1", "2", "v"])}"'
+                attrs += f' k="{rng.choice(["1", "2", "v", "vv"])}"'
             if rng.random() < 0.2:
                 attrs += ' m="x"'
             if depth > 4 or rng.random() < 0.3:
@@ -374,12 +529,15 @@ class TestSpecDifferential:
             steps = []
             for _ in range(rng.randint(1, 4)):
                 axis = "//" if rng.random() < 0.35 else "/"
+                if axis == "/" and rng.random() < 0.25:
+                    axis += rng.choice(axes) + "::"
                 name = rng.choice(names + ["*"])
                 preds = ""
                 if rng.random() < 0.4:
                     preds = rng.choice(
                         ["[1]", "[2]", "[last()]", "[@k]", "[@k='v']",
-                         "[@m]", "[b]", "[c]"]
+                         "[@m]", "[@m='x']", "[b]", "[c]", "[position()>1]",
+                         "[contains(@k,'v')]"]
                     )
                 steps.append(axis + name + preds)
             return "".join(steps)
@@ -392,8 +550,15 @@ class TestSpecDifferential:
                 + "</root>"
             )
             doc = parse_xml(docstr)
+            inner = self._all_desc(doc.root)
             for _ in range(25):
                 path = "/root" + gen_path(rng)
                 want = [id(n) for n in self._ref_eval(doc, path)]
                 got = [id(n) for n in run_xpath(doc, path)]
                 assert got == want, f"{path} on {docstr[:200]}"
+                if inner:
+                    el = rng.choice(inner)
+                    path = "." + gen_path(rng)
+                    want = [id(n) for n in self._ref_eval(doc, path, el)]
+                    got = [id(n) for n in run_xpath(el, path)]
+                    assert got == want, f"{path} from {el.raw_xml[:80]} on {docstr[:200]}"
