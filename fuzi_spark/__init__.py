@@ -7,7 +7,9 @@ kylehughes/Fuzi (a Swift libxml2 wrapper), re-expressed Spark-first:
   htmlparser.py) that lives only inside Arrow batches,
 - a full XPath 1.0 engine (xpath.py) and the reference's CSS→XPath dialect
   (css.py),
-- vectorized pandas-UDF operators over document tables (udfs.py),
+- vectorized Arrow operators over document tables (udfs.py: `map_rows`,
+  `doc_column`, `dom_column` — the one place a per-row operator meets
+  the Arrow batch),
 - main-content extraction → ordered (kind, text, media_ref, offset) spans
   (extract.py), span⇄markup codec (codec.py),
 - scale plumbing: doc_id-hash repartitioning, skew salting, per-partition

@@ -3,7 +3,7 @@
 A brand-new, pure-Python node model equivalent in *capability* to the
 reference's libxml2 tree (kylehughes/Fuzi Sources/Node.swift:89-164,
 Sources/Element.swift:26-217, Sources/Document.swift:26-214) but designed
-for one purpose: living transiently inside an Arrow batch in a pandas UDF.
+for one purpose: living transiently inside an Arrow batch in a Python UDF.
 Nothing here ever crosses a Spark boundary — only flat snapshots do
 (see snapshot.py), mirroring the reference's actor/snapshot contract
 (Sources/Actor.swift:31-110).
@@ -640,9 +640,8 @@ class Document(Node):
         return "".join(c.raw_xml for c in self.children)
 
     def assign_order(self) -> None:
-        """Assign document-order ranks (post-parse, single pass). XPath
-        calls it on first need when the parse skipped it or the tree
-        changed since."""
+        """Assign document-order ranks (single pass). XPath calls it on
+        first need: after the parse, and again once the tree changed."""
         i = 0
         stack: list[Node] = list(reversed(self.children))
         self.ord = i

@@ -275,12 +275,7 @@ def extract_spans(markup: str, doc_type: Optional[str] = None) -> tuple[list[dic
 def _extract_spans_dom(markup: str, doc_type: str) -> tuple[list[dict], int]:
     """Reference implementation: parse to DOM, strip, walk."""
     try:
-        # assign_order=False: segmentation walks the tree itself, no XPath
-        doc = (
-            parse_html(markup, assign_order=False)
-            if doc_type == "html"
-            else parse_xml(markup, assign_order=False)
-        )
+        doc = parse_html(markup) if doc_type == "html" else parse_xml(markup)
     except XMLError:
         return [], 1
     except Exception:

@@ -549,12 +549,10 @@ def _tokenize(s: str, tb: _TreeBuilder) -> None:
         i = end
 
 
-def parse_html(source, user_namespaces=None, assign_order: bool = True) -> Document:
+def parse_html(source, user_namespaces=None) -> Document:
     """Parse HTML (str/bytes) into a Document; never raises on malformed
-    markup, raises XMLError only for empty input.
-
-    assign_order=False skips document-order ranking — only XPath/CSS
-    querying needs it; the extraction path walks the tree directly."""
+    markup, raises XMLError only for empty input. Document order is
+    ranked on first need (`Document.ranked`)."""
     if isinstance(source, (bytes, bytearray)):
         from .xmlparser import decode_bytes
 
@@ -574,6 +572,4 @@ def parse_html(source, user_namespaces=None, assign_order: bool = True) -> Docum
     if doc.root is None:
         tb._ensure_html()
         tb._ensure_body()
-    if assign_order:
-        doc.assign_order()
     return doc

@@ -4,7 +4,7 @@ Web corpora ship as archives at least as often as as loose files:
 dataset dumps, sitemap bundles, scraped-site snapshots. This is the
 source-format seam that turns an archive BLOB column into per-member
 rows the rest of the pipeline can process — the same explode shape as
-parse_warc_df (ONE mapInPandas, no shuffle).
+parse_warc_df (ONE map_rows pass, no shuffle).
 
 Recovering contract, same philosophy as warc.py/pdf.py: a blob that is
 not a parseable archive yields zero member rows and one `archive_ok=0`
@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..udfs import row_mapper
+from ..udfs import map_rows
 
 ARCHIVE_SCHEMA = StructType(
     [
@@ -135,7 +135,7 @@ def parse_archive_df(
     text_cap: int = 65536,
 ) -> DataFrame:
     """(id, archive blob) → member rows (ARCHIVE_SCHEMA): ONE
-    mapInPandas explode, repartitioned by id first so giant archives
+    map_rows explode, repartitioned by id first so giant archives
     spread across tasks. Unparseable blobs emit a single archive_ok=0
     stub row."""
 
@@ -145,8 +145,10 @@ def parse_archive_df(
             return [(did, None, 0, None, None, None, None, None)]
         return [(did, fmt, 1, *m) for m in members]
 
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.col(blob_col)
-    ).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, "doc_id"
-    ).mapInPandas(row_mapper(rows, ARCHIVE_SCHEMA), schema=ARCHIVE_SCHEMA)
+    return map_rows(
+        docs.select(F.col(id_col).alias("doc_id"), F.col(blob_col)).repartition(
+            docs.sparkSession.sparkContext.defaultParallelism, "doc_id"
+        ),
+        rows,
+        ARCHIVE_SCHEMA,
+    )

@@ -28,7 +28,7 @@ tests and exercised by the oracle query, which plants gain-varied
 copies). This is what "perceptual" buys over exact_dedup on bytes.
 
 Spark shapes (the 10^12-clip contract):
-- audio_fingerprint_df: one narrow mapInPandas over the media table
+- audio_fingerprint_df: one narrow map_rows pass over the media table
   with the decode_features_df repartition-by-media_ref skew spread; the
   STFT batches all of a clip's windows in one vectorized rfft call.
 - audio_dedup_groups: exact perceptual dedup = ONE map-side-combinable
@@ -62,7 +62,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..udfs import row_mapper
+from ..udfs import map_rows
 from .cache import scoped_persist
 from .multimodal import parse_audio
 
@@ -133,9 +133,13 @@ def audio_fingerprint_df(
         rate, nw, hashes = fp
         return [(ref, rate, nw, len(hashes), hashes, 1)]
 
-    return media.select("media_ref", "content").repartition(
-        media.sparkSession.sparkContext.defaultParallelism, "media_ref"
-    ).mapInPandas(row_mapper(rows, FINGERPRINT_SCHEMA), schema=FINGERPRINT_SCHEMA)
+    return map_rows(
+        media.select("media_ref", "content").repartition(
+            media.sparkSession.sparkContext.defaultParallelism, "media_ref"
+        ),
+        rows,
+        FINGERPRINT_SCHEMA,
+    )
 
 
 def audio_dedup_groups(fp: DataFrame) -> DataFrame:

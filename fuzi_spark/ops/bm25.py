@@ -33,12 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text_col: str):
-    return F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda t: t != "",
-    )
+from .textstats import lower_tokens
 
 
 def build_postings(
@@ -48,7 +43,7 @@ def build_postings(
 ) -> DataFrame:
     """Inverted-index postings: (token, doc_id, tf:long)."""
     return (
-        docs.select(F.col(id_col), F.explode(_tokens(text_col)).alias("token"))
+        docs.select(F.col(id_col), F.explode(lower_tokens(text_col)).alias("token"))
         .groupBy("token", id_col)
         .agg(F.count("*").alias("tf"))
     )
@@ -61,7 +56,7 @@ def doc_lengths(
 ) -> DataFrame:
     """(doc_id, dl:long) — token count per document."""
     return docs.select(
-        F.col(id_col), F.size(_tokens(text_col)).alias("dl")
+        F.col(id_col), F.size(lower_tokens(text_col)).alias("dl")
     )
 
 

@@ -37,7 +37,7 @@ Deterministic rules (pinned by tests and the SQL oracles):
 - parse failure yields zero rows (never raises — house recovery
   contract)
 
-Spark surface: ONE mapInPandas explode per batch each (Arrow-batched;
+Spark surface: ONE map_rows explode per batch each (Arrow-batched;
 the per-doc Python is the parser itself — same shape as
 ops/tables.extract_tables_df). Narrow map, no shuffle.
 """
@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 
 from ..extract import _media_ref
 from ..htmlparser import parse_html
-from ..udfs import row_mapper
+from ..udfs import map_rows
 
 
 def _norm(s: Optional[str]) -> str:
@@ -78,7 +78,7 @@ def extract_captions(
     document, in document order. Never raises; unparseable markup
     yields []."""
     try:
-        doc = parse_html(markup, assign_order=False)
+        doc = parse_html(markup)
     except Exception:
         return []
     if doc.root is None:
@@ -122,7 +122,7 @@ def extract_outline(
     document order. path = ' > '-joined ancestor-heading texts (may be
     ''). Never raises; unparseable markup yields []."""
     try:
-        doc = parse_html(markup, assign_order=False)
+        doc = parse_html(markup)
     except Exception:
         return []
     if doc.root is None:
@@ -173,9 +173,7 @@ def extract_captions_df(
             for r in extract_captions(m)
         ]
 
-    return docs.select(id_col, markup_col).mapInPandas(
-        row_mapper(rows, CAPTION_SCHEMA), schema=CAPTION_SCHEMA
-    )
+    return map_rows(docs.select(id_col, markup_col), rows, CAPTION_SCHEMA)
 
 
 def extract_outline_df(
@@ -191,6 +189,4 @@ def extract_outline_df(
             for r in extract_outline(m)
         ]
 
-    return docs.select(id_col, markup_col).mapInPandas(
-        row_mapper(rows, OUTLINE_SCHEMA), schema=OUTLINE_SCHEMA
-    )
+    return map_rows(docs.select(id_col, markup_col), rows, OUTLINE_SCHEMA)

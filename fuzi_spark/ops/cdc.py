@@ -21,7 +21,7 @@ Scheme (FastCDC-simplified, deterministic, dependency-free):
   greedy pass over the SPARSE candidate index list.
 
 Chunk identity is md5 of the chunk bytes. The per-doc walk runs in
-mapInPandas (Arrow batches); corpus-level dedup is then a plain
+map_rows (Arrow batches); corpus-level dedup is then a plain
 chunk-hash groupBy — the same shuffle discipline as dedup_exact but
 at sub-document granularity.
 """
@@ -34,7 +34,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
-from ..udfs import row_mapper
+from ..udfs import map_rows
 
 _W = 16  # rolling window (bytes)
 
@@ -144,6 +144,4 @@ def cdc_chunks_df(
             for chunk in cdc_chunk_blob(bytes(blob), avg_size, min_size, max_size)
         ]
 
-    return docs.select(id_col, bin_col).mapInPandas(
-        row_mapper(rows, CDC_SCHEMA), schema=CDC_SCHEMA
-    )
+    return map_rows(docs.select(id_col, bin_col), rows, CDC_SCHEMA)

@@ -42,12 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text_col: str):
-    return F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda t: t != "",
-    )
+from .textstats import lower_tokens
 
 
 def train_nb(
@@ -65,7 +60,7 @@ def train_nb(
     Both are metadata-sized model tables; nothing is collected."""
     toks = labeled.select(
         F.col(label_col).alias("label"),
-        F.explode(_tokens(text_col)).alias("token"),
+        F.explode(lower_tokens(text_col)).alias("token"),
     )
     tl = toks.groupBy("token", "label").agg(
         F.count(F.lit(1)).alias("c_tl")
@@ -113,7 +108,7 @@ def predict_nb(
     break toward the smallest label (deterministic). score is the
     winning unnormalized log-posterior rounded to 4 decimals."""
     toks = docs.select(
-        F.col(id_col), F.explode_outer(_tokens(text_col)).alias("token")
+        F.col(id_col), F.explode_outer(lower_tokens(text_col)).alias("token")
     )
     # every (doc token) × every class; the classes side is tiny and the
     # token model join is broadcast — one corpus shuffle at the end

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cache import scoped_persist
+from .textstats import lower_tokens
 
 
 def collocations(
@@ -53,10 +54,7 @@ def collocations(
     """Top-n adjacent-bigram collocations: (w1, w2, n_pair, c1, c2,
     lift, pmi), ranked by exact-arithmetic lift (desc, ties on
     w1/w2), bigrams below `min_count` cut before the joins."""
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda t: t != "",
-    )
+    toks = lower_tokens(text_col)
     n_ = F.size("_toks")
     uni = F.transform(
         "_toks",

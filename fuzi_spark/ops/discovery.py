@@ -17,7 +17,7 @@ error. Missing required fields (a <url> without <loc>) drop that entry
 only. Sitemaps are namespaced with a default xmlns; the walk keys on
 local tag names, so both namespaced and bare documents parse.
 
-Scale shape: one mapInPandas explode per document blob (Arrow-batched,
+Scale shape: one map_rows explode per document blob (Arrow-batched,
 never per-row Python driver loops), emitting small string rows. At
 10^12 docs the inputs here are metadata-sized relative to the page
 corpus (one sitemap per ~50k URLs), so these stages are never the
@@ -33,7 +33,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 
 from ..errors import XMLError
-from ..udfs import row_mapper
+from ..udfs import map_rows
 from ..xmlparser import parse_xml
 
 
@@ -117,9 +117,7 @@ def parse_sitemap_df(
             for seq, e in enumerate(parse_sitemap(xml))
         ]
 
-    return df.select(id_col, xml_col).mapInPandas(
-        row_mapper(rows, SITEMAP_SCHEMA), schema=SITEMAP_SCHEMA
-    )
+    return map_rows(df.select(id_col, xml_col), rows, SITEMAP_SCHEMA)
 
 
 def _first_alternate_link(entry) -> Optional[str]:
@@ -213,6 +211,4 @@ def parse_feed_df(
             for idx, e in enumerate(parse_feed(xml))
         ]
 
-    return df.select(id_col, xml_col).mapInPandas(
-        row_mapper(rows, FEED_SCHEMA), schema=FEED_SCHEMA
-    )
+    return map_rows(df.select(id_col, xml_col), rows, FEED_SCHEMA)

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cache import scoped_persist
+from .textstats import lower_tokens
 
 
 def source_drift(
@@ -56,10 +57,7 @@ def source_drift(
 ) -> DataFrame:
     """(source, n_tokens, vocab, jsd): unigram JSD of each stratum
     against the whole corpus, ordered by source."""
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda t: t != "",
-    )
+    toks = lower_tokens(text_col)
     counts = scoped_persist(
         docs.select(F.col(group_col).alias("src"), toks.alias("_toks"))
         .select("src", F.explode("_toks").alias("tok"))

@@ -52,17 +52,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text_col: str):
-    return F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda t: t != "",
-    )
+from .textstats import lower_tokens
 
 
 def _features(text_col: str):
     """Unigrams ++ bigrams ('w1 w2'), as one array column."""
-    toks = _tokens(text_col)
+    toks = lower_tokens(text_col)
     n = F.size(toks)
     bigrams = F.when(
         n >= 2,

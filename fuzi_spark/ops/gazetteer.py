@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import lower_tokens
+
 
 def gazetteer_tag(
     docs: DataFrame,
@@ -74,10 +76,7 @@ def gazetteer_tag(
             "explicitly if the dictionary is genuinely this phrasal"
         )
 
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda t: t != "",
-    )
+    toks = lower_tokens(text_col)
     n = F.size("_toks")
     # one candidate array per phrase length, concatenated inside the
     # same projection: the corpus is tokenized and scanned ONCE.

@@ -34,12 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text_col: str):
-    return F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda t: t != "",
-    )
+from .textstats import lower_tokens
 
 
 def _md5_int(col):
@@ -58,7 +53,7 @@ def hash_embed(
     zero vector with norm 0 (kept, never dropped)."""
     d = int(dims)
     pairs = F.transform(
-        _tokens(text_col),
+        lower_tokens(text_col),
         lambda t: F.struct(
             F.pmod(_md5_int(F.concat(F.lit("he:"), t)), F.lit(d)).alias("j"),
             F.when(

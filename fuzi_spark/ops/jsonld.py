@@ -28,7 +28,7 @@ Deterministic extraction rules (pinned by tests and the SQL oracle):
 - a script whose body is not valid JSON is SKIPPED (recovery, never
   raises); non-object items (strings/numbers in an array) are skipped
 
-Spark surface: ONE mapInPandas explode per batch (Arrow-batched; the
+Spark surface: ONE map_rows explode per batch (Arrow-batched; the
 same shape as tables.extract_tables_df). Narrow map, no shuffle.
 """
 
@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from ..extract import sniff_doc_type
 from ..htmlparser import parse_html
 from ..query import css
-from ..udfs import row_mapper
+from ..udfs import map_rows
 
 
 def _first(v):
@@ -79,7 +79,7 @@ def extract_json_ld(markup: str) -> list[dict]:
     """All JSON-LD items of one document, in document order. Never
     raises; unparseable markup or JSON yields fewer/zero rows."""
     try:
-        doc = parse_html(markup, assign_order=False)
+        doc = parse_html(markup)
     except Exception:
         return []
     if doc.root is None:
@@ -136,6 +136,4 @@ def extract_json_ld_df(
             for r in extract_json_ld(m)
         ]
 
-    return docs.select(id_col, markup_col).mapInPandas(
-        row_mapper(rows, JSONLD_SCHEMA), schema=JSONLD_SCHEMA
-    )
+    return map_rows(docs.select(id_col, markup_col), rows, JSONLD_SCHEMA)

@@ -40,14 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .hof import bind
-
-
-def _lm_tokens(text_col: str):
-    """Lowercased whitespace tokens, empty-token artifact removed (split
-    of '' yields [''] — same guard as textstats._clean_tokens)."""
-    return F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != ""
-    )
+from .textstats import lower_tokens
 
 
 def _bigram_pairs(text_col: str):
@@ -67,7 +60,7 @@ def _bigram_pairs(text_col: str):
             ),
         )
 
-    return bind(_lm_tokens(text_col), mk)
+    return bind(lower_tokens(text_col), mk)
 
 
 def train_bigram_lm(
@@ -80,7 +73,7 @@ def train_bigram_lm(
     to partial per-key counts inside each task before moving; the
     outputs are metadata-sized next to the corpus (see module note).
     """
-    toks = df.select(F.explode(_lm_tokens(text_col)).alias("token"))
+    toks = df.select(F.explode(lower_tokens(text_col)).alias("token"))
     unigrams = toks.groupBy("token").agg(F.count("*").alias("n"))
     pairs = df.select(F.explode(_bigram_pairs(text_col)).alias("bg"))
     bigrams = (

@@ -33,7 +33,7 @@ render, not blow the recursion limit — the 10^12-doc skew tail makes
 deep documents a certainty (same rationale as extract.py:_walk_html).
 
 Pure Python called only inside Arrow-batch UDFs; the Spark surface is
-one pandas_udf pass (never per-row Python at the plan level).
+one doc_column pass (never per-row Python at the plan level).
 """
 
 from __future__ import annotations
@@ -325,7 +325,7 @@ def to_markdown(
         spans, err = extract_spans(markup, "xml")
         return "\n\n".join(s["text"] for s in spans if s["text"]), err
     try:
-        doc = parse_html(markup, assign_order=False)
+        doc = parse_html(markup)
     except XMLError:
         return "", 1
     except Exception:

@@ -15,7 +15,7 @@ from the same parsed DOM the main-content extractor already builds:
   textstats.detect_code); language labels come from the class
   conventions highlight.js/Prism/GitHub actually emit.
 
-Both are mapInPandas explodes of the (doc_id, markup) table — one
+Both are map_rows explodes of the (doc_id, markup) table — one
 Arrow batch in, parse once, walk, rows out; never per-row Python.
 Malformed markup yields fewer/zero rows, never a task failure.
 """
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 
 from ..htmlparser import parse_html
 from ..query import css
-from ..udfs import row_mapper
+from ..udfs import map_rows
 
 # microdata value extraction per WHATWG §5.2.4: which attribute carries
 # the property value, by tag
@@ -67,9 +67,7 @@ def extract_microdata(markup: str) -> list[dict]:
     descended into; elements without itemprop are descended through.
     Never raises."""
     try:
-        # assign_order=True: scope_idx / block_idx are CONTRACTUALLY
-        # document-ordered and [itemscope] elements nest
-        doc = parse_html(markup, assign_order=True)
+        doc = parse_html(markup)
     except Exception:
         return []
     if doc.root is None:
@@ -128,9 +126,7 @@ def extract_microdata_df(
             for r in extract_microdata(m)
         ]
 
-    return docs.select(id_col, markup_col).mapInPandas(
-        row_mapper(rows, MICRODATA_SCHEMA), schema=MICRODATA_SCHEMA
-    )
+    return map_rows(docs.select(id_col, markup_col), rows, MICRODATA_SCHEMA)
 
 
 # --------------------------------------------------------- code blocks
@@ -162,7 +158,7 @@ def extract_code_blocks(markup: str) -> list[dict]:
     newline trimmed (markup authors put the fence tags on their own
     lines). Never raises."""
     try:
-        doc = parse_html(markup, assign_order=True)
+        doc = parse_html(markup)
     except Exception:
         return []
     if doc.root is None:
@@ -217,6 +213,4 @@ def extract_code_blocks_df(
             for r in extract_code_blocks(m)
         ]
 
-    return docs.select(id_col, markup_col).mapInPandas(
-        row_mapper(rows, CODEBLOCK_SCHEMA), schema=CODEBLOCK_SCHEMA
-    )
+    return map_rows(docs.select(id_col, markup_col), rows, CODEBLOCK_SCHEMA)

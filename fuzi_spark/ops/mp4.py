@@ -48,7 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..udfs import row_mapper
+from ..udfs import map_rows
 
 # ------------------------------------------------------------- MP4
 
@@ -587,14 +587,15 @@ def video_keyframes_df(media: DataFrame) -> DataFrame:
                 return [(ref, *(meta[k] for k in _KF_META), kf, 1, 0)]
         return [(ref, *(None,) * len(_KF_META), None, 0, 0)]
 
-    return (
+    return map_rows(
         media.filter(F.col("media_type") == "video")
         .repartition(
             media.sparkSession.sparkContext.defaultParallelism,
             "media_ref",
         )
-        .select("media_ref", "content")
-        .mapInPandas(row_mapper(rows, VIDEO_KF_SCHEMA), schema=VIDEO_KF_SCHEMA)
+        .select("media_ref", "content"),
+        rows,
+        VIDEO_KF_SCHEMA,
     )
 
 
@@ -819,7 +820,7 @@ _M4A_META = M4A_SCHEMA.fieldNames()[1:-1]
 
 def m4a_meta_df(media: DataFrame) -> DataFrame:
     """media(MEDIA_SCHEMA audio rows) -> M4A_SCHEMA; one narrow
-    mapInPandas header walk, decode_ok pinned 0 (AAC/ALAC PCM decode
+    map_rows header walk, decode_ok pinned 0 (AAC/ALAC PCM decode
     honestly absent)."""
 
     def rows(ref, content):
@@ -831,12 +832,13 @@ def m4a_meta_df(media: DataFrame) -> DataFrame:
             return [(ref, *(None,) * len(_M4A_META), 0)]
         return [(ref, *(meta[k] for k in _M4A_META), 0)]
 
-    return (
+    return map_rows(
         media.filter(F.col("media_type") == "audio")
         .repartition(
             media.sparkSession.sparkContext.defaultParallelism,
             "media_ref",
         )
-        .select("media_ref", "content")
-        .mapInPandas(row_mapper(rows, M4A_SCHEMA), schema=M4A_SCHEMA)
+        .select("media_ref", "content"),
+        rows,
+        M4A_SCHEMA,
     )

@@ -33,10 +33,9 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -50,7 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..udfs import row_mapper
+from ..udfs import map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -741,7 +740,7 @@ def decode_wav_spectrogram(content, n_fft: int = 256) -> Optional[tuple]:
 def audio_spectrogram_df(media: DataFrame, n_fft: int = 256) -> DataFrame:
     """media(MEDIA_SCHEMA) → SPECTROGRAM_SCHEMA, partition-parallel.
 
-    One mapInPandas pass (same giant-binary spreading as
+    One map_rows pass (same giant-binary spreading as
     decode_features_df); non-WAV/FLAC bytes yield decode_ok=0 with NULL
     analysis columns — never a fake spectrum. The rfft batches all of a
     clip's windows in one vectorized call, so per-row Python work is a
@@ -754,9 +753,13 @@ def audio_spectrogram_df(media: DataFrame, n_fft: int = 256) -> DataFrame:
         rate, nw, db, dhz, pm, bands = spec
         return [(ref, rate, nw, db, dhz, pm, 1, bands)]
 
-    return media.select("media_ref", "content").repartition(
-        media.sparkSession.sparkContext.defaultParallelism, "media_ref"
-    ).mapInPandas(row_mapper(rows, SPECTROGRAM_SCHEMA), schema=SPECTROGRAM_SCHEMA)
+    return map_rows(
+        media.select("media_ref", "content").repartition(
+            media.sparkSession.sparkContext.defaultParallelism, "media_ref"
+        ),
+        rows,
+        SPECTROGRAM_SCHEMA,
+    )
 
 
 # ----------------------------------------------- real MP3/ID3 decode
@@ -957,7 +960,7 @@ _MP3_META = MP3_SCHEMA.fieldNames()[1:-1]
 
 def mp3_meta_df(media: DataFrame) -> DataFrame:
     """media(MEDIA_SCHEMA audio rows) → MP3_SCHEMA, one narrow
-    mapInPandas pass (header walk only — scan-speed; the frame walk
+    map_rows pass (header walk only — scan-speed; the frame walk
     skips payload bytes by computed length, it never reads them)."""
 
     def rows(ref, content):
@@ -966,13 +969,14 @@ def mp3_meta_df(media: DataFrame) -> DataFrame:
             return [(ref, *(None,) * len(_MP3_META), 0)]
         return [(ref, *(meta[k] for k in _MP3_META), 1)]
 
-    return (
+    return map_rows(
         media.filter(F.col("media_type") == "audio")
         .repartition(
             media.sparkSession.sparkContext.defaultParallelism, "media_ref"
         )
-        .select("media_ref", "content")
-        .mapInPandas(row_mapper(rows, MP3_SCHEMA), schema=MP3_SCHEMA)
+        .select("media_ref", "content"),
+        rows,
+        MP3_SCHEMA,
     )
 
 
@@ -1084,7 +1088,7 @@ _ADTS_META = ADTS_SCHEMA.fieldNames()[1:-1]
 
 def adts_meta_df(media: DataFrame) -> DataFrame:
     """media(MEDIA_SCHEMA audio rows) → ADTS_SCHEMA, one narrow
-    mapInPandas header walk (scan-speed; payloads skipped by frame
+    map_rows header walk (scan-speed; payloads skipped by frame
     length). decode_ok = 0 ALWAYS — the walk measures, it never
     claims PCM (parse_adts docstring)."""
 
@@ -1094,14 +1098,15 @@ def adts_meta_df(media: DataFrame) -> DataFrame:
             return [(ref, *(None,) * len(_ADTS_META), 0)]
         return [(ref, *(meta[k] for k in _ADTS_META), 0)]
 
-    return (
+    return map_rows(
         media.filter(F.col("media_type") == "audio")
         .repartition(
             media.sparkSession.sparkContext.defaultParallelism,
             "media_ref",
         )
-        .select("media_ref", "content")
-        .mapInPandas(row_mapper(rows, ADTS_SCHEMA), schema=ADTS_SCHEMA)
+        .select("media_ref", "content"),
+        rows,
+        ADTS_SCHEMA,
     )
 
 
@@ -1289,7 +1294,7 @@ def build_exif_jpeg(
 
 def exif_df(media: DataFrame) -> DataFrame:
     """media(MEDIA_SCHEMA image rows) → EXIF_SCHEMA, one narrow
-    mapInPandas pass (header-only work — no pixel decode, so this runs
+    map_rows pass (header-only work — no pixel decode, so this runs
     at scan speed even on giant images; same skew spread as the other
     media surfaces). Images without an EXIF segment are exif_ok=0 with
     NULL fields — absence is knowledge, not failure."""
@@ -1300,13 +1305,14 @@ def exif_df(media: DataFrame) -> DataFrame:
             return [(ref, None, None, None, None, None, 0, 0)]
         return [(ref, *(meta[k] for k in EXIF_SCHEMA.fieldNames()[1:-1]), 1)]
 
-    return (
+    return map_rows(
         media.filter(F.col("media_type") == "image")
         .repartition(
             media.sparkSession.sparkContext.defaultParallelism, "media_ref"
         )
-        .select("media_ref", "content")
-        .mapInPandas(row_mapper(rows, EXIF_SCHEMA), schema=EXIF_SCHEMA)
+        .select("media_ref", "content"),
+        rows,
+        EXIF_SCHEMA,
     )
 
 
@@ -1368,7 +1374,7 @@ def strip_exif(content) -> tuple:
 
 def exif_strip_df(media: DataFrame) -> DataFrame:
     """media(MEDIA_SCHEMA image rows) → EXIF-scrubbed bytes + audit
-    columns, one narrow mapInPandas pass (segment-walk only — no pixel
+    columns, one narrow map_rows pass (segment-walk only — no pixel
     decode). The audit pair (orig_len, new_len) makes the removal
     relationally checkable: the delta IS the APP1 segment size."""
 
@@ -1376,13 +1382,14 @@ def exif_strip_df(media: DataFrame) -> DataFrame:
         out, had, ok = strip_exif(raw)
         return [(ref, out, len(bytes(raw or b"")), len(out), had, ok)]
 
-    return (
+    return map_rows(
         media.filter(F.col("media_type") == "image")
         .repartition(
             media.sparkSession.sparkContext.defaultParallelism, "media_ref"
         )
-        .select("media_ref", "content")
-        .mapInPandas(row_mapper(rows, EXIF_STRIP_SCHEMA), schema=EXIF_STRIP_SCHEMA)
+        .select("media_ref", "content"),
+        rows,
+        EXIF_STRIP_SCHEMA,
     )
 
 
@@ -1480,7 +1487,7 @@ def avi_frames_df(media: DataFrame) -> DataFrame:
     frame is not a parseable image). Non-AVI blobs yield zero rows.
 
     Scale shape: media_ref-hash repartition (giant-binary spread), then
-    ONE mapInPandas explode — same contract as decode_features_df."""
+    ONE map_rows explode — same contract as decode_features_df."""
 
     schema = StructType(
         [
@@ -1508,9 +1515,13 @@ def avi_frames_df(media: DataFrame) -> DataFrame:
             ))
         return out
 
-    return media.select("media_ref", "content").repartition(
-        media.sparkSession.sparkContext.defaultParallelism, "media_ref"
-    ).mapInPandas(row_mapper(rows, schema), schema=schema)
+    return map_rows(
+        media.select("media_ref", "content").repartition(
+            media.sparkSession.sparkContext.defaultParallelism, "media_ref"
+        ),
+        rows,
+        schema,
+    )
 
 
 # ----------------------------------------------- real GIF pixel decode
@@ -1737,8 +1748,8 @@ def _fake_decode(content: bytes) -> tuple[int, int, int, np.ndarray]:
     return w, h, c, feats
 
 
-def decode_features_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas: media rows → decoded metadata + feature vector.
+def decode_features_fn():
+    """Per-row fn: a media row → its decoded metadata + feature vector.
 
     Images: format/width/height/channels come from the REAL container
     header parse; the feature vector is the 8×8 block-mean luma of the
@@ -1788,15 +1799,19 @@ def decode_features_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         w, h, c, feats = _fake_decode(content)
         return [(ref, mtype, None, w, h, c, 1, feats)]
 
-    return row_mapper(rows, DECODED_SCHEMA)(batches)
+    return rows
 
 
 def decode_features_df(media: DataFrame) -> DataFrame:
     """media(MEDIA_SCHEMA) → DECODED_SCHEMA, partition-parallel.
     Repartitions by media_ref hash first so giant binaries spread out."""
-    return media.select("media_ref", "media_type", "content").repartition(
-        media.sparkSession.sparkContext.defaultParallelism, "media_ref"
-    ).mapInPandas(decode_features_fn, schema=DECODED_SCHEMA)
+    return map_rows(
+        media.select("media_ref", "media_type", "content").repartition(
+            media.sparkSession.sparkContext.defaultParallelism, "media_ref"
+        ),
+        decode_features_fn(),
+        DECODED_SCHEMA,
+    )
 
 
 RESIZED_SCHEMA = StructType(
@@ -1810,7 +1825,7 @@ RESIZED_SCHEMA = StructType(
 
 
 def make_resize_fn(target: int = 32):
-    """mapInPandas: image rows → fixed-size thumbnails.
+    """Per-row fn: an image row → its fixed-size thumbnail.
 
     Real path uses PIL when available; stub path emits a deterministic
     target×target grayscale buffer derived from the content digest, so the
@@ -1841,7 +1856,7 @@ def make_resize_fn(target: int = 32):
             thumb = rng.randint(0, 256, size=target * target, dtype=np.uint8)
         return [(ref, target, target, thumb.tobytes())]
 
-    return row_mapper(rows, RESIZED_SCHEMA)
+    return rows
 
 
 FRAMES_SCHEMA = StructType(
@@ -1855,7 +1870,7 @@ FRAMES_SCHEMA = StructType(
 
 
 def make_frame_sample_fn(n_frames: int = 4, fps_ms: int = 1000):
-    """mapInPandas: video rows → n_frames sampled frame-feature rows each
+    """Per-row fn: a video row → its n_frames sampled frame-feature rows
     (1 input row → N output rows, the frame-explosion shape).
 
     REAL path for MJPEG-in-AVI: parse_avi's frame byte ranges pick an
@@ -1898,19 +1913,23 @@ def make_frame_sample_fn(n_frames: int = 4, fps_ms: int = 1000):
             for f in range(n_frames)
         ]
 
-    return row_mapper(rows, FRAMES_SCHEMA)
+    return rows
 
 
 def resize_images_df(media: DataFrame, target: int = 32) -> DataFrame:
-    return media.filter(F.col("media_type") == "image").select(
-        "media_ref", "content"
-    ).mapInPandas(make_resize_fn(target), schema=RESIZED_SCHEMA)
+    return map_rows(
+        media.filter(F.col("media_type") == "image").select("media_ref", "content"),
+        make_resize_fn(target),
+        RESIZED_SCHEMA,
+    )
 
 
 def frame_sample_df(media: DataFrame, n_frames: int = 4) -> DataFrame:
-    return media.filter(F.col("media_type") == "video").select(
-        "media_ref", "content"
-    ).mapInPandas(make_frame_sample_fn(n_frames), schema=FRAMES_SCHEMA)
+    return map_rows(
+        media.filter(F.col("media_type") == "video").select("media_ref", "content"),
+        make_frame_sample_fn(n_frames),
+        FRAMES_SCHEMA,
+    )
 
 
 def synth_dims(ref: str) -> tuple[int, int]:
@@ -1952,7 +1971,7 @@ def synth_media_df(spark, docs_extracted: DataFrame) -> DataFrame:
             content = dig * 8
         return [(ref, mtype, content, ext, None, None, None)]
 
-    return refs.mapInPandas(row_mapper(rows, MEDIA_SCHEMA), schema=MEDIA_SCHEMA)
+    return map_rows(refs, rows, MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------- media quality gate

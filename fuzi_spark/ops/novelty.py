@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import lower_tokens
+
 
 def ngram_novelty(
     docs: DataFrame,
@@ -67,10 +69,7 @@ def ngram_novelty(
     downstream decides what an empty doc means)."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda t: t != "",
-    )
+    toks = lower_tokens(text_col)
     # TOTAL gram builder: iterate the first max(size-n+1, 0) tokens by
     # INDEX (transform's 0-based i), gram = join(slice(toks, i+1, n)).
     # slice start is always >= 1, short docs yield [] — safe under any

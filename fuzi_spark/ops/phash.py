@@ -20,7 +20,7 @@ Algorithm (the classic pHash construction):
    brightness offsets.
 
 Spark shapes:
-- phash_df: one narrow mapInPandas over the media table (the same
+- phash_df: one narrow map_rows pass over the media table (the same
   repartition-by-media_ref skew spread as decode_features_df) — no
   shuffle beyond the explicit spread, hash computed once per image.
 - phash_dedup_groups: exact dedup = ONE map-side-combinable groupBy on
@@ -50,10 +50,9 @@ preparation at 100 TB).
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -71,7 +70,7 @@ from fuzi_spark.ops.multimodal import (
     _gray,
     decode_image_pixels,
 )
-from fuzi_spark.udfs import row_mapper
+from fuzi_spark.udfs import map_rows
 
 
 def _dct_matrix(n: int) -> np.ndarray:
@@ -121,7 +120,7 @@ PHASH_SCHEMA = StructType(
 )
 
 
-def _phash_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _phash_fn():
     # content-addressed memo, bounded per task (same rationale as the
     # video frame memo below): byte-identical images are EXACTLY the
     # dedup workload — the same logo/spacer/avatar bytes recur across
@@ -157,7 +156,7 @@ def _phash_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             return [(ref, None, None, None, 0)]
         return [(ref, *got, 1)]
 
-    return row_mapper(rows, PHASH_SCHEMA)(batches)
+    return rows
 
 
 def phash_df(media: DataFrame) -> DataFrame:
@@ -173,14 +172,15 @@ def phash_df(media: DataFrame) -> DataFrame:
     len(trims)x the hash rows and join keys buy 1.0 measured crop
     recall. Cost scales linearly in len(trims); recall floors are
     pinned in tests."""
-    return (
+    return map_rows(
         media.filter(F.col("media_type") == "image")
         .repartition(
             media.sparkSession.sparkContext.defaultParallelism,
             "media_ref",
         )
-        .select("media_ref", "content")
-        .mapInPandas(_phash_fn, schema=PHASH_SCHEMA)
+        .select("media_ref", "content"),
+        _phash_fn(),
+        PHASH_SCHEMA,
     )
 
 
@@ -196,49 +196,36 @@ MULTI_PHASH_SCHEMA = StructType(
 
 def _multi_phash_fn(trims):
     tt = tuple(int(t) for t in trims)
+    memo: dict = {}
+    MEMO_CAP = 4096
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict = {}
-        MEMO_CAP = 4096
+    def hashes_memo(content):
+        key = bytes(content)
+        if key in memo:
+            return memo[key]
+        arr = decode_image_pixels(key)
+        if arr is None:
+            got = None
+        else:
+            got = []
+            h, w = arr.shape[:2]
+            for t in tt:
+                if h - 2 * t < 1 or w - 2 * t < 1:
+                    continue
+                sub = arr[t:h - t, t:w - t] if t else arr
+                got.append((t, int(np.int64(np.uint64(phash_from_pixels(sub))))))
+        if len(memo) >= MEMO_CAP:
+            memo.clear()
+        memo[key] = got
+        return got
 
-        def hashes_memo(content):
-            key = bytes(content)
-            if key in memo:
-                return memo[key]
-            arr = decode_image_pixels(key)
-            if arr is None:
-                got = None
-            else:
-                got = []
-                h, w = arr.shape[:2]
-                for t in tt:
-                    if h - 2 * t < 1 or w - 2 * t < 1:
-                        continue
-                    sub = arr[t:h - t, t:w - t] if t else arr
-                    got.append(
-                        (
-                            t,
-                            int(
-                                np.int64(
-                                    np.uint64(phash_from_pixels(sub))
-                                )
-                            ),
-                        )
-                    )
-            if len(memo) >= MEMO_CAP:
-                memo.clear()
-            memo[key] = got
-            return got
+    def rows(ref, content):
+        got = hashes_memo(content)
+        if not got:
+            return [(ref, None, None, 0)]
+        return [(ref, t, hsh, 1) for t, hsh in got]
 
-        def rows(ref, content):
-            got = hashes_memo(content)
-            if not got:
-                return [(ref, None, None, 0)]
-            return [(ref, t, hsh, 1) for t, hsh in got]
-
-        return row_mapper(rows, MULTI_PHASH_SCHEMA)(batches)
-
-    return fn
+    return rows
 
 
 def phash_multi_df(media: DataFrame, trims=(0, 2, 4)) -> DataFrame:
@@ -253,14 +240,15 @@ def phash_multi_df(media: DataFrame, trims=(0, 2, 4)) -> DataFrame:
     near-exact distance. K hashes per image → K× index rows, same
     pigeonhole join; arbitrary ASYMMETRIC crops stay out of scope
     (documented — that needs keypoint signals, not block DCTs)."""
-    return (
+    return map_rows(
         media.filter(F.col("media_type") == "image")
         .repartition(
             media.sparkSession.sparkContext.defaultParallelism,
             "media_ref",
         )
-        .select("media_ref", "content")
-        .mapInPandas(_multi_phash_fn(trims), schema=MULTI_PHASH_SCHEMA)
+        .select("media_ref", "content"),
+        _multi_phash_fn(trims),
+        MULTI_PHASH_SCHEMA,
     )
 
 
@@ -455,7 +443,7 @@ def _video_phash_fn(n_frames: int):
             return [(ref, total, 0, None, 0)]
         return [(ref, total, len(hashes), video_phash_from_frame_hashes(hashes), 1)]
 
-    return row_mapper(rows, VIDEO_PHASH_SCHEMA)
+    return rows
 
 
 def video_phash_df(media: DataFrame, n_frames: int = 4) -> DataFrame:
@@ -463,21 +451,22 @@ def video_phash_df(media: DataFrame, n_frames: int = 4) -> DataFrame:
     sample up to `n_frames` MJPEG frames per video (index (k·total)//n,
     the same grid as make_frame_sample_fn), pHash each through the REAL
     baseline-JPEG pixel decode, and majority-vote the bits into one
-    64-bit video fingerprint. ONE narrow mapInPandas pass with the
+    64-bit video fingerprint. ONE narrow map_rows pass with the
     usual giant-binary repartition spread; only sampled frames are
     decoded, so per-video work is bounded by n_frames regardless of
     clip length. Dedup composes downstream: phash_dedup_groups /
     phash_near_dups are generic over (media_ref, phash), so video
     exact-dedup is the same map-side-combinable 8-byte-key shuffle and
     video near-dups the same pigeonhole chunk join as images."""
-    return (
+    return map_rows(
         media.filter(F.col("media_type") == "video")
         .repartition(
             media.sparkSession.sparkContext.defaultParallelism,
             "media_ref",
         )
-        .select("media_ref", "content")
-        .mapInPandas(_video_phash_fn(n_frames), schema=VIDEO_PHASH_SCHEMA)
+        .select("media_ref", "content"),
+        _video_phash_fn(n_frames),
+        VIDEO_PHASH_SCHEMA,
     )
 
 
@@ -530,7 +519,7 @@ def _video_scenes_fn(threshold: int):
             prev = h
         return out
 
-    return row_mapper(rows, SCENES_SCHEMA)
+    return rows
 
 
 def video_scenes_df(media: DataFrame, threshold: int = 12) -> DataFrame:
@@ -544,16 +533,17 @@ def video_scenes_df(media: DataFrame, threshold: int = 12) -> DataFrame:
     per cut.
 
     Every frame decodes exactly once (sequential walk + the bounded
-    content-addressed memo for repeated frames); ONE narrow mapInPandas
+    content-addressed memo for repeated frames); ONE narrow map_rows
     pass, no shuffle. Threshold semantics inherit the pHash operating
     points measured in TestPhash (recompression jitter ≤6 bits on
     natural spectra — the default 12 sits above codec noise and below
     the ≥20-bit separation of distinct pictures)."""
-    return (
+    return map_rows(
         media.filter(F.col("media_type") == "video")
         .repartition(
             media.sparkSession.sparkContext.defaultParallelism, "media_ref"
         )
-        .select("media_ref", "content")
-        .mapInPandas(_video_scenes_fn(threshold), schema=SCENES_SCHEMA)
+        .select("media_ref", "content"),
+        _video_scenes_fn(threshold),
+        SCENES_SCHEMA,
     )

@@ -38,12 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text_col: str):
-    return F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda t: t != "",
-    )
+from .textstats import lower_tokens
 
 
 def _bucket_of(col, seed: int, width: int):
@@ -66,7 +61,7 @@ def token_stream(
     df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """(token) — one row per token OCCURRENCE (multiplicity kept)."""
-    return df.select(F.explode(_tokens(text_col)).alias("token"))
+    return df.select(F.explode(lower_tokens(text_col)).alias("token"))
 
 
 def cms_build(
@@ -250,7 +245,7 @@ def bottomk_sketch(
     re-take the k smallest to sketch the corpus union, which is what
     corpus_overlap exploits."""
     return (
-        df.select(F.explode(_tokens(text_col)).alias("token"))
+        df.select(F.explode(lower_tokens(text_col)).alias("token"))
         .select(_h60(F.col("token")).alias("h"))
         .distinct()
         .orderBy("h")

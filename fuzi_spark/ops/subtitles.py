@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..udfs import row_mapper
+from ..udfs import map_rows
 
 _TS = re.compile(
     r"(?:(\d{1,2}):)?(\d{1,2}):(\d{1,2})[.,](\d{1,3})"
@@ -135,7 +135,7 @@ def parse_subtitles_df(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "subs"
 ) -> DataFrame:
     """(id, subtitle blob) → exploded cue rows, format auto-detected
-    per blob (WEBVTT magic → VTT, else SRT). ONE mapInPandas explode —
+    per blob (WEBVTT magic → VTT, else SRT). ONE map_rows explode —
     the same narrow-map shape as parse_warc/sitemap_urls; cue rows are
     small, so the explode is the only fan-out and there is no shuffle."""
 
@@ -148,9 +148,11 @@ def parse_subtitles_df(
         )
         return [(did, *cue) for cue in cues]
 
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col)
-    ).mapInPandas(row_mapper(rows, SUBTITLE_SCHEMA), schema=SUBTITLE_SCHEMA)
+    return map_rows(
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
+        rows,
+        SUBTITLE_SCHEMA,
+    )
 
 
 def align_frames_to_subtitles(

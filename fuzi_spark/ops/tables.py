@@ -20,7 +20,7 @@ Deterministic rules (pinned by tests and the SQL oracle):
 - rows with zero cells are dropped; parse failure yields zero rows
   (never raises — house recovery contract)
 
-Spark surface: ONE mapInPandas explode per batch (Arrow-batched; the
+Spark surface: ONE map_rows explode per batch (Arrow-batched; the
 per-doc Python is the parser itself — same shape as warc.parse_warc_df).
 Narrow map, no shuffle: composes with downstream aggs for free.
 """
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 
 from ..dom import ELEMENT_NODE, Element
 from ..htmlparser import parse_html
-from ..udfs import row_mapper
+from ..udfs import map_rows
 
 _SECTIONS = frozenset(("thead", "tbody", "tfoot"))
 _CELLS = frozenset(("th", "td"))
@@ -81,7 +81,7 @@ def extract_tables(
     """All table rows of one document, in document order. Never raises;
     unparseable markup yields []."""
     try:
-        doc = parse_html(markup, assign_order=False)
+        doc = parse_html(markup)
     except Exception:
         return []
     if doc.root is None:
@@ -126,6 +126,4 @@ def extract_tables_df(
             for r in extract_tables(m)
         ]
 
-    return docs.select(id_col, markup_col).mapInPandas(
-        row_mapper(rows, TABLE_SCHEMA), schema=TABLE_SCHEMA
-    )
+    return map_rows(docs.select(id_col, markup_col), rows, TABLE_SCHEMA)

@@ -184,6 +184,14 @@ def _clean_tokens(text_col: str):
     )
 
 
+def lower_tokens(text_col: str):
+    """`_clean_tokens` of the lowercased text: the token array of every
+    bag-of-words operator (bm25, classify, lm, sketch, ...)."""
+    return F.filter(
+        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != ""
+    )
+
+
 def token_entropy(text_col: str):
     """Shannon entropy (nats) of the unigram token distribution, computed
     in ONE Catalyst pass without exploding tokens into rows:

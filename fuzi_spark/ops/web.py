@@ -905,7 +905,7 @@ def hidden_text(
 
     Style matching is declaration-anchored ((?:^|;) boundary), so
     `display:none` matches while `opacity:0.5` or a `font-size:10px`
-    never false-positive. Arrow-batched pandas UDF; parse failure →
+    never false-positive. Arrow-batched dom_column; parse failure →
     all-NULL struct (never a fake zero)."""
     from ..dom import ELEMENT_NODE, TEXT_NODE
     from ..udfs import dom_column
@@ -987,7 +987,7 @@ def publish_date(
       3. a /YYYY/M/D/ path segment in the URL — 'url'.
 
     The DOM fields come from ONE parse per document in an Arrow-batched
-    pandas UDF (the engine's own css surface); the URL fallback stays
+    dom_column (the engine's own css surface); the URL fallback stays
     JVM-side as three regexp_extract + lpad expressions inside the same
     codegen'd projection, so date-less markup costs no extra Python.
     The DOM struct is computed once (single select) and both derived
@@ -1095,7 +1095,7 @@ def paywall_signals(markup_col: str = "markup", doc_type: str = "html"):
 
     paywalled = schema OR phrase OR markers>0. JSON-LD in <head> is
     reached (head is descended, only its text-bearing decoys are
-    skipped). Arrow-batched pandas UDF; parse failure → all-NULL."""
+    skipped). Arrow-batched dom_column; parse failure → all-NULL."""
     from ..dom import ELEMENT_NODE, TEXT_NODE
     from ..udfs import dom_column
 

@@ -23,7 +23,7 @@ document-wide, so a multi-page file reusing one name for different fonts
 keeps the last binding (recovery-first tradeoff, same as XObject names).
 
 Spark surface: `pdf_extract_df` maps a binary `content` column through the
-same mapInPandas/EXTRACTED_SCHEMA contract as the HTML extractor, so every
+same map_rows/EXTRACTED_SCHEMA contract as the HTML extractor, so every
 downstream pipeline stage (lineage, resume, verification join) works on
 PDF corpora unchanged.
 """
@@ -700,13 +700,11 @@ def build_subset_font_pdf(
 
 def pdf_extract_df(docs, content_col: str = "content", id_col: str = "doc_id"):
     """(doc_id, content: binary) → extracted spans, one row per span —
-    the same EXTRACTED_SCHEMA/mapInPandas contract as the HTML extractor,
+    the same EXTRACTED_SCHEMA/map_rows contract as the HTML extractor,
     so lineage/resume/verification compose unchanged."""
-    from .udfs import EXTRACTED_SCHEMA, row_mapper, span_rows
+    from .udfs import EXTRACTED_SCHEMA, map_rows, span_rows
 
     def rows(doc_id, data):
         return span_rows(doc_id, *extract_pdf_spans(bytes(data or b"")))
 
-    return docs.select(id_col, content_col).mapInPandas(
-        row_mapper(rows, EXTRACTED_SCHEMA), schema=EXTRACTED_SCHEMA
-    )
+    return map_rows(docs.select(id_col, content_col), rows, EXTRACTED_SCHEMA)

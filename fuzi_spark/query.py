@@ -8,7 +8,7 @@ Mirrors the reference's Queryable protocol semantics
 - ``eval_xpath()``  → XPathResult(bool, double, string) scalar triple
 plus snapshot materialization (Sources/Actor.swift:31-110): every public
 result is a plain value — dicts/strings/numbers — never a live DOM node,
-which is exactly the contract a pandas UDF must obey.
+which is exactly the contract an Arrow UDF must obey.
 """
 
 from __future__ import annotations

@@ -4,25 +4,30 @@ The distribution contract mirrors the reference's actor layer
 (kylehughes/Fuzi Sources/Actor.swift:136-405): one DOM per document per
 task, built transiently inside an Arrow batch, with only flat value
 snapshots crossing the executor boundary. There are NO row-at-a-time
-Python UDFs anywhere — everything is `pandas_udf` / `mapInPandas` over
-Arrow batches.
+Python UDFs anywhere, and this module is the one place that names the
+batch format of a per-row operator: Arrow, through pyspark's own
+`mapInArrow` and `arrow_udf`.
 
 Every per-row operator in the package is written with one of three
-helpers, which own the batch loop, null inputs and the output frame:
-`row_mapper(fn, schema)` builds a `mapInPandas` function from a per-row
-`fn` returning 0..N output tuples; `doc_column(return_type, fn)` builds a
-`pandas_udf` over a markup column from a per-document `fn(markup)`; and
+helpers, which own the batch loop, null inputs and the typed output
+arrays: `map_rows(df, fn, schema)` maps a DataFrame by a per-row `fn`
+returning 0..N output tuples; `doc_column(return_type, fn)` builds an
+`arrow_udf` over a markup column from a per-document `fn(markup)`; and
 `dom_column(return_type, fn, doc_type)` does the same from a `fn(doc)`
-over the parsed document. Only whole-batch numpy kernels and grouped
-operators loop themselves.
+over the parsed document. A schema is written once, as a DataType or a
+DDL string, and is also the Arrow type of the output batch. Only
+whole-batch numpy kernels and grouped operators loop themselves. The
+extraction operator (`extract_markup_df`) builds its rows the same way
+(`_map_batch`) but still runs in a `mapInPandas` node, whose plan node
+name the benchmark's traced run looks for.
 
 Each document is parsed once per Arrow batch, and that DOM is shared by
 every `dom_column` over the same markup column and doc_type: pyspark
 evaluates the columns of one ArrowEvalPython node one after another over
-the same batch Series, and `_batch_docs` keeps that batch's DOMs until
-the Series is freed. So a `dom_column` fn must not mutate the document.
-A batch keeps the DOMs of at most `_SHARED_MARKUP_CHARS` of markup (a
-prefix of its rows); the documents past it are parsed once per column.
+the same batch, and `_batch_docs` keeps that batch's DOMs until the next
+batch. So a `dom_column` fn must not mutate the document. A batch keeps
+the DOMs of at most `_SHARED_MARKUP_CHARS` of markup (a prefix of its
+rows); the documents past it are parsed once per column.
 
 XPath/CSS expressions are compiled ONCE per executor process
 (lru_cache in xpath.py / css.py) and reused across every batch — an
@@ -32,25 +37,25 @@ Queryable.swift:299).
 
 from __future__ import annotations
 
-import re
-import weakref
 from typing import Iterator, Optional
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     DoubleType,
     IntegerType,
-    LongType,
     MapType,
     StringType,
     StructField,
     StructType,
+    _parse_datatype_string,
 )
 
 # ---------------------------------------------------------------- schemas
@@ -121,147 +126,105 @@ def _parse_doc(markup: Optional[str], doc_type: Optional[str]):
 # ~10 MB of DOM at the ~10x expansion of markup into nodes.
 _SHARED_MARKUP_CHARS = 1 << 20
 
-# (id(markup Series), doc_type) -> [weakref to the Series, kept DOMs, kept chars]
-_batch_doms: dict = {}
+# [copy of the kept markup rows, {doc_type: their DOMs}]: the first rows of
+# the last batch, up to _SHARED_MARKUP_CHARS of markup
+_batch_doms: list = [pa.array([], pa.string()), {}]
 
 
-def _batch_docs(markup: pd.Series, doc_type: Optional[str]) -> Iterator:
+def _batch_docs(markup: pa.Array, doc_type: Optional[str]) -> Iterator:
     """The parsed documents of one batch's markup column, in row order
     (None for a null or unparseable document).
 
-    The first caller parses; callers with the same Series and doc_type get
-    the kept DOMs of the batch's first `_SHARED_MARKUP_CHARS` of markup and
-    parse only the rest. The entry is dropped when the Series is freed. A
-    top-level function, so every pickled UDF reaches this one module state
-    by reference instead of carrying its own copy."""
+    The batch's first rows, up to `_SHARED_MARKUP_CHARS` of markup, are
+    parsed once per doc_type and their DOMs kept; the rest are parsed per
+    call. pyspark hands every arrow_udf column its own wrapper object of
+    the batch array, so the kept DOMs are found by content: a batch whose
+    first rows equal the kept copy gets them. They are freed when a batch
+    with other first rows arrives. A top-level function, so every pickled
+    UDF reaches this one module state by reference instead of carrying
+    its own copy."""
     if doc_type not in ("html", "xml"):
         doc_type = None
-    key = (id(markup), doc_type)
-    entry = _batch_doms.get(key)
-    if entry is None:
-        # dropped as the Series is freed, before its id can be reused
-        ref = weakref.ref(markup, lambda _: _batch_doms.pop(key, None))
-        entry = _batch_doms[key] = [ref, [], 0]
-    kept = entry[1]
-    for i, m in enumerate(markup):
-        if i < len(kept):
-            yield kept[i]
-            continue
-        doc = _parse_doc(m, doc_type)
-        size = 0 if m is None else len(m)
-        if i == len(kept) and entry[2] + size <= _SHARED_MARKUP_CHARS:
-            kept.append(doc)
-            entry[2] += size
-        yield doc
+    rows, doms = _batch_doms
+    n = len(rows)
+    if not (n and n <= len(markup) and markup.slice(0, n).equals(rows)):
+        sizes = pc.fill_null(pc.utf8_length(markup), 0)
+        fits = pc.less_equal(pc.cumulative_sum(sizes), _SHARED_MARKUP_CHARS)
+        # a copy, so the kept rows do not hold the whole batch in memory
+        rows = pa.concat_arrays([markup.slice(0, pc.sum(fits).as_py() or 0)])
+        doms = {}
+        _batch_doms[:] = [rows, doms]
+    kept = doms.get(doc_type)
+    if kept is None:
+        kept = doms[doc_type] = [_parse_doc(m, doc_type) for m in rows.to_pylist()]
+    yield from kept
+    for m in markup.slice(len(kept)).to_pylist():
+        yield _parse_doc(m, doc_type)
 
 
 # ---------------------------------------------------------------- operator helpers
 
-_DDL_FIELD = re.compile(r"\s*`?(\w+)`?\s*(?::\s*|\s+)(.+?)\s*$", re.S)
+
+def _arrow_type(t):
+    """(Spark DataType, Arrow type) of a DataType or a DDL string ('a long,
+    b string', 'struct<a:long>', 'int'). A string goes through Spark's own
+    parser, so it is resolved when the plan is built."""
+    if isinstance(t, str):
+        t = _parse_datatype_string(t)
+    return t, to_arrow_type(t)
 
 
-def _fields(schema) -> Optional[list]:
-    """(name, is_long) per field of a struct type — a StructType or a DDL
-    string ('a long, b string' or 'struct<a:long,b:string>') — or None
-    when the type is not a struct."""
-    if isinstance(schema, StructType):
-        return [(f.name, isinstance(f.dataType, LongType)) for f in schema.fields]
-    if not isinstance(schema, str):
-        return None
-    s = schema.strip()
-    if s.lower().startswith("struct<"):
-        s = s[7:-1]
-    parts, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
-    matches = [_DDL_FIELD.match(p) for p in parts]
-    if not all(matches):
-        return None
-    return [(m.group(1), m.group(2).lower() in ("long", "bigint")) for m in matches]
+def map_rows(df: DataFrame, fn, schema) -> DataFrame:
+    """`df` mapped by `fn` once per input row, over Arrow batches.
 
-
-def _frame(fields: list, rows: list) -> pd.DataFrame:
-    """Output tuples → a DataFrame in field order. A long column that
-    holds a None is built as nullable Int64: a plain list would coerce
-    to float64, which rounds int64 values above 2^53 (64-bit hashes).
-    No rows gives object columns: an empty float64 column does not
-    convert to an Arrow array or string type."""
-    if not rows:
-        return pd.DataFrame(columns=[name for name, _ in fields])
-    return pd.DataFrame(
-        {
-            name: pd.array(col, dtype="Int64") if is_long and None in col else col
-            for (name, is_long), col in zip(fields, zip(*rows))
-        }
-    )
-
-
-def _values(s: pd.Series) -> list:
-    """A batch column as Python values, nulls as None."""
-    if s.dtype != object and s.hasnans:
-        return s.astype(object).where(s.notna(), None).tolist()
-    return s.tolist()
-
-
-def row_mapper(fn, schema):
-    """mapInPandas function that runs `fn` once per input row.
-
-    `fn(*row)` gets the row's column values in input-column order (nulls
+    `fn(*row)` gets the row's column values in `df` column order (nulls
     as None) and returns that row's output tuples in `schema` field
     order: none (a dropped row), one (a per-row result, failures flagged
-    in its ok column) or many (an explode)."""
-    fields = _fields(schema)
+    in its ok column) or many (an explode). Each input batch yields one
+    output batch of the Arrow type of `schema`."""
+    schema, out = _arrow_type(schema)
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list = []
-            for row in zip(*(_values(pdf[c]) for c in pdf.columns)):
-                rows.extend(fn(*row))
-            yield _frame(fields, rows)
+    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield _map_batch(fn, [c.to_pylist() for c in batch.columns], out)
 
-    return mapper
+    return df.mapInArrow(mapper, schema)
+
+
+def _map_batch(fn, columns: list, out: pa.StructType) -> pa.RecordBatch:
+    """One batch's column values → the batch of `fn`'s output rows."""
+    rows: list = []
+    for row in zip(*columns):
+        rows.extend(fn(*row))
+    return pa.RecordBatch.from_struct_array(pa.array(rows, type=out))
 
 
 def _column(return_type, values):
-    """pandas_udf over a markup column; `values(markup)` yields one value
+    """arrow_udf over a markup column; `values(markup)` yields one value
     per document: a tuple in field order for a struct `return_type`,
     where None stands for all-null fields."""
-    fields = _fields(return_type)
-    if fields is None:
+    return_type, out = _arrow_type(return_type)
+    is_struct = isinstance(return_type, StructType)
+    nulls = (None,) * len(return_type.fields) if is_struct else None
 
-        @pandas_udf(return_type)
-        def _udf(markup: pd.Series) -> pd.Series:
-            return pd.Series(list(values(markup)))
-
-        return _udf
-
-    nulls = (None,) * len(fields)
-
-    @pandas_udf(return_type)
-    def _udf(markup: pd.Series) -> pd.DataFrame:
-        return _frame(fields, [nulls if v is None else v for v in values(markup)])
+    @arrow_udf(return_type)
+    def _udf(markup: pa.Array) -> pa.Array:
+        return pa.array([nulls if v is None else v for v in values(markup)], type=out)
 
     return _udf
 
 
 def doc_column(return_type, fn):
-    """pandas_udf over a markup column that runs `fn` once per document.
+    """arrow_udf over a markup column that runs `fn` once per document.
 
     `fn(markup)` gets the document (None when null) and returns its
     value: a tuple in field order for a struct `return_type`, where None
     stands for all-null fields."""
-    return _column(return_type, lambda markup: map(fn, markup))
+    return _column(return_type, lambda markup: map(fn, markup.to_pylist()))
 
 
 def dom_column(return_type, fn, doc_type: Optional[str] = None):
-    """pandas_udf over a markup column that runs `fn` once per parsed
+    """arrow_udf over a markup column that runs `fn` once per parsed
     document.
 
     `fn(doc)` gets the document's DOM (None when the markup is null or
@@ -303,19 +266,6 @@ def span_rows(doc_id, spans: list, err: int) -> list:
     ]
 
 
-def make_extract_markup_fn(doc_type: Optional[str] = None):
-    """mapInPandas function: (doc_id, markup[, doc_type]) batches →
-    extracted span rows, N per document (span_rows)."""
-    from .extract import extract_spans
-
-    def rows(doc_id, markup, dt=doc_type):
-        if not markup:
-            return span_rows(doc_id, [], 1)
-        return span_rows(doc_id, *extract_spans(markup, dt))
-
-    return row_mapper(rows, EXTRACTED_SCHEMA)
-
-
 def markup_select(docs: DataFrame) -> DataFrame:
     """docs(doc_id, spans[, doc_type]) → (doc_id, markup[, doc_type]):
     the span→markup reassembly, JVM-side (markup_from_spans_col)."""
@@ -335,12 +285,27 @@ def extract_markup_df(docs: DataFrame, doc_type: Optional[str] = None) -> DataFr
     already ran the span→markup codec (run_extraction_pipeline applies it
     BEFORE the salting shuffle so the exchange carries one string column,
     not the array-of-structs spans payload)."""
+    from .extract import extract_spans
+
+    def rows(doc_id, markup, dt=doc_type):
+        if not markup:
+            return span_rows(doc_id, [], 1)
+        return span_rows(doc_id, *extract_spans(markup, dt))
+
+    out = to_arrow_type(EXTRACTED_SCHEMA)
+
+    def frames(pdfs):
+        # string columns: their nulls arrive as None
+        for pdf in pdfs:
+            yield _map_batch(rows, [pdf[c].tolist() for c in pdf.columns], out).to_pandas()
+
     cols = [F.col("doc_id"), F.col("markup")]
     if "doc_type" in docs.columns:
         cols.append(F.col("doc_type"))
-    return docs.select(*cols).mapInPandas(
-        make_extract_markup_fn(doc_type), schema=EXTRACTED_SCHEMA
-    )
+    # Not yet map_rows: perfbench's traced run reads this job's Python-node
+    # metrics from the event log by the node names MapInPandas and
+    # ArrowEvalPython (perfbench/collect.py, PY_NODES), not MapInArrow.
+    return docs.select(*cols).mapInPandas(frames, EXTRACTED_SCHEMA)
 
 
 # ---------------------------------------------------------------- query UDFs

@@ -21,7 +21,7 @@ formats — /root/reference/Sources reads in-memory buffers only
 source surface), original work.
 
 Spark surface: `parse_warc_df` explodes each archive blob into one row
-per record via ONE mapInPandas pass (Arrow-batched; the per-record
+per record via ONE map_rows pass (Arrow-batched; the per-record
 Python is the parser itself, the same contract as extract_spans_df).
 Blobs should be pre-split upstream (one blob per task unit); record
 offsets are per-blob, deterministic.
@@ -126,7 +126,7 @@ WARC_RECORD_SCHEMA = (
 
 
 def parse_warc_df(archives, data_col: str = "data", id_col: str = "archive_id"):
-    """Explode WARC archive blobs into record rows — one mapInPandas
+    """Explode WARC archive blobs into record rows — one map_rows
     pass, Arrow-batched. body_text is the block decoded as UTF-8
     (errors replaced) so downstream text operators (extraction, dedup,
     quality) chain directly; body_len is the raw byte length.
@@ -136,7 +136,7 @@ def parse_warc_df(archives, data_col: str = "data", id_col: str = "archive_id"):
     10^12 records, repartition the archive table first (the extraction
     pipeline's salting applies — giant archives are the skew unit here).
     """
-    from .udfs import row_mapper
+    from .udfs import map_rows
 
     def rows(aid, blob):
         if blob is None:
@@ -150,6 +150,4 @@ def parse_warc_df(archives, data_col: str = "data", id_col: str = "archive_id"):
             for idx, r in enumerate(parse_warc(bytes(blob)))
         ]
 
-    return archives.select(id_col, data_col).mapInPandas(
-        row_mapper(rows, WARC_RECORD_SCHEMA), schema=WARC_RECORD_SCHEMA
-    )
+    return map_rows(archives.select(id_col, data_col), rows, WARC_RECORD_SCHEMA)

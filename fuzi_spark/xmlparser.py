@@ -132,7 +132,6 @@ def _resolve_entities(text: str, entities: dict[str, str], _depth: int = 0) -> s
 def parse_xml(
     source,
     user_namespaces: Optional[dict[str, str]] = None,
-    assign_order: bool = True,
 ) -> Document:
     """Parse an XML string/bytes into a Document. Never raises on malformed
     content; raises XMLError(parserFailure) only for empty/whitespace input,
@@ -369,8 +368,6 @@ def parse_xml(
             sc.advance(m.end())
 
     flush_text() if stack else None
-    if assign_order:
-        doc.assign_order()
     if doc.root is None:
         raise XMLError(ERR_DOCUMENT_EMPTY, "Document is empty")
     return doc

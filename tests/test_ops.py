@@ -6350,8 +6350,7 @@ class TestVideoPhash:
 
         from fuzi_spark.ops.jpeg import encode_baseline
         from fuzi_spark.ops.multimodal import build_avi
-        from fuzi_spark.ops.phash import _video_phash_fn
-        import pandas as pd
+        from fuzi_spark.ops.phash import VIDEO_PHASH_SCHEMA, _video_phash_fn
 
         def vid(seed, nf):
             frames = [
@@ -6360,14 +6359,11 @@ class TestVideoPhash:
             ]
             return build_avi(64, 64, 10.0, frames)
 
-        pdf = pd.DataFrame(
-            {
-                "media_ref": ["a", "b", "c", "d"],
-                "content": [vid(3, 3), vid(3, 6), vid(9, 3), b"junk"],
-            }
-        )
-        out = next(_video_phash_fn(4)([pdf]))
-        by = {r["media_ref"]: r for _, r in out.iterrows()}
+        rows = _video_phash_fn(4)
+        media = {"a": vid(3, 3), "b": vid(3, 6), "c": vid(9, 3), "d": b"junk"}
+        names = VIDEO_PHASH_SCHEMA.fieldNames()
+        by = {ref: dict(zip(names, out)) for ref, c in media.items()
+              for out in rows(ref, c)}
         # same pictures, different frame counts: same fingerprint
         assert by["a"]["phash"] == by["b"]["phash"]
         assert by["a"]["decode_ok"] == 1
@@ -6376,11 +6372,9 @@ class TestVideoPhash:
         # distinct seeded pictures: far apart
         ham = bin(int(by["a"]["phash"]) ^ int(by["c"]["phash"])).count("1")
         assert ham >= 10
-        assert by["d"]["decode_ok"] == 0 and pd.isna(by["d"]["phash"])
+        assert by["d"]["decode_ok"] == 0 and by["d"]["phash"] is None
 
     def test_recompression_stability_natural_spectrum(self):
-        import pandas as pd
-
         from fuzi_spark.ops.jpeg import encode_baseline
         from fuzi_spark.ops.multimodal import build_avi
         from fuzi_spark.ops.phash import _video_phash_fn
@@ -6393,11 +6387,9 @@ class TestVideoPhash:
             64, 64, 10.0,
             [encode_baseline(img, quality=80, subsampling="4:2:0")] * 3,
         )
-        pdf = pd.DataFrame(
-            {"media_ref": ["hi", "lo"], "content": [v95, v80]}
-        )
-        out = next(_video_phash_fn(4)([pdf]))
-        a, b = int(out["phash"].iloc[0]), int(out["phash"].iloc[1])
+        rows = _video_phash_fn(4)
+        ((*_, a, _ok_a),) = rows("hi", v95)
+        ((*_, b, _ok_b),) = rows("lo", v80)
         assert bin(a ^ b).count("1") <= 6
 
     def test_query_formula_pictures_distinct_through_jpeg(self):

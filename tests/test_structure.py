@@ -741,3 +741,34 @@ class TestSharedParsePlan:
         (node,) = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
         inputs = re.findall(r"_udf\((\w+#\d+)\)", node)
         assert len(inputs) == 9 and len(set(inputs)) == 1
+
+
+class TestOneArrowBoundary:
+    # whole-batch numpy kernels: they loop over a batch themselves
+    WHOLE_BATCH = {"ops/bloom.py", "ops/decomp.py", "ops/quantize.py", "ops/similarity.py"}
+
+    def test_per_row_operators_name_no_batch_format(self):
+        """udfs.py alone names the batch format of a per-row operator:
+        elsewhere in the package no module names `row_mapper` or the Arrow
+        operators, and only the whole-batch kernels call `.mapInPandas`."""
+        import ast
+        import pathlib
+
+        import fuzi_spark
+
+        pkg = pathlib.Path(fuzi_spark.__file__).parent
+        map_in_pandas = set()
+        for path in sorted(pkg.rglob("*.py")):
+            rel = path.relative_to(pkg).as_posix()
+            if rel == "udfs.py":
+                continue
+            tree = ast.parse(path.read_text(), rel)
+            names = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+            names |= {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+            names |= {a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+                      for a in n.names}
+            assert not names & {"row_mapper", "mapInArrow", "arrow_udf"}, rel
+            if "mapInPandas" in names:
+                map_in_pandas.add(rel)
+        # a new per-row operator belongs in udfs.map_rows, not here
+        assert map_in_pandas <= self.WHOLE_BATCH, map_in_pandas - self.WHOLE_BATCH

@@ -1,18 +1,26 @@
-"""The per-row operator helpers in fuzi_spark/udfs.py — `row_mapper`
-(mapInPandas), `doc_column` and `dom_column` (pandas_udf) — and the query
+"""The per-row operator helpers in fuzi_spark/udfs.py — `map_rows`
+(mapInArrow), `doc_column` and `dom_column` (arrow_udf) — and the query
 columns built on them."""
 
 import gc
 import weakref
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from fuzi_spark.udfs import _fields, doc_column, row_mapper
+from fuzi_spark import udfs
+from fuzi_spark.udfs import doc_column, map_rows
 
 WORDS_SCHEMA = "doc_id long, n int, word string"
+WORDS_STRUCT = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("n", IntegerType()),
+        StructField("word", StringType()),
+    ]
+)
 
 
 @pytest.fixture(scope="module")
@@ -32,6 +40,18 @@ def spark():
     yield s
 
 
+class _Plan:
+    """Stands in for a DataFrame: `map_rows(_Plan(), fn, schema)` returns
+    the batch function it hands to mapInArrow."""
+
+    def mapInArrow(self, mapper, schema):
+        return mapper
+
+
+def _mapper(fn, schema):
+    return map_rows(_Plan(), fn, schema)
+
+
 def _words(doc_id, text):
     """An explode: one output row per word, none for a null text."""
     if text is None:
@@ -39,31 +59,33 @@ def _words(doc_id, text):
     return [(doc_id, i, w) for i, w in enumerate(text.split())]
 
 
-def _tuples(pdf):
-    return list(pdf.itertuples(index=False, name=None))
+def _batch(**cols):
+    return pa.RecordBatch.from_pydict(cols)
 
 
+def _tuples(batch):
+    return list(zip(*(c.to_pylist() for c in batch.columns)))
+
+
+@pytest.mark.usefixtures("spark")  # DDL schemas go through Spark's parser
 class TestRowMapper:
     def test_empty_batch(self):
-        pdf = pd.DataFrame(
-            {"doc_id": pd.Series([], dtype="int64"), "text": pd.Series([], dtype=object)}
-        )
-        (out,) = row_mapper(_words, WORDS_SCHEMA)(iter([pdf]))
-        assert len(out) == 0
-        assert list(out.columns) == ["doc_id", "n", "word"]
+        batch = _batch(doc_id=pa.array([], pa.int64()), text=pa.array([], pa.string()))
+        (out,) = _mapper(_words, WORDS_SCHEMA)(iter([batch]))
+        assert out.num_rows == 0
+        assert out.schema.names == ["doc_id", "n", "word"]
+        assert out.schema.types == [pa.int64(), pa.int32(), pa.string()]
 
     def test_zero_one_and_n_rows_per_input(self):
-        pdf = pd.DataFrame({"doc_id": [1, 2, 3], "text": ["", "a", "a b c"]})
-        (out,) = row_mapper(_words, WORDS_SCHEMA)(iter([pdf]))
+        batch = _batch(doc_id=[1, 2, 3], text=["", "a", "a b c"])
+        (out,) = _mapper(_words, WORDS_SCHEMA)(iter([batch]))
         assert _tuples(out) == [(2, 0, "a"), (3, 0, "a"), (3, 1, "b"), (3, 2, "c")]
 
     def test_one_frame_per_batch(self):
-        batches = [
-            pd.DataFrame({"doc_id": [1], "text": ["a b"]}),
-            pd.DataFrame({"doc_id": [2], "text": [None]}),
-        ]
-        outs = list(row_mapper(_words, WORDS_SCHEMA)(iter(batches)))
-        assert [len(o) for o in outs] == [2, 0]
+        """One output batch per input batch, an empty one included."""
+        batches = [_batch(doc_id=[1], text=["a b"]), _batch(doc_id=[2], text=[None])]
+        outs = list(_mapper(_words, WORDS_SCHEMA)(iter(batches)))
+        assert [o.num_rows for o in outs] == [2, 0]
 
     def test_null_inputs_arrive_as_none(self):
         seen = []
@@ -72,10 +94,11 @@ class TestRowMapper:
             seen.append(row)
             return [(0,)]
 
-        pdf = pd.DataFrame(
-            {"x": [1.5, None], "s": ["a", None], "b": [b"x", None], "i": [7, 8]}
+        batch = _batch(
+            x=pa.array([1.5, None]), s=pa.array(["a", None]),
+            b=pa.array([b"x", None]), i=pa.array([7, 8]),
         )
-        (out,) = row_mapper(fn, "k int")(iter([pdf]))
+        (out,) = _mapper(fn, "k int")(iter([batch]))
         assert seen == [(1.5, "a", b"x", 7), (None, None, None, 8)]
         assert _tuples(out) == [(0,), (0,)]
 
@@ -86,17 +109,17 @@ class TestRowMapper:
             return [(ref, n * 2, 1)]
 
         schema = "ref string, doubled int, ok int"
-        pdf = pd.DataFrame({"ref": ["a", "b", "c"], "n": [2, -1, None]})
-        (out,) = row_mapper(fn, schema)(iter([pdf]))
-        assert [(r, ok) for r, _d, ok in _tuples(out)] == [("a", 1), ("b", 0), ("c", 0)]
-        assert out["doubled"][0] == 4 and out["doubled"][1:].isna().all()
+        batch = _batch(ref=["a", "b", "c"], n=pa.array([2, -1, None]))
+        (out,) = _mapper(fn, schema)(iter([batch]))
+        assert _tuples(out) == [("a", 4, 1), ("b", None, 0), ("c", None, 0)]
 
     def test_long_column_with_null_keeps_64_bits(self):
         big = (1 << 62) + 1
         schema = StructType([StructField("h", LongType())])
-        pdf = pd.DataFrame({"v": pd.Series([big, None], dtype=object)})
-        (out,) = row_mapper(lambda v: [(v,)], schema)(iter([pdf]))
-        assert out["h"][0] == big and pd.isna(out["h"][1])
+        batch = _batch(v=pa.array([big, None], pa.int64()))
+        (out,) = _mapper(lambda v: [(v,)], schema)(iter([batch]))
+        assert out.column(0).type == pa.int64()
+        assert out.column(0).to_pylist() == [big, None]
 
 
 @pytest.mark.parametrize(
@@ -117,20 +140,39 @@ class TestRowMapper:
         ),
     ],
 )
-def test_fields(schema, want):
-    assert _fields(schema) == want
+def test_fields(spark, schema, want):
+    """Every schema form an operator writes — a DataType or a DDL string —
+    resolves to its Arrow type: (name, is 64-bit) per field of a struct,
+    None for any other type."""
+    _, arrow_type = udfs._arrow_type(schema)
+    got = None
+    if pa.types.is_struct(arrow_type):
+        got = [(f.name, pa.types.is_int64(f.type)) for f in arrow_type]
+    assert got == want
 
 
-def test_row_mapper_spark_round_trip(spark):
+@pytest.mark.parametrize("schema", [WORDS_SCHEMA, WORDS_STRUCT], ids=["ddl", "struct"])
+def test_map_rows_spark_round_trip(spark, schema):
     def words(doc_id, text):  # local: workers cannot import this module
         return [] if text is None else [(doc_id, i, w) for i, w in enumerate(text.split())]
 
     df = spark.createDataFrame(
         [(1, "a b"), (2, None), (3, ""), (4, "c")], "doc_id long, text string"
     )
-    got = df.mapInPandas(row_mapper(words, WORDS_SCHEMA), schema=WORDS_SCHEMA)
+    got = map_rows(df, words, schema)
     assert got.schema.simpleString() == "struct<doc_id:bigint,n:int,word:string>"
     assert sorted(map(tuple, got.collect())) == [(1, 0, "a"), (1, 1, "b"), (4, 0, "c")]
+
+
+def test_long_with_null_keeps_64_bits_through_spark(spark):
+    """A 64-bit value next to a null in the same batch comes back exact
+    from both a map_rows column and a doc_column."""
+    big = (1 << 62) + 1
+    df = spark.createDataFrame([("a",), (None,)], "m string").coalesce(1)
+    col = doc_column("long", lambda m: None if m is None else big)
+    assert [r.v for r in df.select(col("m").alias("v")).collect()] == [big, None]
+    rows = map_rows(df, lambda m: [(None if m is None else big,)], "v long")
+    assert [r.v for r in rows.collect()] == [big, None]
 
 
 def test_doc_column_spark_round_trip(spark):
@@ -185,8 +227,11 @@ SHOUT = "<HTML><HEAD><TITLE>Shout</TITLE></HEAD><BODY><P>y</P></BODY></HTML>"
 
 @pytest.fixture
 def parses(monkeypatch):
-    """Every parse_html / parse_xml call's markup, in call order."""
-    from fuzi_spark import htmlparser, xmlparser
+    """Every parse_html / parse_xml call's markup, in call order, from an
+    empty shared-DOM state."""
+    from fuzi_spark import htmlparser, udfs, xmlparser
+
+    monkeypatch.setattr(udfs, "_batch_doms", [pa.array([], pa.string()), {}])
 
     seen = []
     for mod, name in ((htmlparser, "parse_html"), (xmlparser, "parse_xml")):
@@ -212,22 +257,23 @@ def _query_columns():
 
 
 def _rows(out):
-    """A pandas_udf batch result as a list of plain values per row, nulls
-    as None."""
-    out = out.astype(object).where(out.notna(), None)
-    if isinstance(out, pd.DataFrame):
-        return list(out.itertuples(index=False, name=None))
-    return out.tolist()
+    """An arrow_udf batch result as a list of plain values per row, nulls
+    as None and a struct as its tuple of field values."""
+    if pa.types.is_struct(out.type):
+        return list(zip(*(f.to_pylist() for f in out.flatten())))
+    return out.to_pylist()
 
 
 class TestSharedParse:
     def test_each_document_parsed_once_per_batch(self, parses):
-        markup = pd.Series([PAGE, FEED, None, SHOUT, FEED])
+        docs = [PAGE, FEED, None, SHOUT, FEED]
+        batch = pa.RecordBatch.from_pydict({"markup": docs})
         cols = _query_columns()
-        outs = [_rows(col.func(markup)) for col in cols]
-        assert len(parses) == markup.notna().sum()
+        # as in pyspark, each column gets its own wrapper of the batch array
+        outs = [_rows(col.func(batch.column(0))) for col in cols]
+        assert len(parses) == 4
         for col, out in zip(cols, outs):
-            assert out == [_rows(col.func(pd.Series([m])))[0] for m in markup]
+            assert out == [_rows(col.func(pa.array([m], pa.string())))[0] for m in docs]
         assert [meta[2] for meta in outs[4]] == ["html", "feed", None, "html", "feed"]
 
     def test_over_cap_batch_parses_the_rest_per_column(self, parses):
@@ -236,30 +282,37 @@ class TestSharedParse:
         # two documents of 3/4 of the cap: only the first one's DOM is kept
         n_items = udfs._SHARED_MARKUP_CHARS * 3 // 4 // len("<li>item</li>")
         big = "<html><body><ul>" + "<li>item</li>" * n_items + "</ul></body></html>"
-        markup = pd.Series([PAGE, big, big.replace("<li>item", "<li>x", 2), FEED])
+        docs = [PAGE, big, big.replace("<li>item", "<li>x", 2), FEED]
+        batch = pa.RecordBatch.from_pydict({"markup": docs})
         cols = [udfs.xpath_double("count(//li)"), udfs.xpath_string("//li[2]"),
                 udfs.doc_meta()]
-        over = [_rows(col.func(markup)) for col in cols]
+        over = [_rows(col.func(batch.column(0))) for col in cols]
         assert len(parses) == 2 + len(cols) * 2
-        under = [[_rows(col.func(pd.Series([m])))[0] for m in markup] for col in cols]
+        under = [[_rows(col.func(pa.array([m])))[0] for m in docs] for col in cols]
         assert over == under
         assert over[0][1:3] == [n_items, n_items]
         assert over[1][1:3] == ["item", "x"]
 
-    def test_doms_freed_with_the_batch(self):
+    def test_doms_freed_with_the_batch(self, parses):
+        """Every wrapper of a batch's array gets the kept DOMs, which hold
+        a copy of the kept rows, not the batch; they are freed when a
+        batch with other first rows arrives."""
         from fuzi_spark import udfs
 
-        markup = pd.Series([PAGE, FEED])
-        docs = list(udfs._batch_docs(markup, None))
-        assert list(udfs._batch_docs(markup, None)) == docs
+        batch = pa.RecordBatch.from_pydict({"markup": [PAGE, FEED]})
+        docs = list(udfs._batch_docs(batch.column(0), None))
+        again = list(udfs._batch_docs(batch.column(0), None))
+        assert len(again) == 2 and all(a is b for a, b in zip(again, docs))
+        kept_rows = udfs._batch_doms[0]
+        assert kept_rows.buffers()[2].address != batch.column(0).buffers()[2].address
         freed = weakref.ref(docs[0])
-        del docs
+        del docs, again, batch
         gc.collect()
         assert freed() is not None
-        del markup
+        list(udfs._batch_docs(pa.array([FEED, PAGE]), None))
         gc.collect()
         assert freed() is None
-        assert udfs._batch_doms == {}
+        assert len(parses) == 4
 
     def test_columns_leak_nothing_to_each_other(self, spark):
         """One select over shared DOMs equals each column selected alone:

@@ -289,7 +289,9 @@ class TestPlan:
         exprs = ["//li", "//li[2]", "//ul/li", "//ul//li[last()]",
                  "//li/preceding-sibling::li", "//li/ancestor::ul", "//p[@class]",
                  "//*[self::p or self::li]", "//li/following::p"]
-        ordered, unordered = parse(src), parse(src, assign_order=False)
+        ordered, unordered = parse(src), parse(src)
+        ordered.assign_order()
+        assert ordered.ranked and not unordered.ranked
         for expr in exprs:
             assert [n.raw_xml for n in fz.xpath(unordered, expr)] == [
                 n.raw_xml for n in fz.xpath(ordered, expr)], expr
@@ -417,8 +419,9 @@ class TestSpecDifferential:
             return sibs[:i][::-1]
         assert axis == "preceding"
         anc = {id(a) for a in cls._ancestors(cn)}
-        before = [e for e in cls._all_desc(doc) if e.ord < cn.ord and id(e) not in anc]
-        return before[::-1]
+        every = cls._all_desc(doc)
+        k = next(j for j, e in enumerate(every) if e is cn)
+        return [e for e in every[:k] if id(e) not in anc][::-1]
 
     @classmethod
     def _ref_eval(cls, doc, path, start=None):
@@ -426,6 +429,8 @@ class TestSpecDifferential:
 
         from fuzi_spark.dom import ELEMENT_NODE
 
+        # document order from a walk: the engine's `ord` ranks are its own
+        order = {id(e): k for k, e in enumerate(cls._all_desc(doc))}
         steps = []
         i = 0
         ctx = [doc]
@@ -494,7 +499,7 @@ class TestSpecDifferential:
                     out.extend(cands)
             seen = set()
             ctx = []
-            for c in sorted(out, key=lambda n: n.ord):
+            for c in sorted(out, key=lambda n: order[id(n)]):
                 if id(c) not in seen:
                     seen.add(id(c))
                     ctx.append(c)
