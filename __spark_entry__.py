@@ -954,79 +954,6 @@ def q_video_container_dedup(spark, sf_dir):
     )
 
 
-def q_audio_mp3_pcm(spark, sf_dir):
-    """REAL MPEG-1 Layer III PCM decode (ops/mp3.py, r5) through the
-    production parse_audio dispatch: per doc a deterministic signal
-    (exact silence for ids ≡1 mod 4, a loud tone otherwise) is
-    Layer-III-encoded — huffman regions, requantization, IMDCT,
-    polyphase synthesis all on the real path — and decoded back;
-    sample count, rate, silence (decode must emit EXACT zeros) and
-    loudness are formula-predictable. Every fifth doc is an UNMARKED
-    header-only MP3 fixture: the honesty gate (ops/mp3.py profile
-    marker) must refuse it (decode_ok=0, NULL features) rather than
-    decode garbage with non-ISO tables. Capped at 300 docs — a codec
-    correctness probe, not a throughput surface (the per-symbol
-    huffman walk is Python; see the module's scale note)."""
-    import numpy as np
-    import pandas as pd
-
-    from fuzi_spark.ops.mp3 import encode_mp3
-    from fuzi_spark.ops.multimodal import build_mp3, parse_audio
-
-    cols = ("doc_id", "decode_ok", "sample_rate", "channels",
-            "n_samples", "is_silent", "is_loud")
-    schema = ("doc_id long, decode_ok int, sample_rate int, "
-              "channels int, n_samples long, is_silent int, "
-              "is_loud int")
-
-    def gen(batches):
-        rates = [44100, 48000, 32000]
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for i in pdf["doc_id"]:
-                i = int(i)
-                rows["doc_id"].append(i)
-                if i % 5 == 0:
-                    content = build_mp3(
-                        title=f"T{i}", bitrate_kbps=128, n_frames=3)
-                else:
-                    rate = rates[i % 3]
-                    n = 1152 * (3 + i % 2)
-                    if i % 4 == 1:
-                        sig = np.zeros(n)
-                    else:
-                        t = np.arange(n)
-                        sig = 0.5 * np.sin(
-                            2 * np.pi * 500.0 * (1 + i % 3) * t / rate)
-                    content = encode_mp3(
-                        (sig * 32767).astype(np.int16),
-                        rate=rate, bitrate=160)
-                got = parse_audio(content)
-                if got is None:
-                    rows["decode_ok"].append(0)
-                    for k in cols[2:]:
-                        rows[k].append(None)
-                else:
-                    r, ch, _bits, n_s, p = got
-                    x = np.frombuffer(p, "<i2").astype(
-                        np.float64) / 32768.0
-                    rms = float(np.sqrt(np.mean(x * x))) if len(x) \
-                        else 0.0
-                    rows["decode_ok"].append(1)
-                    rows["sample_rate"].append(r)
-                    rows["channels"].append(ch)
-                    rows["n_samples"].append(n_s)
-                    rows["is_silent"].append(1 if rms == 0.0 else 0)
-                    rows["is_loud"].append(1 if rms > 0.1 else 0)
-            yield pd.DataFrame(rows)
-
-    docs = _docs(spark, sf_dir).select("doc_id").filter(
-        F.col("doc_id") < 300)
-    return docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism
-    ).mapInPandas(gen, schema=schema)
-
-
 def q_redact_cc(spark, sf_dir):
     """Luhn-gated credit-card masking on a four-class formula corpus:
     a valid Visa test number (masked), the same number with its check
@@ -8607,28 +8534,6 @@ def oracle_sql() -> dict[str, str]:
             "  CAST(NULL AS INTEGER), CAST(NULL AS BIGINT), "
             "  CAST(NULL AS INTEGER) "
             "FROM d WHERE bad"
-        ),
-        "audio_mp3_pcm": (
-            "WITH p AS (SELECT doc_id, doc_id % 5 = 0 AS bad, "
-            "  CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000 "
-            "    ELSE 32000 END AS sr, "
-            "  3 + doc_id % 2 AS nfr, "
-            "  doc_id % 4 = 1 AS silent "
-            "  FROM documents WHERE doc_id < 300) "
-            "SELECT doc_id, "
-            "  CAST(CASE WHEN bad THEN 0 ELSE 1 END AS INTEGER) "
-            "    AS decode_ok, "
-            "  CAST(CASE WHEN bad THEN NULL ELSE sr END AS INTEGER) "
-            "    AS sample_rate, "
-            "  CAST(CASE WHEN bad THEN NULL ELSE 1 END AS INTEGER) "
-            "    AS channels, "
-            "  CAST(CASE WHEN bad THEN NULL ELSE nfr * 1152 END "
-            "    AS BIGINT) AS n_samples, "
-            "  CAST(CASE WHEN bad THEN NULL WHEN silent THEN 1 "
-            "    ELSE 0 END AS INTEGER) AS is_silent, "
-            "  CAST(CASE WHEN bad THEN NULL WHEN silent THEN 0 "
-            "    ELSE 1 END AS INTEGER) AS is_loud "
-            "FROM p"
         ),
         "audio_mp3": (
             "WITH p AS (SELECT doc_id, doc_id % 7 = 0 AS bad, "

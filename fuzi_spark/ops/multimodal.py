@@ -517,15 +517,12 @@ def audio_format(content) -> Optional[str]:
 def parse_audio(content) -> Optional[tuple]:
     """Container dispatch for the audio surface: integer-PCM WAV via
     parse_wav, FLAC via ops/flac.decode_flac (real lossless decode —
-    r4), MP3 via ops/mp3.decode_mp3 (r5: full MPEG-1 Layer III
-    machinery — huffman regions, reservoir, requantize, stereo,
-    IMDCT, polyphase synthesis — decoding only streams that carry
-    the module's profile marker; unmarked real-world MP3s return
-    None here and stay on parse_mp3's header-only metadata path, so
-    decode_ok never lies — see ops/mp3.py's honesty contract). Every
-    downstream audio operator (RMS features, spectrograms, landmark
-    fingerprints) consumes this one contract:
-    (rate, channels, bits, n_frames, pcm_bytes), or None."""
+    r4). MP3 returns None: Layer III PCM decode needs the ISO Annex-B
+    huffman tables, which are not derivable from the spec text, so
+    every MP3 stays on parse_mp3's header-only metadata path and
+    decode_ok never lies. Every downstream audio operator (RMS
+    features, spectrograms, landmark fingerprints) consumes this one
+    contract: (rate, channels, bits, n_frames, pcm_bytes), or None."""
     fmt = audio_format(content)
     if fmt == "wav":
         return parse_wav(content)
@@ -533,10 +530,6 @@ def parse_audio(content) -> Optional[tuple]:
         from .flac import decode_flac
 
         return decode_flac(content)
-    if fmt == "mp3":
-        from .mp3 import decode_mp3
-
-        return decode_mp3(content)
     return None
 
 
@@ -1010,8 +1003,8 @@ def parse_adts(content) -> Optional[dict]:
     MEASURED, like parse_mp3's walk. Junk between frames re-syncs at
     the next 0xFFF; None when no valid frame exists. decode_ok stays
     0 downstream — AAC PCM decode is honestly absent (the spectral
-    huffman codebooks are non-derivable constants here, same verdict
-    as MP3's Annex-B tables; see ops/mp3.py's honesty contract)."""
+    huffman codebooks are non-derivable constants here, the same
+    verdict as MP3's Annex-B tables in parse_audio)."""
     b = bytes(content or b"")
     pos = 0
     n_frames = 0

@@ -84,24 +84,6 @@ def make_hyperplanes(dim: int, bits: int = 12, seed: int = 42) -> np.ndarray:
     return rng.randn(dim, bits).astype(np.float64)
 
 
-def lsh_signature_udf(planes: np.ndarray):
-    """Vectorized sign-LSH: one (batch × dim) @ (dim × bits) matmul per
-    Arrow batch; returns the integer bucket."""
-    P = planes
-
-    @pandas_udf(IntegerType())
-    def _udf(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype="int32")
-        M = np.stack(vec.to_numpy())
-        proj = M.astype(np.float64) @ P
-        bits = (proj > 0).astype(np.int64)
-        weights = (1 << np.arange(P.shape[1], dtype=np.int64))
-        return pd.Series((bits @ weights).astype(np.int32))
-
-    return _udf
-
-
 def lsh_signatures_udf(planes_per_table: list):
     """Multi-table sign-LSH: ONE (batch × dim) @ (dim × tables·bits)
     matmul per Arrow batch, then per-table bucket ints — array<int>, one

@@ -429,20 +429,6 @@ def winnow_fingerprint_udf(k: int = 5, window: int = 4):
     return _udf
 
 
-def text_stats_df(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass enrichment: quality metrics + token counts + predicted
-    language + fingerprint size."""
-    enriched = quality_metrics(df, text_col)
-    return enriched.withColumns(
-        {
-            "tokens_ws": token_count_ws(text_col),
-            "tokens_bpe": token_count_bpe(text_col),
-            "lang_pred": lang_id(F.col(text_col)),
-            "fingerprint": winnow_fingerprint_udf()(F.col(text_col)),
-        }
-    )
-
-
 def corpus_report(
     df: DataFrame,
     group_cols: list[str],

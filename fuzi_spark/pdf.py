@@ -122,11 +122,6 @@ def _decode_text_bytes(bs: bytes) -> str:
     return bs.decode("latin-1")
 
 
-def _decode_pdf_string(raw: bytes) -> str:
-    """Unescape, then decode — the non-CMap text-string path."""
-    return _decode_text_bytes(_unescape_pdf_string(raw))
-
-
 # ------------------------------------------------------------ ToUnicode CMap
 
 _TOUNICODE_RE = re.compile(rb"/ToUnicode\s+(\d+)\s+\d+\s+R")

@@ -3,7 +3,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-REFERENCE_RESOURCES = "/root/reference/Tests/Resources"
+from fuzi_spark.corpus import REFERENCE_RESOURCES  # noqa: E402
+
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
 

@@ -103,7 +103,9 @@ class TestStructuredCases:
     def test_reference_fixture_web(self):
         import os
 
-        path = "/root/reference/Tests/Resources/web.html"
+        from fuzi_spark.corpus import REFERENCE_RESOURCES
+
+        path = os.path.join(REFERENCE_RESOURCES, "web.html")
         if os.path.exists(path):
             from fuzi_spark.xmlparser import decode_bytes
 

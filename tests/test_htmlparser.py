@@ -278,8 +278,10 @@ class TestTokenizerDifferential:
     def test_reference_fixtures(self):
         import os
 
+        from fuzi_spark.corpus import REFERENCE_RESOURCES
+
         for name in ("web.html", "atom.xml", "xml.xml", "ocf.xml", "vmap.xml"):
-            path = f"/root/reference/Tests/Resources/{name}"
+            path = os.path.join(REFERENCE_RESOURCES, name)
             if os.path.exists(path):
                 from fuzi_spark.xmlparser import decode_bytes
 

@@ -5256,6 +5256,53 @@ class TestMp3:
             mut[int(rng.randint(len(blob)))] = int(rng.randint(256))
             parse_mp3(bytes(mut))
 
+    def test_header_only_dispatch(self):
+        """An MP3 is recognised as audio but never yields PCM: it keeps
+        parse_mp3's header-only path."""
+        from fuzi_spark.ops.multimodal import (
+            audio_format,
+            build_mp3,
+            parse_audio,
+            parse_mp3,
+        )
+
+        unmarked = build_mp3(title="x", bitrate_kbps=128, n_frames=5)
+        assert audio_format(unmarked) == "mp3"
+        assert parse_audio(unmarked) is None
+        assert parse_mp3(unmarked)["n_frames"] == 5
+
+    def test_mpeg2_lsf_frame_walk(self):
+        """MPEG-2 LSF frames: half-rate table, 72·bitrate/rate frame
+        length, 576 samples per frame."""
+        from fuzi_spark.ops.multimodal import parse_mp3
+
+        # sync + MPEG-2 + Layer III, no CRC; bitrate index 10 (96 kbps),
+        # rate index 0 (22050 Hz)
+        hdr = bytes([0xFF, 0xF3, 10 << 4, 0x00])
+        frame = hdr + b"\x00" * (72 * 96000 // 22050 - 4)
+        m = parse_mp3(frame * 10)
+        assert m["sample_rate"] == 22050 and m["bitrate_kbps"] == 96
+        assert m["n_frames"] == 10
+        assert m["duration_ms"] == 10 * 576 * 1000 // 22050
+
+    def test_profile_marker_does_not_decode(self):
+        """An ID3 PRIV frame naming a decoder profile does not make
+        header-only filler frames decode to PCM."""
+        from fuzi_spark.ops.multimodal import (
+            build_mp3,
+            decode_wav_features,
+            parse_audio,
+            parse_mp3,
+        )
+
+        body = b"fuzi-spark/mp3-profile\x00fuzi-selfconsistent-v1"
+        frame = b"PRIV" + len(body).to_bytes(4, "big") + b"\x00\x00" + body
+        tag = b"ID3" + bytes([3, 0, 0, 0, 0, 0, len(frame)]) + frame
+        blob = tag + build_mp3(None, None, 128, 44100, 3)
+        assert parse_mp3(blob)["n_frames"] == 3
+        assert parse_audio(blob) is None
+        assert decode_wav_features(blob) is None
+
     def test_spark_surface(self, spark):
         from pyspark.sql import Row
 
@@ -12017,535 +12064,6 @@ class TestJpeg12Bit:
             j = rnd.randrange(len(mut))
             mut[j] ^= 1 << rnd.randrange(8)
             decode_jpeg(bytes(mut))  # must not raise
-
-
-class TestMp3Codec:
-    """ops/mp3.py: full MPEG-1 Layer III machinery with the
-    self-consistent profile (see the module's honesty contract).
-    Round-trip differentials against the module's own encoder pin
-    every decoder path: huffman regions + linbits + count1, bit
-    reservoir, scfsi, requantization (scalefactors, preflag,
-    scalefac_scale, subblock_gain), block switching (short / mixed +
-    start/stop windows), MS + intensity stereo, alias reduction,
-    IMDCT, polyphase synthesis. The two packaging tests (reservoir,
-    scfsi) assert BIT-IDENTICAL PCM — packaging must never change
-    audio. CODEC_DELAY = 511 (filterbank) + 576 (MDCT granule)."""
-
-    DELAY = 1087
-
-    @staticmethod
-    def _tone(rate, secs=0.4, f1=440.0, f2=3000.0):
-        import numpy as np
-
-        t = np.arange(int(rate * secs))
-        return (0.5 * np.sin(2 * np.pi * f1 * t / rate)
-                + 0.2 * np.sin(2 * np.pi * f2 * t / rate))
-
-    @classmethod
-    def _rt(cls, sig, rate=44100, **kw):
-        import numpy as np
-
-        from fuzi_spark.ops.mp3 import decode_mp3, encode_mp3
-
-        pcm = (np.clip(sig, -1, 1) * 32767).astype(np.int16)
-        enc = encode_mp3(pcm, rate=rate, **kw)
-        dec = decode_mp3(enc)
-        assert dec is not None
-        r, ch, bits, n, p = dec
-        assert (r, bits) == (rate, 16)
-        out = np.frombuffer(p, "<i2").astype(np.float64) / 32768.0
-        if ch == 2:
-            out = out.reshape(-1, 2)
-        return enc, out
-
-    @classmethod
-    def _snr(cls, sig, out):
-        import numpy as np
-
-        d = cls.DELAY
-        m = min(len(sig), len(out) - d) - 500
-        ref = np.asarray(sig)[500:m].ravel()
-        got = np.asarray(out)[500 + d:m + d].ravel()
-        e = ref - got
-        den = float(np.dot(e, e))
-        return 999.0 if den == 0 else 10 * np.log10(
-            float(np.dot(ref, ref)) / den)
-
-    def test_filterbank_near_perfect_reconstruction(self):
-        import numpy as np
-
-        from fuzi_spark.ops.mp3 import pqmf_analyze, pqmf_synthesize
-
-        rng = np.random.RandomState(1)
-        x = rng.randn(8192)
-        y = pqmf_synthesize(pqmf_analyze(x))
-        ref, got = x[1000:7000], y[1511:7511]
-        e = ref - got
-        snr = 10 * np.log10(np.dot(ref, ref) / np.dot(e, e))
-        assert snr > 55.0, snr
-
-    def test_mdct_chain_identity_all_block_types(self):
-        import numpy as np
-
-        from fuzi_spark.ops.mp3 import (
-            alias_forward,
-            alias_reduce,
-            imdct_granule,
-            mdct_granule,
-        )
-
-        rng = np.random.RandomState(0)
-        slots = rng.randn(18 * 10, 32)
-        bts = [0, 1, 2, 3, 0, 1, 2, 2, 3, 0]
-        ov = np.zeros((32, 18))
-        outs = []
-        for g in range(10):
-            cur = slots[g * 18:(g + 1) * 18]
-            prv = slots[(g - 1) * 18:g * 18] if g else np.zeros((18, 32))
-            bt = bts[g]
-            xr = mdct_granule(cur, prv, bt, False)
-            nb = 0 if bt == 2 else 31
-            xr = alias_reduce(alias_forward(xr, nb), nb)
-            outs.append(imdct_granule(xr, bt, False, ov))
-        rec = np.vstack(outs)
-        assert np.abs(rec[18:] - slots[:18 * 9]).max() < 1e-9
-
-    def test_huffman_profile_valid_prefix_codes(self):
-        from fuzi_spark.ops.mp3 import TABLE_GEOM, get_profile
-
-        prof = get_profile()
-        assert not prof.spec_exact  # honesty flag, loudly false
-        for tid, tab in prof.big.items():
-            nx, ny, _lb = TABLE_GEOM[tid]
-            assert set(tab) == {(x, y) for x in range(nx)
-                                for y in range(ny)}
-            if tid == 0:
-                continue
-            # complete prefix code: Kraft sum == 1, codes distinct
-            assert sum(2.0 ** -ln for _c, ln in tab.values()) == 1.0
-            assert len({(c, ln) for c, ln in tab.values()}) == len(tab)
-            assert max(ln for _c, ln in tab.values()) <= 24
-        for tab in prof.quad:
-            assert sum(2.0 ** -ln for _c, ln in tab.values()) == 1.0
-        # count1 table B is the fixed 4-bit one's-complement table
-        assert prof.quad[1][(0, 0, 0, 0)] == (15, 4)
-        assert prof.quad[1][(1, 1, 1, 1)] == (0, 4)
-
-    def test_sfb_tables_shape(self):
-        from fuzi_spark.ops.mp3 import SFB_LONG, SFB_SHORT
-
-        for rate, t in SFB_LONG.items():
-            assert len(t) == 23 and t[0] == 0 and t[-1] == 576
-            assert all(a < b for a, b in zip(t, t[1:])), rate
-        for rate, t in SFB_SHORT.items():
-            assert len(t) == 14 and t[0] == 0 and t[-1] == 192
-            assert all(a < b for a, b in zip(t, t[1:])), rate
-
-    def test_roundtrip_tone_snr(self):
-        sig = self._tone(44100)
-        _enc, out = self._rt(sig, bitrate=192)
-        assert self._snr(sig, out) > 55.0
-
-    def test_silence_decodes_to_exact_zeros(self):
-        import numpy as np
-
-        _enc, out = self._rt(np.zeros(1152 * 6), bitrate=128)
-        assert np.abs(out).max() == 0.0
-
-    def test_all_rates_and_plain_stereo(self):
-        import numpy as np
-
-        for rate in (48000, 32000):
-            sig = self._tone(rate, secs=0.3)
-            _e, out = self._rt(sig, rate=rate, bitrate=160)
-            assert self._snr(sig, out) > 50.0, rate
-        sig = self._tone(44100, secs=0.3)
-        st = np.stack([sig, 0.8 * np.roll(sig, 7)], axis=1)
-        _e, out = self._rt(st, bitrate=256, stereo_mode="stereo")
-        assert out.ndim == 2 and out.shape[1] == 2
-        assert self._snr(st, out) > 50.0
-
-    def test_ms_stereo(self):
-        import numpy as np
-
-        sig = self._tone(44100, secs=0.3)
-        st = np.stack([sig, 0.8 * np.roll(sig, 7)], axis=1)
-        enc, out = self._rt(st, bitrate=256, stereo_mode="ms")
-        assert self._snr(st, out) > 50.0
-        # header mode = joint stereo with MS mode-extension bit
-        from fuzi_spark.ops.mp3 import _scan_id3
-
-        start, _ = _scan_id3(enc)
-        h3 = enc[start + 3]
-        assert (h3 >> 6) & 3 == 1 and (h3 >> 4) & 3 == 2
-
-    def test_reservoir_packaging_is_pcm_identical(self):
-        """Same quantized spectra, different physical packing: the
-        bit reservoir (main_data_begin back-pointers) must not change
-        one sample of decoded PCM."""
-        from fuzi_spark.ops.mp3 import (
-            _Bits,
-            _parse_side_info,
-            _scan_id3,
-            decode_mp3,
-            encode_mp3,
-        )
-        import numpy as np
-
-        sig = self._tone(44100, secs=0.3)
-        pcm = (sig * 32767).astype(np.int16)
-        e0 = encode_mp3(pcm, bitrate=320, reservoir=False)
-        e1 = encode_mp3(pcm, bitrate=320, reservoir=True)
-        assert decode_mp3(e0)[4] == decode_mp3(e1)[4]
-        # and the reservoir stream really uses back-pointers
-        start, _ = _scan_id3(e1)
-        flen = (144 * 320 * 1000) // 44100
-        mdbs = []
-        pos = start
-        while pos + 4 <= len(e1):
-            if e1[pos] == 0xFF and (e1[pos + 1] & 0xE0) == 0xE0:
-                si = _parse_side_info(_Bits(e1, (pos + 4) * 8), 1)
-                mdbs.append(si["main_data_begin"])
-                pos += flen
-            else:
-                pos += 1
-        assert mdbs[0] == 0 and max(mdbs) > 0
-        assert all(m <= 511 for m in mdbs)
-
-    def test_scfsi_packaging_is_pcm_identical(self):
-        import numpy as np
-
-        from fuzi_spark.ops.mp3 import (
-            _Bits,
-            _parse_side_info,
-            _scan_id3,
-            decode_mp3,
-            encode_mp3,
-        )
-
-        sig = self._tone(44100, secs=0.3)
-        pcm = (sig * 32767).astype(np.int16)
-        sfp = [min(3, s % 4) for s in range(21)]
-        e0 = encode_mp3(pcm, bitrate=256, sf_pattern=sfp)
-        e1 = encode_mp3(pcm, bitrate=256, sf_pattern=sfp,
-                        use_scfsi=True)
-        assert decode_mp3(e0)[4] == decode_mp3(e1)[4]
-        start, _ = _scan_id3(e1)
-        si = _parse_side_info(_Bits(e1, (start + 4) * 8), 1)
-        assert any(si["scfsi"][0]), "scfsi bands must be in use"
-        # and the scfsi stream spends fewer scalefactor bits
-        si0 = _parse_side_info(
-            _Bits(e0, (_scan_id3(e0)[0] + 4) * 8), 1)
-        assert (si["granules"][1][0]["part2_3_length"]
-                < si0["granules"][1][0]["part2_3_length"])
-
-    def test_short_blocks_with_subblock_gain(self):
-        from fuzi_spark.ops.mp3 import _Bits, _parse_side_info, _scan_id3
-
-        sig = self._tone(44100, secs=0.3)
-        enc, out = self._rt(sig, bitrate=256, short_granules=(2, 3),
-                            subblock_gains=(0, 1, 2))
-        assert self._snr(sig, out) > 55.0
-        # granule 2 lives in frame 1 gr 0: block_type 2, sbg as set
-        start, _ = _scan_id3(enc)
-        flen = (144 * 256 * 1000) // 44100
-        si = _parse_side_info(_Bits(enc, (start + flen + 4) * 8), 1)
-        g = si["granules"][0][0]
-        assert g["block_type"] == 2 and g["subblock_gain"] == [0, 1, 2]
-        # start window precedes: frame 0 gr 1 is type 1
-        si0 = _parse_side_info(_Bits(enc, (start + 4) * 8), 1)
-        assert si0["granules"][1][0]["block_type"] == 1
-
-    def test_mixed_blocks(self):
-        sig = self._tone(44100, secs=0.3)
-        _enc, out = self._rt(sig, bitrate=256, short_granules=(2, 3),
-                             mixed=True)
-        assert self._snr(sig, out) > 55.0
-
-    def test_scalefactors_preflag_scalefac_scale(self):
-        sig = self._tone(44100, secs=0.3)
-        sfp = [min(3, s % 4) for s in range(21)]
-        _e, out = self._rt(sig, bitrate=256, sf_pattern=sfp,
-                           preflag=1, scalefac_scale=1)
-        assert self._snr(sig, out) > 55.0
-
-    def test_intensity_stereo_panning_law(self):
-        """is_pos = 3 -> k = tan(pi/4) = 1 -> the carrier splits
-        50/50; the band below the intensity boundary keeps true
-        stereo. Verified in the frequency domain."""
-        import numpy as np
-
-        rate = 44100
-        t = np.arange(rate // 2)
-        hi = 0.5 * np.sin(2 * np.pi * 6000 * t / rate)
-        lo = 0.3 * np.sin(2 * np.pi * 300 * t / rate)
-        st = np.stack([lo + hi, 0.9 * lo + 0.4 * hi], axis=1) / 1.2
-        enc, out = self._rt(st, bitrate=256, stereo_mode="intensity",
-                            intensity_start_sfb=12)
-        d = self.DELAY
-        m = min(len(st), len(out) - d) - 1000
-
-        def band(x, f0, f1):
-            X = np.abs(np.fft.rfft(x))
-            fr = np.fft.rfftfreq(len(x), 1 / rate)
-            return float(np.sqrt(np.mean(X[(fr > f0) & (fr < f1)] ** 2)))
-
-        eL = band(out[d + 2000:d + m, 0], 5500, 6500)
-        eR = band(out[d + 2000:d + m, 1], 5500, 6500)
-        assert abs(eL / eR - 1.0) < 0.02          # equal split
-        lL = band(out[d + 2000:d + m, 0], 250, 350)
-        lR = band(out[d + 2000:d + m, 1], 250, 350)
-        assert abs(lL / lR - 1.0 / 0.9) < 0.05    # true stereo below
-
-    def test_linbits_escape_values_exercised(self):
-        """A loud low-frequency ramp forces quantized values > 15 so
-        the escape tables (ids >= 16, linbits extension) carry them;
-        the stream must still round-trip."""
-        import numpy as np
-
-        from fuzi_spark.ops.mp3 import (
-            _Bits,
-            _parse_side_info,
-            _scan_id3,
-        )
-
-        rate = 44100
-        t = np.arange(rate // 4)
-        sig = 0.95 * np.sin(2 * np.pi * 80 * t / rate)
-        enc, out = self._rt(sig, bitrate=320)
-        assert self._snr(sig, out) > 50.0
-        start, _ = _scan_id3(enc)
-        si = _parse_side_info(_Bits(enc, (start + 4) * 8), 1)
-        tids = [tid for gr in si["granules"] for g in gr
-                for tid in g["table_select"]]
-        assert any(tid >= 16 for tid in tids), tids
-
-    def test_honesty_gate_and_dispatch(self):
-        """Unmarked (real-world-shaped) MP3 streams must NOT decode —
-        they keep parse_mp3's header-only path; marked streams flow
-        through parse_audio into the downstream audio operators."""
-        import numpy as np
-
-        from fuzi_spark.ops.mp3 import decode_mp3, encode_mp3
-        from fuzi_spark.ops.multimodal import (
-            audio_format,
-            build_mp3,
-            parse_audio,
-            parse_mp3,
-        )
-
-        unmarked = build_mp3(title="x", bitrate_kbps=128, n_frames=5)
-        assert audio_format(unmarked) == "mp3"
-        assert decode_mp3(unmarked) is None
-        assert parse_audio(unmarked) is None
-        assert parse_mp3(unmarked)["n_frames"] == 5  # header path
-
-        sig = self._tone(44100, secs=0.2)
-        enc = encode_mp3((sig * 32767).astype(np.int16), bitrate=192)
-        assert audio_format(enc) == "mp3"
-        got = parse_audio(enc)
-        assert got is not None and got[0] == 44100 and got[2] == 16
-        # tampered marker name -> refused
-        bad = enc.replace(b"selfconsistent", b"spoofed-profile")
-        assert decode_mp3(bad) is None
-
-    def test_downstream_audio_operators_run_on_mp3_pcm(self):
-        import numpy as np
-
-        from fuzi_spark.ops.audiofp import audio_landmarks
-        from fuzi_spark.ops.mp3 import encode_mp3
-        from fuzi_spark.ops.multimodal import (
-            decode_wav_features,
-            decode_wav_spectrogram,
-        )
-
-        sig = self._tone(44100, secs=0.3)
-        enc = encode_mp3((sig * 32767).astype(np.int16), bitrate=192)
-        f = decode_wav_features(enc)
-        assert f is not None and f[0] == 44100
-        s = decode_wav_spectrogram(enc)
-        assert s is not None
-        lm = audio_landmarks(enc)
-        assert lm is not None and len(lm[2]) > 0
-
-    def test_fingerprint_stable_across_reencodes(self):
-        """RECALL-style floor: the landmark fingerprint of the mp3
-        re-encode must overlap the WAV original's (Jaccard) — steady
-        tones, two bitrates."""
-        import struct
-
-        import numpy as np
-
-        from fuzi_spark.ops.audiofp import audio_landmarks
-        from fuzi_spark.ops.mp3 import encode_mp3
-
-        rate = 44100
-        t = np.arange(rate // 2)
-        sig = (0.4 * np.sin(2 * np.pi * 440 * t / rate)
-               + 0.3 * np.sin(2 * np.pi * 1320 * t / rate))
-        pcm = (sig * 32767).astype(np.int16)
-        data = pcm.astype("<i2").tobytes()
-        wav = (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-               + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, rate,
-                                       rate * 2, 2, 16)
-               + b"data" + struct.pack("<I", len(data)) + data)
-        ref = set(audio_landmarks(wav)[2])
-        assert ref
-        # containment is the dedup-relevant direction: every steady-
-        # state landmark of the original must survive the re-encode
-        # (the mp3 adds onset/tail transient windows of its own, so
-        # plain Jaccard under-reads)
-        got_sets = []
-        for br in (128, 256):
-            enc = encode_mp3(pcm, bitrate=br)
-            got = set(audio_landmarks(enc)[2])
-            assert len(ref & got) / len(ref) == 1.0, br
-            got_sets.append(got)
-        # and the two re-encodes share the full original core
-        assert ref <= (got_sets[0] & got_sets[1])
-
-    def test_mpeg2_lsf_roundtrip_all_rates(self):
-        """MPEG-2 LSF (22.05/24/16 kHz): half rates, ONE 576-sample
-        granule per frame, 8-bit reservoir pointer, 9-bit
-        scalefac_compress with the 4-slen partition scheme, no
-        scfsi/preflag bits. Encoder scope: long blocks, zero
-        scalefactors, LR/MS stereo (guard pinned)."""
-        import numpy as np
-
-        from fuzi_spark.ops.mp3 import _scan_id3, decode_mp3, \
-            encode_mp3
-
-        for rate in (22050, 24000, 16000):
-            sig = self._tone(rate, secs=0.35, f1=330, f2=1500)
-            enc, out = self._rt(sig, rate=rate, bitrate=96)
-            assert self._snr(sig, out) > 55.0, rate
-        # version bits 10 in the frame header
-        s, _ = _scan_id3(enc)
-        assert enc[s + 1] == 0xF3
-        # one granule per frame: n_samples = frames * 576
-        sig = np.zeros(576 * 8)
-        _e, out = self._rt(sig, rate=24000, bitrate=64)
-        assert len(out) == 576 * 8 and np.abs(out).max() == 0.0
-
-    def test_mpeg2_lsf_ms_stereo_and_reservoir(self):
-        import numpy as np
-
-        from fuzi_spark.ops.mp3 import decode_mp3, encode_mp3
-
-        rate = 22050
-        sig = self._tone(rate, secs=0.3, f1=440, f2=2000)
-        st = np.stack([sig, 0.8 * np.roll(sig, 5)], axis=1)
-        _e, out = self._rt(st, rate=rate, bitrate=144,
-                           stereo_mode="ms")
-        assert self._snr(st, out) > 50.0
-        # reservoir packaging must stay PCM-identical (8-bit cap).
-        # 160 kbps leaves headroom so neither run budget-coarsens —
-        # at tighter rates the non-reservoir run legitimately
-        # quantizes coarser (checked while building: gg 144 vs 140
-        # on the last frame at 144 kbps)
-        pcm = (sig * 32767).astype(np.int16)
-        e0 = encode_mp3(pcm, rate=rate, bitrate=160, reservoir=False)
-        e1 = encode_mp3(pcm, rate=rate, bitrate=160, reservoir=True)
-        assert decode_mp3(e0)[4] == decode_mp3(e1)[4]
-
-    def test_mpeg2_lsf_encoder_scope_guard(self):
-        import numpy as np
-        import pytest as _pytest
-
-        from fuzi_spark.ops.mp3 import encode_mp3
-
-        z = np.zeros(1000)
-        for kw in (dict(short_granules=(1,)), dict(mixed=True),
-                   dict(sf_pattern=[1] * 21), dict(preflag=1),
-                   dict(use_scfsi=True)):
-            with _pytest.raises(ValueError, match="LSF encoder scope"):
-                encode_mp3(z, rate=22050, bitrate=96, **kw)
-
-    def test_mpeg2_lsf_slen_partitions_sum_to_21(self):
-        """Structural self-check of the LSF scalefactor scheme: every
-        partition row covers exactly the 21 long sfbs, and the slen
-        decode round-trips the scalefac_compress space."""
-        from fuzi_spark.ops.mp3 import _LSF_NSFB_LONG, _lsf_slens
-
-        assert all(sum(row) == 21 for row in _LSF_NSFB_LONG)
-        for sc in range(512):
-            slens, cls, pre = _lsf_slens(sc)
-            assert 0 <= cls <= 2 and pre in (0, 1)
-            assert all(0 <= s <= 7 for s in slens), (sc, slens)
-
-    def test_big_values_past_limit_bit_raise(self):
-        """A part2_3_length shorter than the big-values region must not
-        let the huffman loop read the next granule-channel's bits: the
-        ValueError makes the frame-level handler skip the frame."""
-        import random
-
-        from fuzi_spark.ops.mp3 import _Bits, _decode_spectrum, get_profile
-
-        rnd = random.Random(0)
-        buf = bytes(rnd.randrange(256) for _ in range(4096))
-        g = {"big_values": 200, "table_select": [1, 1, 1],
-             "region0_count": 7, "region1_count": 7,
-             "window_switching": False, "count1table_select": 0}
-        bits = _Bits(buf)
-        with pytest.raises(ValueError):
-            _decode_spectrum(bits, g, 44100, 40, get_profile())
-
-    def test_parse_mp3_walks_mpeg2_frames(self):
-        import numpy as np
-
-        from fuzi_spark.ops.mp3 import encode_mp3
-        from fuzi_spark.ops.multimodal import parse_mp3
-
-        sig = (0.4 * np.sin(
-            2 * np.pi * 440 * np.arange(5760) / 22050)
-            * 32767).astype(np.int16)
-        m = parse_mp3(encode_mp3(sig, rate=22050, bitrate=96))
-        assert m["sample_rate"] == 22050 and m["n_frames"] == 10
-        assert m["duration_ms"] == 10 * 576 * 1000 // 22050
-
-    def test_mp3_recall_floor(self):
-        """RECALL_mp3_r5.json floor, pinned on a subset of the same
-        structured corpus: WAV-original landmark sets fully contained
-        in every re-encode at the lowest and highest bitrates."""
-        import sys
-
-        import numpy as np
-
-        sys.path.insert(0, "/root/repo/tools")
-        from mp3_recall import base_signal, wav_bytes
-
-        from fuzi_spark.ops.audiofp import audio_landmarks
-        from fuzi_spark.ops.mp3 import encode_mp3
-
-        for i in (0, 7, 19, 33):
-            sig = base_signal(i)
-            pcm = (sig * 32767).astype(np.int16)
-            ref = set(audio_landmarks(wav_bytes(pcm))[2])
-            assert ref, i
-            for br in (96, 320):
-                got = set(audio_landmarks(
-                    encode_mp3(pcm, bitrate=br))[2])
-                assert len(ref & got) / len(ref) == 1.0, (i, br)
-
-    def test_totality_truncation_and_bitflips(self):
-        import random
-
-        import numpy as np
-
-        from fuzi_spark.ops.mp3 import decode_mp3, encode_mp3
-
-        sig = self._tone(44100, secs=0.2)
-        enc = encode_mp3((sig * 32767).astype(np.int16), bitrate=192)
-        for cut in range(0, len(enc), max(1, len(enc) // 29)):
-            decode_mp3(enc[:cut])  # must not raise
-        rnd = random.Random(5)
-        for _ in range(60):
-            mut = bytearray(enc)
-            i = rnd.randrange(len(mut))
-            mut[i] ^= 1 << rnd.randrange(8)
-            decode_mp3(bytes(mut))  # must not raise
-        assert decode_mp3(b"") is None
-        assert decode_mp3(None) is None
 
 
 def test_phash_trimmed_index_recovers_symmetric_crop(spark):

@@ -16,6 +16,7 @@ import os
 import pytest
 
 from fuzi_spark.codec import encode_spans, reassemble
+from fuzi_spark.corpus import REFERENCE_RESOURCES
 
 GOLDEN_PATH = os.path.join(os.path.dirname(__file__), "goldens", "extraction_golden.json")
 
@@ -58,7 +59,7 @@ class TestCodec:
         assert reassemble(encode_spans(m)) == m
 
     def test_roundtrip_fixtures(self):
-        path = "/root/reference/Tests/Resources/web.html"
+        path = os.path.join(REFERENCE_RESOURCES, "web.html")
         if not os.path.exists(path):
             pytest.skip("reference fixtures not available")
         m = open(path, encoding="utf-8", errors="replace").read()

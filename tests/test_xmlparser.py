@@ -223,7 +223,9 @@ class TestDTDNodes:
     def test_xml_spec_fixture_dtd(self):
         import os
 
-        path = "/root/reference/Tests/Resources/xml.xml"
+        from fuzi_spark.corpus import REFERENCE_RESOURCES
+
+        path = os.path.join(REFERENCE_RESOURCES, "xml.xml")
         if not os.path.exists(path):
             return
         from fuzi_spark.xmlparser import parse_xml

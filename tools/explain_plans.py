@@ -8,7 +8,8 @@ short checklist of the plan properties that matter at 10^12-doc scale:
 - pushed filters reach the parquet scan
 - broadcast joins where one side is metadata-sized
 - exchanges (shuffles): how many, keyed on what
-- whole-stage codegen coverage vs Python (ArrowEvalPython/MapInPandas)
+- whole-stage codegen coverage vs Python (ArrowEvalPython/MapInArrow/
+  MapInPandas)
 """
 
 from __future__ import annotations
@@ -60,16 +61,17 @@ CASES = [
      "node + a map-side-combinable min-agg; labels from a checkpoint "
      "scan, never a re-derivation of the whole history."),
     ("multimodal_decode",
-     "Media metadata decode. Wants: refs from the extraction output, one "
-     "mapInPandas for synth + one for decode, repartition by media_ref "
-     "so giant binaries spread."),
+     "Media metadata decode. Wants: refs from the extraction output "
+     "(its MapInPandas), one MapInArrow for synth + one for decode, "
+     "repartition by media_ref so giant binaries spread."),
     ("repetition",
      "Token entropy + dup-n-gram fractions. Wants: ZERO exchanges — the "
      "entropy is one aggregate over the sorted token array inside a "
      "codegen'd Project, never an explode→groupBy of 10^12 docs' tokens."),
     ("extract_pdf_cmap",
      "Subset-font PDF parse. Wants: the same shape as extract_pdf — one "
-     "scan, Python only in the two pandas UDF stages (builder + parser), "
+     "scan, Python only in the two Arrow stages (ArrowEvalPython "
+     "builder + MapInArrow parser), "
      "no extra exchanges beyond the dev repartition."),
     ("dedup_keep",
      "Keeper election per dedup group. Wants: partial_min(struct) BEFORE "
@@ -225,7 +227,7 @@ CASES = [
      "metadata-width), one vectorized decision pass; the URL table "
      "never shuffles more than the single join."),
     ("parse_warc",
-     "WARC container explode. Wants: ONE MapInPandas (the recovering "
+     "WARC container explode. Wants: ONE MapInArrow (the recovering "
      "record scan), blob construction fused into the scan projection, "
      "no exchange — record rows stream out of the same task that read "
      "the archive."),
@@ -264,7 +266,7 @@ CASES = [
      "joins — so it composes with any downstream agg for free and "
      "scales embarrassingly at 10^12 docs."),
     ("extract_tables",
-     "Table-row explode. Wants: ONE MapInPandas on the scan (the "
+     "Table-row explode. Wants: ONE MapInArrow on the scan (the "
      "explode happens inside the Arrow batch), no exchange — output "
      "rows inherit the input partitioning by doc."),
     ("anchor_text",
@@ -275,7 +277,7 @@ CASES = [
      "then pre-agg + stacked url-partitioned windows with no further "
      "shuffles."),
     ("json_ld",
-     "JSON-LD explode. Wants: ONE MapInPandas on the scan, no "
+     "JSON-LD explode. Wants: ONE MapInArrow on the scan, no "
      "exchange — structured-data rows inherit the doc partitioning."),
     ("readability",
      "Flesch scoring. Wants: pure WholeStageCodegen — three "
@@ -286,10 +288,10 @@ CASES = [
      "filter+explode of (hreflang, href) STRING structs only in a "
      "codegen'd Generate — narrow map, zero exchanges."),
     ("image_captions",
-     "Image-caption pairing. Wants: ONE MapInPandas on the scan (the "
+     "Image-caption pairing. Wants: ONE MapInArrow on the scan (the "
      "figure/alt/title walk is the parser itself), no exchange."),
     ("doc_outline",
-     "Heading outline. Wants: ONE MapInPandas on the scan, no "
+     "Heading outline. Wants: ONE MapInArrow on the scan, no "
      "exchange — section rows inherit the doc partitioning."),
     ("fix_mojibake",
      "Mojibake repair. Wants: one ArrowEvalPython pass (the codec "
@@ -301,7 +303,7 @@ CASES = [
     ("image_pixels",
      "Real PNG pixel decode. Wants: encode UDF + the media_ref-hash "
      "repartition (giant-binary spread, the one justified exchange) + "
-     "ONE MapInPandas decode; feature math codegen'd after."),
+     "ONE MapInArrow decode; feature math codegen'd after."),
     ("span_language",
      "Per-span lang ID. Wants: codegen'd Generate exploding (kind, "
      "text) strings only, then ONE ArrowEvalPython lang_id pass — "
@@ -313,11 +315,11 @@ CASES = [
      "exchange."),
     ("audio_features",
      "Real WAV PCM decode. Wants: build UDF + media_ref-hash "
-     "repartition + ONE MapInPandas decode, RMS math inside the "
+     "repartition + ONE MapInArrow decode, RMS math inside the "
      "batch; feature rollup codegen'd after."),
     ("video_frames",
      "Real AVI/MJPEG frame explode. Wants: media_ref-hash "
-     "repartition + ONE MapInPandas (the RIFF walk + per-frame JPEG "
+     "repartition + ONE MapInArrow (the RIFF walk + per-frame JPEG "
      "header parse) — rows inherit the blob partitioning."),
     ("crawl_frontier",
      "Frontier DAG. Wants: canonicalize codegen'd in the scan, ONE "
@@ -342,8 +344,8 @@ CASES = [
      "aggregation, argmax via max-struct — zero Python, zero "
      "SortMergeJoin on the corpus."),
     ("image_dedup",
-     "Perceptual-hash image dedup. Wants: one ArrowEvalPython/"
-     "MapInPandas pass computing the 64-bit hash, then ONE map-side-"
+     "Perceptual-hash image dedup. Wants: one MapInArrow pass "
+     "computing the 64-bit hash, then ONE map-side-"
      "combinable exchange on the 8-byte phash (partial_count + "
      "partial_min before the shuffle) and a hash-key join back — no "
      "second pass over the image bytes."),
@@ -353,7 +355,7 @@ CASES = [
      "zero corpus exchanges (training's word-count agg is the only "
      "shuffle, map-side combined)."),
     ("audio_spectrogram",
-     "STFT audio features. Wants: one MapInPandas pass (all of a "
+     "STFT audio features. Wants: one MapInArrow pass (all of a "
      "clip's windows batch into a single vectorized rfft) after the "
      "media_ref skew-spread repartition — the only exchange; no "
      "second pass over the PCM bytes."),
@@ -363,7 +365,7 @@ CASES = [
      "the corpus is one scan + one MapInPandas matmul; no join, no "
      "exchange, no vector materialization."),
     ("video_dedup",
-     "Video pHash dedup. Wants: one MapInPandas pass decoding only "
+     "Video pHash dedup. Wants: one MapInArrow pass decoding only "
      "the SAMPLED frames (per-video work bounded by n_frames), then "
      "the same map-side-combinable 8-byte-hash exchange as "
      "image_dedup; nothing re-reads the video bytes."),
@@ -383,7 +385,7 @@ CASES = [
      "projection; the host budget is a post-window filter, no second "
      "shuffle."),
     ("image_exif",
-     "EXIF metadata decode. Wants: header-only MapInPandas (no pixel "
+     "EXIF metadata decode. Wants: header-only MapInArrow (no pixel "
      "decode anywhere in the plan) after the skew-spread repartition; "
      "scan-speed on giant images because only segment headers are "
      "walked."),
@@ -394,11 +396,11 @@ CASES = [
      "band self-join — document text never shuffles; earlier rounds "
      "never re-derive."),
     ("audio_mp3",
-     "MP3/ID3 metadata decode. Wants: header-only MapInPandas (the "
+     "MP3/ID3 metadata decode. Wants: header-only MapInArrow (the "
      "frame walk skips payloads by computed length, never reads "
      "them); one pass, no shuffle beyond the skew spread."),
     ("subtitles",
-     "SRT/WebVTT cue explode. Wants: ONE MapInPandas explode per "
+     "SRT/WebVTT cue explode. Wants: ONE MapInArrow explode per "
      "blob (the parse_warc shape) — cue rows are the only fan-out, "
      "zero shuffles."),
     ("redact_cc",
@@ -406,12 +408,12 @@ CASES = [
      "— candidate regex, per-span Luhn aggregate, and the literal-"
      "replace fold all in one codegen'd Project on the scan."),
     ("parse_archive",
-     "ZIP/TAR member explode. Wants: one MapInPandas explode after "
+     "ZIP/TAR member explode. Wants: one MapInArrow explode after "
      "the giant-archive id repartition; member rows are the fan-out, "
      "no shuffle after."),
     ("video_scenes",
      "Scene-change keyframes. Wants: one sequential-decode "
-     "MapInPandas pass (bounded frame memo), scene rows the only "
+     "MapInArrow pass (bounded frame memo), scene rows the only "
      "fan-out, no shuffle."),
     ("hidden_text",
      "Cloaked-text stats. Wants: ONE ArrowEvalPython (parse + walk in "
@@ -440,7 +442,7 @@ CASES = [
     ("media_quality",
      "Image gate. Wants: the filter itself pure codegen over the "
      "decoded (ref, dims) rows; the only Python is the upstream header "
-     "decode MapInPandas."),
+     "decode MapInArrow."),
     ("interleave_episodes",
      "Episode splitting. Wants: ZERO Python and ZERO exchanges — the "
      "greedy fold, the per-episode slices, and the render are staged "
@@ -639,7 +641,7 @@ CASES = [
      "over <= 2k-row inputs."),
     ("microdata",
      "Microdata explode. Wants: ONE scan, markup built in a codegen'd "
-     "Project, ONE MapInPandas (parse+walk per Arrow batch), no "
+     "Project, ONE MapInArrow (parse+walk per Arrow batch), no "
      "shuffle at all — extraction is embarrassingly parallel."),
     ("token_budget",
      "Water-filling mix plan. Wants: per-source agg with map-side "
@@ -684,7 +686,7 @@ CASES = [
      "explode feeding the sketch."),
     ("cdc_dedup",
      "Content-defined chunking. Wants: blob construction in a "
-     "codegen'd Project, ONE MapInPandas for the gear-hash walk "
+     "codegen'd Project, ONE MapInArrow for the gear-hash walk "
      "(numpy, no per-byte Python), then doc/group-keyed aggs with "
      "map-side partials."),
     ("span_diff",
@@ -803,22 +805,16 @@ CASES = [
      "row_number), the bucket a codegen'd struct-comparison chain, "
      "one map-side-combinable df agg feeding it."),
     ("image_pixels_deep",
-     "Deep-codec image funnel. Wants: ONE MapInPandas decode stage "
+     "Deep-codec image funnel. Wants: ONE MapInArrow decode stage "
      "after the media_ref-hash spread repartition — progressive "
      "JPEG / interlaced deep-PNG decode costs live inside the Arrow "
      "batch, no extra exchanges."),
     ("audio_flac",
-     "FLAC audio funnel. Wants: the same ONE-MapInPandas shape as "
+     "FLAC audio funnel. Wants: the same ONE-MapInArrow shape as "
      "the WAV path — container dispatch happens per batch row, no "
      "format-specific plan forks."),
-    ("audio_mp3_pcm",
-     "MP3 full-decode funnel (r5). Wants: ONE MapInPandas stage "
-     "after the parallelism repartition — huffman/IMDCT/synthesis "
-     "all inside the Arrow batch; the 300-doc cap keeps this a "
-     "codec-correctness probe, not a scan (see the query's "
-     "docstring)."),
     ("video_keyframes",
-     "Container keyframe walk (r5). Wants: ONE MapInPandas after "
+     "Container keyframe walk (r5). Wants: ONE MapInArrow after "
      "the media_ref-hash spread; the keyframe array explodes "
      "AFTERWARD (narrow generate, no shuffle) — byte-range "
      "planning must never need a second pass over content."),
